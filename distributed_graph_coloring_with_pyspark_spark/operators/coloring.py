@@ -12,9 +12,13 @@ normalized DataFrames:
                                                    reference's doubled
                                                    adjacency (graph.py:40-41)
 
-Per-round algorithm (one Spark action per round, vs the reference's 4-8
-jobs/round — collectAsMap + broadcast + 2 counts + 4 shuffles,
-coloring.py:80-131):
+Per-round algorithm (one Spark action per round, vs the reference's
+collectAsMap + broadcast + 2 counts + 4 shuffles, coloring.py:80-131).
+One action is not one Spark job: under AQE each query stage runs as its
+own job, and ``localCheckpoint(eager=False)`` runs the winner-side
+shuffle stages when it is called, so a round is about 11 jobs (a traced
+5k-vertex, Δ=8 ``minimal_coloring`` on local[4]: 77 jobs for the 7
+rounds it runs):
 
 1. candidates: for each uncolored vertex, ``used`` = set of neighbor
    colors (edges join colored vertices, groupBy src + collect_set);
@@ -34,10 +38,9 @@ coloring.py:80-131):
 3. patch: left join winners onto vertices, ``coalesce(old, new)``, then
    ``localCheckpoint(eager=False)`` to truncate lineage (the reference
    never truncates — its ``-Xss4m`` at coloring.py:198 exists to survive
-   deep recursive lineage/pickling).  The lazy checkpoint and the
+   deep recursive lineage/pickling).  The checkpointed rows and the
    persisted candidate frame both materialize inside the next round's
-   stats collect, so each round triggers exactly ONE Spark action (the
-   reference runs 4-8 jobs/round).
+   stats collect, so each round issues exactly ONE Spark action.
 
 Progress: the globally max-priority uncolored vertex with a non-NULL
 candidate always wins its round, so each round colors ≥1 vertex and the
@@ -131,6 +134,9 @@ class AttemptResult:
     vertices: DataFrame  # final state; on failure, partial (callers keep last success)
     rounds: int
     colors_used: int  # max(color)+1 on success, else -1
+    # max(candidate) over the uncolored vertices, one entry per round
+    # (None once nothing is left uncolored)
+    max_candidates: list[int | None]
 
 
 @dataclass
@@ -138,7 +144,10 @@ class ColoringResult:
     minimal_colors: int
     vertices: DataFrame  # the LAST SUCCESSFUL coloring (fixes the reference's
     # save-after-failure bug, coloring.py:215-241 / colors.json fossil)
-    attempts: list[tuple[int, bool, int]] = field(default_factory=list)  # (k, ok, rounds)
+    # (k, ok, rounds) per descent attempt.  Only the first attempt runs;
+    # the last entry's failing round is derived from the first attempt's
+    # per-round candidate maxima, not executed (see minimal_coloring).
+    attempts: list[tuple[int, bool, int]] = field(default_factory=list)
 
 
 def color_graph_attempt(
@@ -157,6 +166,7 @@ def color_graph_attempt(
         raise ValueError(f"color_graph_attempt: palette size k must be >= 1, got {k}")
     state = vertices.localCheckpoint(eager=False)
     rounds = 0
+    max_candidates: list[int | None] = []
     prev_cand: DataFrame | None = None
 
     def _cleanup() -> None:
@@ -168,7 +178,7 @@ def color_graph_attempt(
         if rounds > max_rounds:  # stall guard (reference G4, coloring.py:93-96;
             # unreachable here since every round makes progress, kept as a belt)
             _cleanup()
-            return AttemptResult(False, state, rounds, -1)
+            return AttemptResult(False, state, rounds, -1, max_candidates)
 
         colored = state.filter(F.col("color").isNotNull()).select(
             F.col("id").alias("nbr_id"), F.col("color").alias("nbr_color")
@@ -207,13 +217,16 @@ def color_graph_attempt(
         cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
 
         # ONE action per round: remaining-uncolored + palette-exhausted
-        # counts.  This collect also materializes the lazy checkpoint of
-        # ``state`` from the previous round and caches ``cand`` for the
-        # winner join below — no other job runs this round.
+        # counts, and the largest candidate (minimal_coloring derives the
+        # smaller-palette attempt from it).  This collect also
+        # materializes the checkpointed ``state`` from the previous round
+        # and caches ``cand`` for the winner join below.
         stats = cand.agg(
             F.count("*").alias("uncolored"),
             F.count(F.when(F.col("candidate").isNull(), 1)).alias("exhausted"),
+            F.max("candidate").alias("max_candidate"),
         ).collect()[0]
+        max_candidates.append(stats["max_candidate"])
         # the prior round's cand is now unreferenced (state was checkpointed
         # inside the collect above) — release it
         _cleanup()
@@ -224,10 +237,10 @@ def color_graph_attempt(
             # None-checked, not `or 0` (review r5): an EMPTY graph has
             # max(color) = NULL and uses zero colors, not one
             n_used = (used_colors + 1) if used_colors is not None else 0
-            return AttemptResult(True, state, rounds, n_used)
+            return AttemptResult(True, state, rounds, n_used, max_candidates)
         if stats["exhausted"] > 0:  # G5 failure detector (coloring.py:104-108)
             _cleanup()
-            return AttemptResult(False, state, rounds, -1)
+            return AttemptResult(False, state, rounds, -1, max_candidates)
 
         c_src = cand.select(
             F.col("id").alias("u"), F.col("degree").alias("du"), F.col("candidate").alias("cu")
@@ -258,6 +271,19 @@ def color_graph_attempt(
         )
 
 
+def _failing_round(max_candidates: list[int | None], k: int) -> int:
+    """The round at which a palette-``k`` attempt fails, given a
+    successful larger-palette attempt's per-round candidate maxima: the
+    first round (1-based) that proposed a color ≥ ``k``."""
+    for r, top in enumerate(max_candidates, 1):
+        if top is not None and top >= k:
+            return r
+    raise RuntimeError(
+        f"internal error: no round proposed a color >= {k}, but the"
+        f" coloring used {k + 1} colors"
+    )
+
+
 def minimal_coloring(
     node_ids: DataFrame,
     edges: DataFrame,
@@ -272,10 +298,18 @@ def minimal_coloring(
     - we keep (and report) the last *successful* coloring — the reference
       saves the failed attempt's partial coloring (colors.json fossil);
     - after a success using m ≤ k colors the next attempt is m-1, not
-      k-1. Equivalent trajectory: an attempt with palette k that used
-      only colors < m behaves identically with palette m (the palette
-      size only matters at exhaustion), so intermediate k values cannot
-      change the outcome — they are skipped, not decided differently.
+      k-1.
+
+    Only the first attempt runs; the failing one is derived.  A palette-k′
+    attempt gives each uncolored vertex the lowest free color in
+    [0, min(k′-1, degree)], so it matches the palette-K attempt round for
+    round until the first round where some uncolored vertex's candidate
+    in the K run is ≥ k′.  In that round its k′ candidate is NULL and the
+    exhaustion check fails the attempt.  The K run used m colors, so it
+    proposed color m-1 in some round: for k′ = m-1 that round always
+    exists, and the descent always ends after exactly two attempts.  The
+    failing attempt's round count is the first round whose maximum
+    candidate (``AttemptResult.max_candidates``) is ≥ m-1.
 
     Cache lifetime (ADVICE r6): each call registers one tracked persist
     of its vertex frame (see the verts0 note below) that lives until
@@ -317,23 +351,13 @@ def minimal_coloring(
         if start_k is None:
             start_k = (stats["max_deg"] or 0) + 1  # Δ+1 always suffices (coloring.py:212)
 
-        attempts: list[tuple[int, bool, int]] = []
-        best: DataFrame | None = None
-        best_colors = -1
         k = max(start_k, 1)
         # every round is joins/aggs over |V|-row frames — size the loop's
         # shuffle width to that, not to the session's scan-oriented value
         with scoped_shuffle_partitions(edges.sparkSession, int(stats["n"])):
-            while k >= 1:
-                res = color_graph_attempt(verts0, edges, k, max_rounds=max_rounds)
-                attempts.append((k, res.success, res.rounds))
-                if not res.success:
-                    break
-                best = res.vertices
-                best_colors = res.colors_used
-                k = res.colors_used - 1
+            res = color_graph_attempt(verts0, edges, k, max_rounds=max_rounds)
 
-        if best is None:
+        if not res.success:
             if caller_k:
                 # review r5: a too-small CALLER palette is an expected
                 # outcome, not a broken input — say so
@@ -347,7 +371,11 @@ def minimal_coloring(
             raise ValueError(
                 "coloring failed at k = Δ+1; input graph is not simple/symmetric"
             )
-        return ColoringResult(best_colors, best, attempts)
+        m = res.colors_used
+        attempts = [(k, True, res.rounds)]
+        if m >= 2:
+            attempts.append((m - 1, False, _failing_round(res.max_candidates, m - 1)))
+        return ColoringResult(m, res.vertices, attempts)
     finally:
         # the returned vertices are localCheckpoint-backed (materialized
         # by the attempt's final stats collect), so the edge blocks THIS

@@ -81,7 +81,9 @@ def test_one_action_per_round(spark, monkeypatch):
     final max(color) collect on success.  The reference runs 4-8 jobs per
     round (collectAsMap + broadcast + 2 counts, coloring.py:80-131).
     Catches regressions like an eager localCheckpoint (round-2 ADVICE) or
-    a stray .count() sneaking into the loop."""
+    a stray .count() sneaking into the loop.  ``minimal_coloring`` runs
+    only its first attempt (the failing one is derived), adding just the
+    vertex stats collect."""
     node_ids, edges = generate_graph(spark, 60, 6, seed=11)
     verts = init_vertices(node_ids, edges)
     DF = type(verts)  # the concrete (classic) DataFrame class, which
@@ -99,6 +101,12 @@ def test_one_action_per_round(spark, monkeypatch):
     res = color_graph_attempt(verts, edges, k=7)
     assert res.success
     assert calls["collect"] == res.rounds + 1, calls
+    assert calls["count"] == 0, calls
+
+    calls.update(collect=0, count=0)
+    result = minimal_coloring(node_ids, edges)
+    assert len(result.attempts) == 2
+    assert calls["collect"] == result.attempts[0][2] + 2, calls
     assert calls["count"] == 0, calls
 
 

@@ -199,11 +199,10 @@ def main() -> int:
         ann_recall_report,
         build_ivf_index,
         build_ivfpq_index,
-        clear_ivf_cache,
-        clear_pq_cache,
         index_drift_report,
         rebuild_ivfpq_index,
     )
+    from distributed_graph_coloring_with_pyspark_spark import cache
     from distributed_graph_coloring_with_pyspark_spark.session import (
         get_spark,
         release_session_caches,
@@ -301,8 +300,8 @@ def main() -> int:
     # codebook retrain; now it reads the index's persisted quantizer,
     # so cold-vs-warm is the honest restart-latency pair.
     def bench_ann_ivfpq_serve_cold(spark, sf_dir):
-        clear_ivf_cache(spark)
-        clear_pq_cache(spark)
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
         spark.catalog.refreshByPath(ivfpq_path)
         return ann_ivfpq_topk_indexed(spark, sf_dir, ivfpq_path)
 
@@ -317,8 +316,8 @@ def main() -> int:
         return None  # the partitioned write already materialized
 
     def bench_ann_opq_serve_cold(spark, sf_dir):
-        clear_ivf_cache(spark)
-        clear_pq_cache(spark)
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
         spark.catalog.refreshByPath(opq_path)
         return ann_ivfpq_topk_indexed(spark, sf_dir, opq_path)
 
@@ -365,12 +364,11 @@ def main() -> int:
     # steady-state story their medians are meant to tell
     # (amortized-vs-one-off both first-class numbers).
     from distributed_graph_coloring_with_pyspark_spark.operators.text_dedup import (
-        clear_pair_cache,
         jaccard_pair_frame,
     )
 
     def bench_jaccard_pair_build(spark, sf_dir):
-        clear_pair_cache(spark)
+        cache.release(spark, "jaccard_pairs")
         return jaccard_pair_frame(spark, sf_dir)
 
     # The persisted MinHash index pair (r6) — same treatment as the IVF
@@ -400,16 +398,17 @@ def main() -> int:
     # consumers that follow read the warm cache (amortized and one-off
     # both first-class).
     from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (
-        clear_neardup_pair_cache,
         neardup_pair_frame_cached,
     )
 
+    # each tier releases only its OWN entry, so pricing one build never
+    # evicts the other tier's artifact
     def bench_gemm_pair_build(spark, sf_dir):
-        clear_neardup_pair_cache(spark, "exact")
+        cache.release(spark, "neardup_pairs", (sf_dir, "exact"))
         return neardup_pair_frame_cached(spark, sf_dir, "exact")
 
     def bench_lsh_pair_build(spark, sf_dir):
-        clear_neardup_pair_cache(spark, "lsh")
+        cache.release(spark, "neardup_pairs", (sf_dir, "lsh"))
         return neardup_pair_frame_cached(spark, sf_dir, "lsh")
 
     sim_build_lines = {
@@ -481,17 +480,15 @@ def main() -> int:
     )
     from distributed_graph_coloring_with_pyspark_spark.operators.unigram_lm import (
         PYTEST_QUERIES as UNIGRAM_QUERIES,
-        clear_unigram_cache,
         unigram_model_cached,
     )
     from distributed_graph_coloring_with_pyspark_spark.operators.tokenizer import (
         PYTEST_QUERIES as TOKENIZER_QUERIES,
         bpe_model_cached,
-        clear_bpe_cache,
     )
 
     def bench_bpe_train_build(spark, sf_dir):
-        clear_bpe_cache(spark)
+        cache.release(spark, "bpe_models")
         bpe_model_cached(spark, sf_dir)[1].write.format("noop").mode(
             "overwrite"
         ).save()
@@ -500,7 +497,7 @@ def main() -> int:
     def bench_unigram_train_build(spark, sf_dir):
         # the unigram model is a bounded driver dict — training it IS
         # the materialization, no noop write needed
-        clear_unigram_cache(spark)
+        cache.release(spark, "unigram_models")
         unigram_model_cached(spark, sf_dir)
         return None
 

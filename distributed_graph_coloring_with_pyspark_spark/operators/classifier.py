@@ -42,11 +42,10 @@ corpus reaches training accuracy 1.0 (tests/test_classifier.py).
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..litutil import double_array_sql, lit_double_array
 from ..sources.tables import load_table
 from .text_dedup import _hash32_col, _tokens
@@ -235,39 +234,30 @@ def _held_out() -> Column:
     return h >= _HOLDOUT_CUT
 
 
-# Session memo for the classifier family (VERDICT r10 #3) — the
-# _NEARDUP_PAIR_CACHE pattern: classifier_eval, classifier_holdout_eval
-# and the curation rank gate each used to build their own feature frame
-# (a full corpus pass) and run their own 15-step GD, so one bench
-# family paid for three trainings where one-per-split suffices.  Keys:
+# Session memo for the classifier family (VERDICT r10 #3): namespace
+# "classifier".  classifier_eval, classifier_holdout_eval and the
+# curation rank gate each used to build their own feature frame (a full
+# corpus pass) and run their own 15-step GD, so one bench family paid
+# for three trainings where one-per-split suffices.  Keys:
 #   ("feats", sf_dir)            → persisted feature frame (+held flag)
 #   ("weights", sf_dir, split)   → (weights, losses, n_trained)
 #   ("holdout_metrics", sf_dir)  → gate-quality scalars (see below)
-# Lifetime: clear_classifier_cache, wired into release_session_caches —
-# a cached frame strongly references its session, so explicit release
-# is the mechanism (cache.py's honesty note).  The non-frame entries
-# are bounded driver state: B+1 floats + T losses + a few longs.
-_CLS_SESSION_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+# The non-frame entries are bounded driver state: B+1 floats + T losses
+# + a few longs.
 def feature_frame_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, y, bs, xs, held) feature frame, ONE per
     (session, corpus).  The ``held`` flag is a stateless projection
     (one boolean per row), so the full-corpus consumers carry it for
     free and the holdout consumers filter on it — every classifier
     surface shares this single corpus pass."""
-    per = _CLS_SESSION_CACHE.setdefault(spark, {})
-    df = per.get(("feats", sf_dir))
-    if df is None:
-        df = (
-            _feature_frame(spark, sf_dir)
-            .withColumn("held", _held_out())
-            .persist()
-        )
-        per[("feats", sf_dir)] = df
-    return df
+    return cache.memo(
+        spark,
+        "classifier",
+        ("feats", sf_dir),
+        lambda: _feature_frame(spark, sf_dir)
+        .withColumn("held", _held_out())
+        .persist(),
+    )
 
 
 def _train_dual(
@@ -390,29 +380,22 @@ def trained_weights_cached(
     second loop."""
     if split not in ("full", "train80"):
         raise ValueError(f"unknown split {split!r}")
-    per = _CLS_SESSION_CACHE.setdefault(spark, {})
-    key = ("weights", sf_dir, split)
-    hit = per.get(key)
-    if hit is None:
-        feats = feature_frame_cached(spark, sf_dir)
-        full_hit, t80_hit = _train_dual(spark, feats)
-        per[("weights", sf_dir, "full")] = full_hit
-        per[("weights", sf_dir, "train80")] = t80_hit
-        hit = per[key]
-    return hit
+    per = cache.entries(spark, "classifier")
+
+    def build():
+        full, t80 = _train_dual(spark, feature_frame_cached(spark, sf_dir))
+        per[("weights", sf_dir, "full")] = full
+        per[("weights", sf_dir, "train80")] = t80
+        return per[("weights", sf_dir, split)]
+
+    return cache.memo(spark, "classifier", ("weights", sf_dir, split), build)
 
 
 def clear_classifier_cache(spark: SparkSession) -> int:
     """Unpersist and drop this session's classifier memo (feature
     frames, trained weights, holdout metrics); returns entries
-    released.  Wired into ``release_session_caches``."""
-    per = _CLS_SESSION_CACHE.pop(spark, None)
-    if not per:
-        return 0
-    for key, val in per.items():
-        if key[0] == "feats":
-            val.unpersist(False)
-    return len(per)
+    released."""
+    return cache.release(spark, "classifier")["classifier"]
 
 
 def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,10 +464,15 @@ def holdout_metrics(spark: SparkSession, sf_dir: str) -> dict:
     back is collected into the returned scalars — so repeated calls
     accumulate nothing; only the shared feature frame stays cached
     (released by ``clear_classifier_cache``)."""
-    per = _CLS_SESSION_CACHE.setdefault(spark, {})
-    hit = per.get(("holdout_metrics", sf_dir))
-    if hit is not None:
-        return hit
+    return cache.memo(
+        spark,
+        "classifier",
+        ("holdout_metrics", sf_dir),
+        lambda: _holdout_metrics(spark, sf_dir),
+    )
+
+
+def _holdout_metrics(spark: SparkSession, sf_dir: str) -> dict:
     feats = feature_frame_cached(spark, sf_dir)
     weights, _, n_train = trained_weights_cached(spark, sf_dir, "train80")
     if not weights:
@@ -573,7 +561,7 @@ def holdout_metrics(spark: SparkSession, sf_dir: str) -> dict:
         if g is not None:
             g.unpersist(False)
         hold.unpersist(False)
-    hit = {
+    return {
         "n_train": int(n_train),
         "n_holdout": int(n_hold),
         "tp": int(tp),
@@ -583,8 +571,6 @@ def holdout_metrics(spark: SparkSession, sf_dir: str) -> dict:
         "accuracy": (tp + tn) / n_hold if n_hold else None,
         "auc": u_sum / (n_pos * n_neg) if n_pos and n_neg else None,
     }
-    per[("holdout_metrics", sf_dir)] = hit
-    return hit
 
 
 def classifier_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -104,11 +104,11 @@ structural monotonicity checks.
 from __future__ import annotations
 
 import math
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..cache import persist_tracked
 from ..sources.tables import load_table
 from .classifier import (
@@ -289,12 +289,7 @@ def _dropped_ids(
 # memo the contamination GEMM subtree re-evaluated under each consumer
 # action (measured 3.7 s of the funnel's 9.1 s at sf0.1).  Priced by
 # the decon_build bench line (memo cleared per run — the
-# jaccard_pair_build treatment); released by release_session_caches.
-_DECON_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+# jaccard_pair_build treatment).
 def dropped_ids_cached(
     spark: SparkSession, sf_dir: str, doc_vec_map: DataFrame | None = None
 ) -> DataFrame:
@@ -305,9 +300,8 @@ def dropped_ids_cached(
     not the benched steady state."""
     if doc_vec_map is not None:
         return _dropped_ids(spark, sf_dir, doc_vec_map)
-    per_session = _DECON_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
+
+    def build():
         df = _dropped_ids(spark, sf_dir).persist()
         try:
             df.count()  # populate eagerly: every consumer reads the cache
@@ -317,16 +311,14 @@ def dropped_ids_cached(
             # clear_decon_cache (review r13)
             df.unpersist(False)
             raise
-        per_session[sf_dir] = df
-    return df
+        return df
+
+    return cache.memo(spark, "decon_drop_sets", sf_dir, build)
 
 
 def clear_decon_cache(spark: SparkSession) -> int:
     """Unpersist and drop this session's memoized drop sets."""
-    per_session = _DECON_CACHE.pop(spark, None) or {}
-    for df in per_session.values():
-        df.unpersist(False)
-    return len(per_session)
+    return cache.release(spark, "decon_drop_sets")["decon_drop_sets"]
 
 
 def _round6(x: float) -> float:

@@ -22,58 +22,35 @@ results are unchanged at test scale. No driver-side state.
 
 from __future__ import annotations
 
-import hashlib
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..sources.tables import load_table
 from .coloring import minimal_coloring, scoped_shuffle_partitions, validate_coloring
 
 _CELL_CAP = 1000  # max customers per (part, day) cell before it is dropped
 
-# session → {view name: persisted edge frame}, so the cache has an
-# explicit release path (a long-lived session iterating many sf_dirs
-# would otherwise accumulate persisted frames with no handle to them).
-# Weakly keyed on the session object itself — which guards only
-# against a recycled id() aliasing a new session onto a stopped one's
-# frames.  Lifetime honesty (review r5): the cached DataFrame values
-# strongly reference their session, so the weak key can never actually
-# expire an entry; clear_customer_graph_cache /
-# release_session_caches is the real lifetime mechanism (cache.py).
-_EDGE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def customer_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric edges(src, dst): customers sharing a (part, order-day).
 
-    The edge frame is memoized per (session, sf_dir) as a cached temp
-    view — four queries share this projection, and the registry lives
-    inside the SparkSession so there is no cross-session staleness
-    (the engine-side equivalent of a materialized view).  Release with
+    The persisted edge frame is memoized per (session, sf_dir) — four
+    queries share this projection (the engine-side equivalent of a
+    materialized view).  Release with
     ``clear_customer_graph_cache(spark)``."""
-    view = "dgc_customer_edges_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    if any(t.name == view for t in spark.catalog.listTables()):
-        return spark.table(view)
-    edges = _build_customer_graph_edges(spark, sf_dir)
-    edges.persist()
-    edges.createOrReplaceTempView(view)
-    _EDGE_CACHE.setdefault(spark, {})[view] = edges
-    return edges
+    return cache.memo(
+        spark,
+        "customer_graph",
+        sf_dir,
+        lambda: _build_customer_graph_edges(spark, sf_dir).persist(),
+    )
 
 
 def clear_customer_graph_cache(spark: SparkSession) -> int:
-    """Unpersist and drop every memoized edge view of this session;
+    """Unpersist and drop every memoized edge frame of this session;
     returns the number of entries released."""
-    released = 0
-    for view, df in _EDGE_CACHE.pop(spark, {}).items():
-        df.unpersist(False)
-        spark.catalog.dropTempView(view)
-        released += 1
-    return released
+    return cache.release(spark, "customer_graph")["customer_graph"]
 
 
 def _build_customer_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

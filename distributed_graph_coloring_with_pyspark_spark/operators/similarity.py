@@ -28,12 +28,12 @@ from __future__ import annotations
 
 import math
 import random
-import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import cache
 from ..cache import persist_tracked
 from ..litutil import lit_double_array, lit_double_matrix
 from ..sources.tables import load_table
@@ -397,50 +397,27 @@ def cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The embedding pair artifact is session-memoized per (corpus, tier),
-# exactly like text_dedup's _PAIR_CACHE (the r8 sf1 run priced WHY:
-# each un-cached _lsh consumer re-ran the ~110 s banded build, so three
-# consumers cost 320 s where one artifact + three reads costs ~120 s).
-# bench.py prices the builds as their own `gemm_pair_build` /
-# `lsh_pair_build` lines with the memo cleared every run — a consumer's
-# warm median (a cache read) is never mistaken for construction cost.
-_NEARDUP_PAIR_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+# exactly like text_dedup's jaccard pair frame (the r8 sf1 run priced
+# WHY: each un-cached _lsh consumer re-ran the ~110 s banded build, so
+# three consumers cost 320 s where one artifact + three reads costs
+# ~120 s).  bench.py prices the builds as their own `gemm_pair_build` /
+# `lsh_pair_build` lines with the tier's memo entry released every run
+# — a consumer's warm median (a cache read) is never mistaken for
+# construction cost.
 def neardup_pair_frame_cached(
     spark: SparkSession, sf_dir: str, pair_source: str = "exact"
 ) -> DataFrame:
     """Persisted unordered near-dup pair frame for this session +
-    corpus + tier (``"exact"`` blocked GEMM | ``"lsh"`` banded)."""
-    per_session = _NEARDUP_PAIR_CACHE.setdefault(spark, {})
-    key = (sf_dir, pair_source)
-    df = per_session.get(key)
-    if df is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        df = _neardup_pair_frame(emb, pair_source=pair_source).persist()
-        per_session[key] = df
-    return df
-
-
-def clear_neardup_pair_cache(
-    spark: SparkSession, pair_source: str | None = None
-) -> int:
-    """Unpersist and drop this session's embedding pair frames — all of
-    them, or only one tier's (bench.py's per-tier build lines clear
-    their OWN tier so pricing one build never evicts the other's
-    artifact)."""
-    per_session = _NEARDUP_PAIR_CACHE.get(spark)
-    if not per_session:
-        return 0
-    keys = [
-        k for k in per_session if pair_source is None or k[1] == pair_source
-    ]
-    for k in keys:
-        per_session.pop(k).unpersist(False)
-    if not per_session:
-        _NEARDUP_PAIR_CACHE.pop(spark, None)
-    return len(keys)
+    corpus + tier (``"exact"`` blocked GEMM | ``"lsh"`` banded), under
+    key ``(sf_dir, pair_source)`` of namespace ``"neardup_pairs"``."""
+    return cache.memo(
+        spark,
+        "neardup_pairs",
+        (sf_dir, pair_source),
+        lambda: _neardup_pair_frame(
+            load_table(spark, sf_dir, "embeddings"), pair_source=pair_source
+        ).persist(),
+    )
 
 
 _NEARDUP_ORACLE = f"""
@@ -697,42 +674,17 @@ def _train_ivf_centroids(emb: DataFrame) -> list[list[float]]:
 
 # trained coarse quantizers, memoized per (session, sf_dir) — an IVF
 # index is a persisted artifact in any real deployment (train once,
-# serve many queries); this is the in-session equivalent, with an
-# explicit release like the graph-edge cache.  The weak keying guards
-# against id() recycling aliasing a new session onto old centroids;
-# it does NOT auto-expire entries (the values here are plain floats,
-# but the convention across all three session caches is the same —
-# see cache.py's honesty note): clear_ivf_cache /
-# release_session_caches is the lifetime mechanism.
-_IVF_CENTROID_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, list[list[float]]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def clear_ivf_cache(spark: SparkSession) -> int:
-    """Drop this session's trained IVF coarse centroids; returns
-    entries removed.  The PQ codebooks have their own release
-    (``clear_pq_cache``) so cache-stats readers see each trained
-    quantizer family under its own name."""
-    return len(_IVF_CENTROID_CACHE.pop(spark, {}))
-
-
-def clear_pq_cache(spark: SparkSession) -> int:
-    """Drop this session's trained PQ codebooks; returns entries
-    removed."""
-    return len(_PQ_CODEBOOK_CACHE.pop(spark, {}))
-
-
+# serve many queries); this is the in-session equivalent.  The PQ
+# codebooks live in their own namespace ("pq_codebooks") so
+# cache-stats readers see each trained quantizer family under its own
+# name.
 def _get_ivf_centroids(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> list[list[float]]:
     """Trained quantizer for (session, sf_dir), training on first use."""
-    per_session = _IVF_CENTROID_CACHE.setdefault(spark, {})
-    cents = per_session.get(sf_dir)
-    if cents is None:
-        cents = _train_ivf_centroids(emb)
-        per_session[sf_dir] = cents
-    return cents
+    return cache.memo(
+        spark, "ivf_centroids", sf_dir, lambda: _train_ivf_centroids(emb)
+    )
 
 
 _QUANTIZER_SIDECAR = "_quantizer.json"  # underscore-prefixed: parquet
@@ -1288,23 +1240,15 @@ def _train_pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
     return books.tolist()
 
 
-_PQ_CODEBOOK_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, list[list[list[float]]]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _get_pq_codebooks(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> list[list[list[float]]]:
     """Trained PQ codebooks for (session, sf_dir) - same
-    train-once/serve-many memo discipline as the IVF quantizer;
-    released by ``clear_pq_cache`` / ``release_session_caches``."""
-    per_session = _PQ_CODEBOOK_CACHE.setdefault(spark, {})
-    books = per_session.get(sf_dir)
-    if books is None:
-        books = _train_pq_codebooks(emb)
-        per_session[sf_dir] = books
-    return books
+    train-once/serve-many memo discipline as the IVF quantizer, in
+    namespace ``"pq_codebooks"``."""
+    return cache.memo(
+        spark, "pq_codebooks", sf_dir, lambda: _train_pq_codebooks(emb)
+    )
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1419,17 +1363,17 @@ def _get_ivfpq_codebooks(
     coarse-quantizer RESIDUALS (the IVFPQ recipe: residuals are smaller
     and better centered than raw vectors, so the same 8-bit budget
     quantizes finer).  Memoized alongside the flat-PQ books under a
-    distinct key; released by ``clear_pq_cache``."""
-    key = f"{sf_dir}#ivfpq-residual"
-    per_session = _PQ_CODEBOOK_CACHE.setdefault(spark, {})
-    books = per_session.get(key)
-    if books is None:
-        res = _residual_corpus(emb, cents).select(
-            "vec_id", F.col("residual").alias("embedding")
-        )
-        books = _train_pq_codebooks(res)
-        per_session[key] = books
-    return books
+    distinct key of namespace ``"pq_codebooks"``."""
+    return cache.memo(
+        spark,
+        "pq_codebooks",
+        f"{sf_dir}#ivfpq-residual",
+        lambda: _train_pq_codebooks(
+            _residual_corpus(emb, cents).select(
+                "vec_id", F.col("residual").alias("embedding")
+            )
+        ),
+    )
 
 
 def _ivfpq_state(
@@ -1716,15 +1660,13 @@ def _train_opq_pair(emb: DataFrame, cents: list[list[float]]):
 
 def _get_opq_state(spark: SparkSession, sf_dir: str, emb: DataFrame):
     """(rotation, codebooks) for (session, corpus), memoized alongside
-    the PQ books (released by ``clear_pq_cache``)."""
-    key = f"{sf_dir}#opq"
-    per_session = _PQ_CODEBOOK_CACHE.setdefault(spark, {})
-    state = per_session.get(key)
-    if state is None:
-        cents = _get_ivf_centroids(spark, sf_dir, emb)
-        state = _train_opq_pair(emb, cents)
-        per_session[key] = state
-    return state
+    the PQ books in namespace ``"pq_codebooks"``."""
+    return cache.memo(
+        spark,
+        "pq_codebooks",
+        f"{sf_dir}#opq",
+        lambda: _train_opq_pair(emb, _get_ivf_centroids(spark, sf_dir, emb)),
+    )
 
 
 def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2756,13 +2698,9 @@ _CONTAMINATION_EMB_ORACLE = _contamination_emb_oracle(_DECON_EVAL_CAP)
 # three ANN tiers (~4× the marginal cost; the family's worst sf1
 # factor at 3.4×) even though each tier is priced as its own bench
 # line in the same family.  The top-k frames are now memoized per
-# (session, corpus, method) exactly like _NEARDUP_PAIR_CACHE, so a
+# (session, corpus, method) exactly like the near-dup pair frames, so a
 # repeat report prices ONLY the |probes|·K metric joins; the cold
-# first build stays visible in the bench cold column.  Lifetime =
-# explicit release (release_session_caches), same as every memo.
-_ANN_TOPK_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
+# first build stays visible in the bench cold column.
 _ANN_TOPK_FNS = {
     "exact": knn_exact_topk,
     "hyperplane_lsh": ann_hyperplane_topk,
@@ -2778,22 +2716,13 @@ def ann_topk_frame_cached(
 ) -> DataFrame:
     """Persisted top-k frame for this session + corpus + retrieval
     tier (``"exact" | "hyperplane_lsh" | "ivf" | "pq_adc" |
-    "ivfpq"``)."""
-    per_session = _ANN_TOPK_CACHE.setdefault(spark, {})
-    key = (sf_dir, method)
-    df = per_session.get(key)
-    if df is None:
-        df = _ANN_TOPK_FNS[method](spark, sf_dir).persist()
-        per_session[key] = df
-    return df
-
-
-def clear_ann_topk_cache(spark: SparkSession) -> int:
-    """Unpersist and drop this session's memoized top-k frames."""
-    per_session = _ANN_TOPK_CACHE.pop(spark, None) or {}
-    for df in per_session.values():
-        df.unpersist(False)
-    return len(per_session)
+    "ivfpq" | "opq"``), in namespace ``"ann_topk"``."""
+    return cache.memo(
+        spark,
+        "ann_topk",
+        (sf_dir, method),
+        lambda: _ANN_TOPK_FNS[method](spark, sf_dir).persist(),
+    )
 
 
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:

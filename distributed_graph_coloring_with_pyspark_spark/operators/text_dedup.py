@@ -47,6 +47,7 @@ import weakref
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..cache import persist_tracked
 from ..sources.tables import load_table
 
@@ -158,38 +159,19 @@ def _doc_shingles(
 # single most expensive pre-shuffle step of each (~5 s of HOF work per
 # scan at sf0.1).  Memoize ONE persisted copy per (session, sf_dir) —
 # the same shared-scan materialization the customer-graph edge cache
-# does (graph_bridge.py).  Lifetime honesty (review r5): the weak
-# keying only guards against id-recycling aliasing — it canNOT free
-# entries when a session is dropped, because the cached frame itself
-# strongly references its session; EXPLICIT release
-# (clear_shingle_cache / release_session_caches) is the real
-# mechanism.  At 100 TB this is the "materialize the shingle table
-# once per corpus build" step every multi-pass dedup pipeline
-# schedules.
-_SHINGLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+# does (graph_bridge.py).  At 100 TB this is the "materialize the
+# shingle table once per corpus build" step every multi-pass dedup
+# pipeline schedules.
 def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, shingles) for this session+corpus (built with
     the parallel projection; consumers reading the cache no longer care
     about the scan-split question the parallel flag answers)."""
-    per_session = _SHINGLE_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
-        df = _doc_shingles(spark, sf_dir, parallel=True).persist()
-        per_session[sf_dir] = df
-    return df
-
-
-def clear_shingle_cache(spark: SparkSession) -> int:
-    """Unpersist and drop this session's shingle frames; returns the
-    number of entries released."""
-    dropped = _SHINGLE_CACHE.pop(spark, {})
-    for df in dropped.values():
-        df.unpersist(False)
-    return len(dropped)
+    return cache.memo(
+        spark,
+        "shingles",
+        sf_dir,
+        lambda: _doc_shingles(spark, sf_dir, parallel=True).persist(),
+    )
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -436,10 +418,9 @@ def dedup_incremental(
 
 
 # index dirs for the self-contained registry entry below, memoized per
-# (session, corpus) with the same WeakKeyDictionary discipline as
-# _PAIR_CACHE (ADVICE r7: an id(spark) key can be recycled after the
-# session is garbage-collected, silently adopting a dead session's
-# index).  Every created temp dir is also registered for process-exit
+# (session, corpus) in a WeakKeyDictionary (ADVICE r7: an id(spark)
+# key can be recycled after the session is garbage-collected, silently
+# adopting a dead session's index).  Every created temp dir is also registered for process-exit
 # removal, and clear_incremental_e2e_index/release_session_caches
 # reclaim them eagerly.
 _INCR_E2E_INDEX: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
@@ -1380,35 +1361,20 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB this is "materialize the pair table once per corpus build":
 # every downstream consumer (drop list, clustering, calibration) reads
 # the same artifact rather than re-running the set-similarity join.
-# Lifetime honesty: explicit release (clear_pair_cache /
-# release_session_caches) is the mechanism, same as every session memo.
 # Consumers: dedup_ngram_jaccard, dedup_components, dedup_keep_policy,
 # and (since round 7) curate_corpus, which restricts the corpus-wide
 # pair list to its exact-dedup survivors via two semi-joins.
-_PAIR_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def jaccard_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_a, doc_b, j) exact-Jaccard pairs for this
     session+corpus (built on the session shingle cache)."""
-    per_session = _PAIR_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
-        grams = shingle_frame(spark, sf_dir).filter(F.size("shingles") > 0)
-        df = _prefix_jaccard_pairs(grams).persist()
-        per_session[sf_dir] = df
-    return df
-
-
-def clear_pair_cache(spark: SparkSession) -> int:
-    """Unpersist and drop this session's pair frames; returns entries
-    released."""
-    dropped = _PAIR_CACHE.pop(spark, {})
-    for df in dropped.values():
-        df.unpersist(False)
-    return len(dropped)
+    return cache.memo(
+        spark,
+        "jaccard_pairs",
+        sf_dir,
+        lambda: _prefix_jaccard_pairs(
+            shingle_frame(spark, sf_dir).filter(F.size("shingles") > 0)
+        ).persist(),
+    )
 
 
 def _l2_candidate_pairs(ranked: DataFrame, pi1) -> DataFrame:

@@ -45,11 +45,10 @@ module exists for the 100 TB-training-pipeline mandate.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..sources.tables import load_table
 
 # same pre-tokenization as token_stats_bpe (text_dedup._BPE_PATTERN) —
@@ -198,30 +197,14 @@ def train_bpe(
 # Same artifact discipline as the IVF quantizer / pair frames: train
 # once per session, every consumer reads the table; bench prices the
 # build as its own `bpe_train_build` line with the memo cleared per run.
-_BPE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def bpe_model_cached(
     spark: SparkSession, sf_dir: str, num_merges: int = _DEFAULT_MERGES
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    key = (sf_dir, num_merges)
-    per_session = _BPE_CACHE.setdefault(spark, {})
-    if key not in per_session:
+    def build():
         merges, vocab = train_bpe(spark, sf_dir, num_merges)
-        per_session[key] = (merges, vocab.persist())
-    return per_session[key]
+        return merges, vocab.persist()
 
-
-def clear_bpe_cache(spark: SparkSession) -> int:
-    per_session = _BPE_CACHE.pop(spark, None) or {}
-    for _, vocab in per_session.values():
-        try:
-            vocab.unpersist(False)
-        except Exception:  # session stopped: JVM cache already gone
-            pass
-    return len(per_session)
+    return cache.memo(spark, "bpe_models", (sf_dir, num_merges), build)
 
 
 # ---------------------------------------------------------------------------

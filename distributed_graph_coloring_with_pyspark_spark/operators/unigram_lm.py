@@ -47,11 +47,11 @@ len²/2 pieces per type and is capped by the same top-K aggregate.
 from __future__ import annotations
 
 import math
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from .tokenizer import _BPE_PATTERN, _word_freqs
 
 _MAX_PIECE_LEN = 4
@@ -221,20 +221,10 @@ def train_unigram(
     return probs
 
 
-_UNIGRAM_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def unigram_model_cached(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    per_session = _UNIGRAM_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        per_session[sf_dir] = train_unigram(spark, sf_dir)
-    return per_session[sf_dir]
-
-
-def clear_unigram_cache(spark: SparkSession) -> int:
-    return len(_UNIGRAM_CACHE.pop(spark, None) or {})
+    return cache.memo(
+        spark, "unigram_models", sf_dir, lambda: train_unigram(spark, sf_dir)
+    )
 
 
 def unigram_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:

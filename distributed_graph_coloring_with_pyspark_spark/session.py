@@ -59,52 +59,20 @@ def get_spark(
 
 
 def release_session_caches(spark: SparkSession) -> dict[str, int]:
-    """Drop every per-session memo this engine keeps — the trained IVF
-    quantizers, the customer-graph edge cache, the persisted shingle
-    cache, and the ad-hoc tracked persists (cache.py) — in one call.
-    Long-lived sessions (the bench harness, a notebook running many
-    query families) use this between families so one family's warm
-    state can't flatter or starve the next; each underlying helper is
-    idempotent and safe on a cold session.  This explicit release IS
-    the cache-lifetime mechanism: cached frames strongly reference
-    their session, so no keying scheme can expire them automatically
-    (see cache.py's honesty note).  Returns {cache_name:
-    entries_released} for observability."""
+    """Drop every per-session artifact this engine keeps (``cache.py``'s
+    store and text_dedup's e2e index dirs) in one call.  Long-lived
+    sessions (the bench harness, a notebook running many query
+    families) use this between families so one family's warm state
+    can't flatter or starve the next; it is idempotent and safe on a
+    cold session.  Returns {namespace: entries_released} for
+    observability."""
     import gc
 
-    from .cache import release_tracked
-    from .operators.classifier import clear_classifier_cache
-    from .operators.curation import clear_decon_cache
-    from .operators.graph_bridge import clear_customer_graph_cache
-    from .operators.similarity import (
-        clear_ann_topk_cache,
-        clear_ivf_cache,
-        clear_neardup_pair_cache,
-        clear_pq_cache,
-    )
-    from .operators.text_dedup import (
-        clear_incremental_e2e_index,
-        clear_pair_cache,
-        clear_shingle_cache,
-    )
-    from .operators.tokenizer import clear_bpe_cache
-    from .operators.unigram_lm import clear_unigram_cache
+    from .cache import release
+    from .operators.text_dedup import clear_incremental_e2e_index
 
-    released = {
-        "customer_graph": clear_customer_graph_cache(spark),
-        "ivf_centroids": clear_ivf_cache(spark),
-        "pq_codebooks": clear_pq_cache(spark),
-        "shingles": clear_shingle_cache(spark),
-        "jaccard_pairs": clear_pair_cache(spark),
-        "neardup_pairs": clear_neardup_pair_cache(spark),
-        "ann_topk": clear_ann_topk_cache(spark),
-        "e2e_index_dirs": clear_incremental_e2e_index(spark),
-        "bpe_models": clear_bpe_cache(spark),
-        "unigram_models": clear_unigram_cache(spark),
-        "classifier": clear_classifier_cache(spark),
-        "decon_drop_sets": clear_decon_cache(spark),
-        "tracked_frames": release_tracked(spark),
-    }
+    released = release(spark)
+    released["e2e_index_dirs"] = clear_incremental_e2e_index(spark)
     # Long-session hygiene (r6): iterative queries leave localCheckpoint
     # RDD blocks that Spark's ContextCleaner can only reclaim after the
     # driver-side py4j references are garbage collected — CPython's

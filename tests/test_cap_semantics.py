@@ -24,6 +24,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from distributed_graph_coloring_with_pyspark_spark import cache
 from distributed_graph_coloring_with_pyspark_spark.operators import graph_bridge as GB
 from distributed_graph_coloring_with_pyspark_spark.operators import text_dedup as TD
 
@@ -137,11 +138,11 @@ def test_prefix_bucket_cap_drops_hot_cluster(spark, planted_docs, monkeypatch):
     # — drop it so the monkeypatched cap actually re-plans the join,
     # and drop it AGAIN afterwards so no cap=3-built frame outlives the
     # restored constant (review r5)
-    TD.clear_pair_cache(spark)
+    cache.release(spark, "jaccard_pairs")
     try:
         capped = {tuple(r) for r in fn(spark, sf_dir).collect()}
     finally:
-        TD.clear_pair_cache(spark)
+        cache.release(spark, "jaccard_pairs")
     hot = {1, 2, 3, 4, 5}
     assert capped == {r for r in oracle_rows if r[0] not in hot and r[1] not in hot}
     assert capped  # the surviving (10, 11) pair, value-equal to the oracle

@@ -378,8 +378,8 @@ def test_classifier_session_memo_lifecycle(spark):
     repeated calls return the identical cached objects (no persist
     accumulation, the ADVICE r10 lifecycle point), and the release hook
     drops the memo so the next call rebuilds and still agrees."""
+    from distributed_graph_coloring_with_pyspark_spark import cache
     from distributed_graph_coloring_with_pyspark_spark.operators.classifier import (
-        _CLS_SESSION_CACHE,
         clear_classifier_cache,
         classifier_holdout_eval,
         feature_frame_cached,
@@ -399,13 +399,13 @@ def test_classifier_session_memo_lifecycle(spark):
     m = holdout_metrics(spark, SF0001)
     assert holdout_metrics(spark, SF0001) is m
     # the memo holds exactly: 1 frame + 2 weight entries + 1 metrics
-    per = _CLS_SESSION_CACHE.get(spark)
+    per = cache.entries(spark, "classifier")
     assert per is not None and len(per) == 4, sorted(per)
     row = classifier_holdout_eval(spark, SF0001).collect()[0]
 
     # release → rebuild from scratch → identical report
     assert clear_classifier_cache(spark) == 4
-    assert _CLS_SESSION_CACHE.get(spark) in (None, {})
+    assert cache.entries(spark, "classifier") == {}
     row2 = classifier_holdout_eval(spark, SF0001).collect()[0]
     assert row.asDict() == row2.asDict()
 

@@ -148,8 +148,8 @@ def test_multifile_corpus_layout(spark, tmp_path):
     assumes) instead of one file.  Repartition documents+events into
     4-part directories and compare three representative operators
     against their single-file results."""
+    from distributed_graph_coloring_with_pyspark_spark import cache
     from distributed_graph_coloring_with_pyspark_spark.operators.text_dedup import (
-        clear_shingle_cache,
         dedup_near_minhash,
         dedup_ngram_jaccard,
         repetition_stats,
@@ -167,13 +167,13 @@ def test_multifile_corpus_layout(spark, tmp_path):
         load_table(spark, sf, name).repartition(4).write.parquet(
             str(multi / f"{name}.parquet")
         )
-    clear_shingle_cache(spark)
+    cache.release(spark, "shingles")
     try:
         # dedup_ngram_jaccard exercises the session shingle cache on the
         # directory layout; the others exercise private projections
         for fn in (text_stats, repetition_stats, dedup_near_minhash, dedup_ngram_jaccard):
             a = _sorted_rows(fn(spark, sf))
-            clear_shingle_cache(spark)
+            cache.release(spark, "shingles")
             b = _sorted_rows(fn(spark, str(multi)))
             assert a == b, fn.__name__
         # streaming file source must see the part files, not zero rows
@@ -185,7 +185,7 @@ def test_multifile_corpus_layout(spark, tmp_path):
         sb = _sorted_rows(streaming_hourly_counts(spark, str(multi)))
         assert sa and sa == sb
     finally:
-        clear_shingle_cache(spark)
+        cache.release(spark, "shingles")
 
 
 def test_compact_parquet_preserves_content_and_shrinks_files(spark, tmp_path):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import re
 
+from distributed_graph_coloring_with_pyspark_spark import cache
 from distributed_graph_coloring_with_pyspark_spark.operators import similarity as S
 from distributed_graph_coloring_with_pyspark_spark.plans.audit import plan_string
 
@@ -39,7 +40,7 @@ def test_ivf_index_roundtrip_and_pruning(spark, tmp_path):
     assert got == want
     assert got  # non-empty
 
-    S.clear_ivf_cache(spark)
+    cache.release(spark, "ivf_centroids")
 
 
 def test_ivf_index_incremental_add_equals_full_build(spark, tmp_path):
@@ -75,7 +76,7 @@ def test_ivf_index_incremental_add_equals_full_build(spark, tmp_path):
     got = [tuple(r) for r in S.ann_ivf_topk_indexed(spark, SF, incr).collect()]
     want = [tuple(r) for r in S.ann_ivf_topk(spark, SF).collect()]
     assert got == want
-    S.clear_ivf_cache(spark)
+    cache.release(spark, "ivf_centroids")
 
 
 def test_ivf_index_compaction_preserves_answers(spark, tmp_path):
@@ -136,9 +137,9 @@ def test_ivf_index_compaction_preserves_answers(spark, tmp_path):
     # persisted quantizer.
     side = S._read_quantizer_sidecar(spark, compacted)
     assert side and "centroids" in side, "compaction dropped _quantizer.json"
-    S.clear_ivf_cache(spark)
+    cache.release(spark, "ivf_centroids")
     good = side["centroids"]
-    S._IVF_CENTROID_CACHE.setdefault(spark, {})[SF] = good[1:] + good[:1]
+    cache.entries(spark, "ivf_centroids")[SF] = good[1:] + good[:1]
     try:
         got = [
             tuple(r) for r in S.ann_ivf_topk_indexed(spark, SF, compacted).collect()
@@ -150,7 +151,7 @@ def test_ivf_index_compaction_preserves_answers(spark, tmp_path):
         plan = plan_string(S.ann_ivf_topk_indexed(spark, SF, compacted))
         assert re.search(r"PartitionFilters: \[[^\]]*cell[^\]]*IN", plan), plan[:2000]
     finally:
-        S.clear_ivf_cache(spark)
+        cache.release(spark, "ivf_centroids")
 
 
 def test_ivfpq_index_roundtrip_and_pruning(spark, tmp_path):
@@ -182,8 +183,8 @@ def test_ivfpq_index_roundtrip_and_pruning(spark, tmp_path):
     assert got == want
     assert got  # non-empty
 
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_ivfpq_index_incremental_add_equals_full_build(spark, tmp_path):
@@ -243,11 +244,11 @@ def test_ivfpq_index_incremental_add_equals_full_build(spark, tmp_path):
     assert canon(compacted) == canon(full)
     side = S._read_quantizer_sidecar(spark, compacted)
     assert side and "codebooks" in side, "compaction dropped _quantizer.json"
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
     good = side["centroids"]
-    S._IVF_CENTROID_CACHE.setdefault(spark, {})[SF] = good[1:] + good[:1]
-    S._PQ_CODEBOOK_CACHE.setdefault(spark, {})[f"{SF}#ivfpq-residual"] = [
+    cache.entries(spark, "ivf_centroids")[SF] = good[1:] + good[:1]
+    cache.entries(spark, "pq_codebooks")[f"{SF}#ivfpq-residual"] = [
         [[0.0] * S._PQ_SUB for _ in range(len(side["codebooks"][0]))]
         for _ in range(S._PQ_M)
     ]
@@ -258,8 +259,8 @@ def test_ivfpq_index_incremental_add_equals_full_build(spark, tmp_path):
         )
         assert [tuple(r) for r in after.collect()] == want
     finally:
-        S.clear_ivf_cache(spark)
-        S.clear_pq_cache(spark)
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
 
 
 def test_ivfpq_index_is_much_smaller_than_ivf_index(spark, tmp_path):
@@ -280,8 +281,8 @@ def test_ivfpq_index_is_much_smaller_than_ivf_index(spark, tmp_path):
         )
 
     assert nbytes(ivfpq) * 4 < nbytes(ivf)
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_index_quantizer_sidecar_survives_session_state(spark, tmp_path):
@@ -307,12 +308,12 @@ def test_index_quantizer_sidecar_survives_session_state(spark, tmp_path):
     # simulate a fresh session with a DIFFERENT would-be quantizer: the
     # memo now holds rotated centroids / zeroed codebooks — if any serve
     # or add path consulted the session trainer, results would change
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
     good = side["centroids"]
     poison = good[1:] + good[:1]
-    S._IVF_CENTROID_CACHE.setdefault(spark, {})[SF] = poison
-    S._PQ_CODEBOOK_CACHE.setdefault(spark, {})[f"{SF}#ivfpq-residual"] = [
+    cache.entries(spark, "ivf_centroids")[SF] = poison
+    cache.entries(spark, "pq_codebooks")[f"{SF}#ivfpq-residual"] = [
         [[0.0] * S._PQ_SUB for _ in range(len(side["codebooks"][0]))]
         for _ in range(S._PQ_M)
     ]
@@ -333,8 +334,8 @@ def test_index_quantizer_sidecar_survives_session_state(spark, tmp_path):
         n = S.ivfpq_index_add(spark, SF, pq, batch)
         assert n == batch.count()
     finally:
-        S.clear_ivf_cache(spark)
-        S.clear_pq_cache(spark)
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
 
 
 def test_opq_index_serves_rotated_tier_from_disk(spark, tmp_path):
@@ -366,11 +367,11 @@ def test_opq_index_serves_rotated_tier_from_disk(spark, tmp_path):
 
     # poisoned-memo extension: wrong rotation + wrong books + rotated
     # centroids in the session memos must not leak into the serve path
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
     good = side["centroids"]
-    S._IVF_CENTROID_CACHE.setdefault(spark, {})[SF] = good[1:] + good[:1]
-    S._PQ_CODEBOOK_CACHE.setdefault(spark, {})[f"{SF}#opq"] = (
+    cache.entries(spark, "ivf_centroids")[SF] = good[1:] + good[:1]
+    cache.entries(spark, "pq_codebooks")[f"{SF}#opq"] = (
         np.eye(S._DIM),  # identity rotation — NOT the trained one
         [
             [[0.0] * S._PQ_SUB for _ in range(len(side["codebooks"][0]))]
@@ -383,8 +384,8 @@ def test_opq_index_serves_rotated_tier_from_disk(spark, tmp_path):
         ]
         assert again == want
     finally:
-        S.clear_ivf_cache(spark)
-        S.clear_pq_cache(spark)
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
 
 
 def test_opq_index_incremental_add_equals_full_build(spark, tmp_path):
@@ -417,8 +418,8 @@ def test_opq_index_incremental_add_equals_full_build(spark, tmp_path):
     got = [tuple(r) for r in S.ann_ivfpq_topk_indexed(spark, SF, incr).collect()]
     want = [tuple(r) for r in S.ann_opq_topk(spark, SF).collect()]
     assert got == want
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_rebuild_equals_from_scratch_build(spark, tmp_path):
@@ -449,17 +450,17 @@ def test_rebuild_equals_from_scratch_build(spark, tmp_path):
     # garbage
     plain = str(tmp_path / "plain_idx")
     S.build_ivfpq_index(spark, SF, plain, opq=False)
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
     good = side["centroids"]
-    S._IVF_CENTROID_CACHE.setdefault(spark, {})[SF] = good[1:] + good[:1]
+    cache.entries(spark, "ivf_centroids")[SF] = good[1:] + good[:1]
     try:
         replain = str(tmp_path / "replain_idx")
         S.rebuild_ivfpq_index(spark, SF, plain, replain)
         assert canon(replain) == canon(plain)
     finally:
-        S.clear_ivf_cache(spark)
-        S.clear_pq_cache(spark)
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
 
 
 def test_rebuild_serve_continuity_via_pointer(spark, tmp_path):
@@ -513,8 +514,8 @@ def test_rebuild_serve_continuity_via_pointer(spark, tmp_path):
     assert n == batch.count() > 0
     assert spark.read.parquet(v1).count() == before_v1
     assert spark.read.parquet(v2).count() == emb.count() + n
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_ivf_family_resolves_version_pointer(spark, tmp_path):
@@ -536,7 +537,7 @@ def test_ivf_family_resolves_version_pointer(spark, tmp_path):
     n = S.ivf_index_add(spark, SF, str(root), batch)
     assert n == batch.count() > 0
     assert spark.read.parquet(v1).count() == before + n
-    S.clear_ivf_cache(spark)
+    cache.release(spark, "ivf_centroids")
 
 
 def test_rebuild_recovers_recall_after_drift(spark, tmp_path):
@@ -575,8 +576,8 @@ def test_rebuild_recovers_recall_after_drift(spark, tmp_path):
     r_stale, r_rebuilt = recall(stale), recall(rebuilt)
     assert r_rebuilt >= r_stale, (r_stale, r_rebuilt)
     assert r_rebuilt >= 0.85  # the family floor holds on the rebuild
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_corrupt_sidecar_raises_absent_sidecar_falls_back(spark, tmp_path):
@@ -608,7 +609,7 @@ def test_corrupt_sidecar_raises_absent_sidecar_falls_back(spark, tmp_path):
     assert S._read_quantizer_sidecar(spark, idx) is None
     got = [tuple(r) for r in S.ann_ivf_topk_indexed(spark, SF, idx).collect()]
     assert got == want
-    S.clear_ivf_cache(spark)
+    cache.release(spark, "ivf_centroids")
 
 
 def test_sidecar_write_is_tempfile_then_rename(spark, tmp_path):
@@ -631,7 +632,7 @@ def test_sidecar_write_is_tempfile_then_rename(spark, tmp_path):
         if n.endswith(".crc") and n[1 : -len(".crc")] not in names
     ]
     assert not orphans, orphans
-    S.clear_ivf_cache(spark)
+    cache.release(spark, "ivf_centroids")
 
 
 def test_drift_report_matches_numpy_oracle(spark, tmp_path):
@@ -690,8 +691,8 @@ def test_drift_report_matches_numpy_oracle(spark, tmp_path):
     assert 0 < s.n_vectors == len(s_errs) < len(errs)
     assert s.n_cells_used == len(s_cells)
     assert math.isclose(s.mean_sq_err, sum(s_errs) / len(s_errs), rel_tol=1e-9)
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_drift_report_requires_sidecar(spark, tmp_path):
@@ -707,8 +708,8 @@ def test_drift_report_requires_sidecar(spark, tmp_path):
     os.remove(os.path.join(path, "_quantizer.json"))
     with pytest.raises(ValueError, match="sidecar"):
         S.index_drift_report(spark, SF, path)
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_versioned_root_is_relocatable(spark, tmp_path):
@@ -738,5 +739,5 @@ def test_versioned_root_is_relocatable(spark, tmp_path):
         for r in S.ann_ivfpq_topk_indexed(spark, SF, str(moved)).collect()
     ]
     assert got == want
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")

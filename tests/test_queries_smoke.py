@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
+from distributed_graph_coloring_with_pyspark_spark import cache
 
 SF = "/root/testdata/sf0.001"
 
@@ -95,15 +96,17 @@ def test_query_runs(spark, name, fn):
 def test_graph_edge_cache_release(spark):
     from distributed_graph_coloring_with_pyspark_spark.operators import graph_bridge as GB
 
-    GB.customer_graph_edges(spark, SF)
-    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("dgc_customer_edges_")]
-    assert views
+    edges = GB.customer_graph_edges(spark, SF)
+    assert GB.customer_graph_edges(spark, SF) is edges
+    assert edges.storageLevel.useMemory or edges.storageLevel.useDisk
+    assert cache.entries(spark, "customer_graph")[SF] is edges
     assert GB.clear_customer_graph_cache(spark) >= 1
-    assert not any(
-        t.name.startswith("dgc_customer_edges_") for t in spark.catalog.listTables()
-    )
+    assert not (edges.storageLevel.useMemory or edges.storageLevel.useDisk)
+    assert SF not in cache.entries(spark, "customer_graph")
     # memoization still works after a release
-    assert GB.customer_graph_edges(spark, SF).count() > 0
+    again = GB.customer_graph_edges(spark, SF)
+    assert again is not edges and GB.customer_graph_edges(spark, SF) is again
+    assert again.count() > 0
     GB.clear_customer_graph_cache(spark)
 
 
@@ -111,8 +114,8 @@ def test_ivf_centroid_cache_release(spark):
     from distributed_graph_coloring_with_pyspark_spark.operators import similarity as S
 
     S.ann_ivf_topk(spark, SF).count()
-    assert S.clear_ivf_cache(spark) >= 1
-    assert S.clear_ivf_cache(spark) == 0
+    assert cache.release(spark, "ivf_centroids")["ivf_centroids"] >= 1
+    assert cache.release(spark, "ivf_centroids")["ivf_centroids"] == 0
 
 
 def test_entry_flagship(spark):

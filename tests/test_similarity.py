@@ -10,6 +10,7 @@ import random
 
 import pytest
 
+from distributed_graph_coloring_with_pyspark_spark import cache
 from distributed_graph_coloring_with_pyspark_spark.operators import similarity as S
 
 _EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -193,5 +194,5 @@ def test_ivfpq_tiny_corpus_edge(spark, tmp_path):
     exact = {(r.probe_id, r.rank): r.neighbor_id for r in S.knn_exact_topk(spark, sf).collect()}
     ivfpq = {(r.probe_id, r.rank): r.neighbor_id for r in S.ann_ivfpq_topk(spark, sf).collect()}
     assert exact == ivfpq and exact
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")

@@ -315,16 +315,15 @@ def test_ann_recall_report_reuses_session_artifacts(spark):
     returns identical values while the memo holds exactly the five
     tier frames, (b) release drops all five, (c) a post-release call
     rebuilds and still agrees — the artifact is a cache, not a fork."""
+    from distributed_graph_coloring_with_pyspark_spark import cache
     from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (
-        _ANN_TOPK_CACHE,
         ann_recall_report,
         ann_topk_frame_cached,
-        clear_ann_topk_cache,
     )
 
-    clear_ann_topk_cache(spark)
+    cache.release(spark, "ann_topk")
     first = ann_recall_report(spark, SF).collect()
-    memo = _ANN_TOPK_CACHE.get(spark)
+    memo = cache.entries(spark, "ann_topk")
     assert memo is not None and {m for (_, m) in memo} == {
         "exact",
         "hyperplane_lsh",
@@ -337,11 +336,11 @@ def test_ann_recall_report_reuses_session_artifacts(spark):
     assert ann_topk_frame_cached(spark, SF, "ivf") is cached_ivf
     second = ann_recall_report(spark, SF).collect()
     assert [r.asDict() for r in second] == [r.asDict() for r in first]
-    assert clear_ann_topk_cache(spark) == 6
-    assert _ANN_TOPK_CACHE.get(spark) is None
+    assert cache.release(spark, "ann_topk")["ann_topk"] == 6
+    assert cache.entries(spark, "ann_topk") == {}
     rebuilt = ann_recall_report(spark, SF).collect()
     assert [r.asDict() for r in rebuilt] == [r.asDict() for r in first]
-    clear_ann_topk_cache(spark)
+    cache.release(spark, "ann_topk")
 
 
 def test_contamination_plan_shape(spark):

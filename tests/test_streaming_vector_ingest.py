@@ -11,6 +11,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from distributed_graph_coloring_with_pyspark_spark import cache
 from distributed_graph_coloring_with_pyspark_spark.operators import similarity as S
 from distributed_graph_coloring_with_pyspark_spark.plans.audit import plan_string
 from distributed_graph_coloring_with_pyspark_spark.sources.tables import load_table
@@ -83,18 +84,18 @@ def test_streamed_index_equals_batch_lifecycle_and_serves(spark, tmp_path):
 
     side = S._read_quantizer_sidecar(spark, sidx)
     assert side and "rotation" in side
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
     good = side["centroids"]
-    S._IVF_CENTROID_CACHE.setdefault(spark, {})[SF] = good[1:] + good[:1]
+    cache.entries(spark, "ivf_centroids")[SF] = good[1:] + good[:1]
     try:
         again = [
             tuple(r) for r in S.ann_ivfpq_topk_indexed(spark, SF, sidx).collect()
         ]
         assert again == want
     finally:
-        S.clear_ivf_cache(spark)
-        S.clear_pq_cache(spark)
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
 
 
 def test_streaming_vector_ingest_resume_exactly_once(spark, tmp_path):
@@ -131,8 +132,8 @@ def test_streaming_vector_ingest_resume_exactly_once(spark, tmp_path):
     VI.streaming_vector_index_ingest(spark, str(src), sidx, checkpoint_dir=ckpt)
     assert _canon(spark, sidx) == want
 
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_epoch_publish_is_staged_rename(spark, tmp_path):
@@ -171,8 +172,8 @@ def test_epoch_publish_is_staged_rename(spark, tmp_path):
     got = spark.read.parquet(sidx).filter(F.col("epoch") == 0)
     assert got.count() == slices[0].count()
     assert before + slices[0].count() == spark.read.parquet(sidx).count()
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_corpus_entry_report_shape(spark):
@@ -184,8 +185,8 @@ def test_corpus_entry_report_shape(spark):
     assert sum(r.n_vectors for r in rows) == emb.count()
     assert len(rows) >= 2  # base + at least one arrival epoch
     assert all(r.n_cells <= S._IVF_K for r in rows)
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_default_checkpoint_resumes_and_fresh_checkpoint_refuses(
@@ -228,8 +229,8 @@ def test_default_checkpoint_resumes_and_fresh_checkpoint_refuses(
             spark, str(src), sidx, checkpoint_dir=str(tmp_path / "fresh_ckpt")
         )
     assert _canon(spark, sidx) == want  # index untouched by the refusal
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_drift_rebuild_composes_with_streaming_ingest(spark, tmp_path):
@@ -285,8 +286,8 @@ def test_drift_rebuild_composes_with_streaming_ingest(spark, tmp_path):
         tuple(r) for r in S.ann_ivfpq_topk_indexed(spark, SF, str(root)).collect()
     ]
     assert got == want
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_streamed_index_compacts_to_flat_cell_layout(spark, tmp_path):
@@ -329,8 +330,8 @@ def test_streamed_index_compacts_to_flat_cell_layout(spark, tmp_path):
         r"PartitionFilters: \[[^\]]*cell[^\]]*IN", plan_string(served)
     )
     assert [tuple(r) for r in served.collect()] == want
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_drift_report_flags_drift_and_clears_after_rebuild(spark, tmp_path):
@@ -416,8 +417,8 @@ def test_drift_report_flags_drift_and_clears_after_rebuild(spark, tmp_path):
     assert set(rep2) == {"base"}  # fresh epoch=-1 layout, nothing streamed
     assert rep2["base"].n_vectors == allvec.count()
     assert rep2["base"].mean_sq_err < rep["streamed"].mean_sq_err
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
 
 
 def test_rebuild_epoch_layout_override_enables_streaming(spark, tmp_path):
@@ -471,5 +472,5 @@ def test_rebuild_epoch_layout_override_enables_streaming(spark, tmp_path):
     by_epoch = {r.epoch: r.n_vectors for r in report.collect()}
     assert by_epoch[VI._BASE_EPOCH] == base.count()
     assert sum(v for k, v in by_epoch.items() if k >= 0) == slices[0].count()
-    S.clear_ivf_cache(spark)
-    S.clear_pq_cache(spark)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")

@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from distributed_graph_coloring_with_pyspark_spark import cache
 from distributed_graph_coloring_with_pyspark_spark.operators.tokenizer import (
     _BPE_PATTERN,
     _apply_merge,
@@ -139,10 +140,9 @@ def test_tokenize_stats_match_python_reference(spark):
     against the Python reference tokenizing the same corpus."""
     from distributed_graph_coloring_with_pyspark_spark.operators.tokenizer import (
         _DEFAULT_MERGES,
-        clear_bpe_cache,
     )
 
-    clear_bpe_cache(spark)
+    cache.release(spark, "bpe_models")
     got = {
         r["lang"]: (
             r["n_words"],
@@ -152,7 +152,7 @@ def test_tokenize_stats_match_python_reference(spark):
         )
         for r in bpe_tokenize_stats(spark, SF0001).collect()
     }
-    clear_bpe_cache(spark)
+    cache.release(spark, "bpe_models")
 
     freqs = ref_word_freqs(SF0001)
     _, vocab = ref_train_bpe(freqs, _DEFAULT_MERGES)
@@ -249,7 +249,6 @@ def test_bpe_empty_docs_emit_rows(spark, tmp_path):
     from distributed_graph_coloring_with_pyspark_spark.operators.tokenizer import (
         bpe_encode_export,
         bpe_encode_stats,
-        clear_bpe_cache,
     )
 
     sf = str(tmp_path)
@@ -261,7 +260,7 @@ def test_bpe_empty_docs_emit_rows(spark, tmp_path):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(f"{sf}/documents.parquet")
-    clear_bpe_cache(spark)
+    cache.release(spark, "bpe_models")
     try:
         rows = {
             r["doc_id"]: (r["n_tokens"], list(r["token_ids"]))
@@ -275,7 +274,7 @@ def test_bpe_empty_docs_emit_rows(spark, tmp_path):
         assert stats["n_docs"] == 3
         assert stats["total_tokens"] == rows[1][0]
     finally:
-        clear_bpe_cache(spark)
+        cache.release(spark, "bpe_models")
 
 
 def test_tokenize_join_broadcasts(spark):
@@ -285,10 +284,9 @@ def test_tokenize_join_broadcasts(spark):
     documented in the bpe_tokenize_stats docstring)."""
     from distributed_graph_coloring_with_pyspark_spark.operators.tokenizer import (
         bpe_encode_export,
-        clear_bpe_cache,
     )
 
-    clear_bpe_cache(spark)
+    cache.release(spark, "bpe_models")
     try:
         # (query, required broadcast joins, allowed non-broadcast joins)
         # — encode's single allowed SMJ is the DOC-keyed left join that
@@ -302,4 +300,4 @@ def test_tokenize_join_broadcasts(spark):
             assert plan.count("BroadcastHashJoin") >= n_bcast, plan
             assert plan.count("SortMergeJoin") <= n_smj, plan
     finally:
-        clear_bpe_cache(spark)
+        cache.release(spark, "bpe_models")

@@ -28,12 +28,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from distributed_graph_coloring_with_pyspark_spark import cache
 from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (
-    clear_neardup_pair_cache,
     neardup_pair_frame_cached,
 )
 from distributed_graph_coloring_with_pyspark_spark.operators.text_dedup import (
-    clear_pair_cache,
     jaccard_pair_frame,
 )
 from distributed_graph_coloring_with_pyspark_spark.session import (
@@ -101,12 +100,12 @@ def main() -> int:
         release_session_caches(spark)
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
         embs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).count()
-        clear_pair_cache(spark)
+        cache.release(spark, "jaccard_pairs")
         jp = jaccard_pair_frame(spark, sf_dir).count()
         extra = ""
         if with_l2:
             extra = " " + _l2_stats(spark, sf_dir)
-        clear_neardup_pair_cache(spark, "exact")
+        cache.release(spark, "neardup_pairs", (sf_dir, "exact"))
         gp = neardup_pair_frame_cached(spark, sf_dir, "exact").count()
         print(
             f"{sf_dir}: docs={docs} embeddings={embs} "

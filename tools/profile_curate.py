@@ -24,9 +24,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from distributed_graph_coloring_with_pyspark_spark import cache  # noqa: E402
 from distributed_graph_coloring_with_pyspark_spark.operators.text_dedup import (  # noqa: E402
     build_minhash_index,
-    clear_pair_cache,
     curate_corpus,
     dedup_incremental,
     dedup_ngram_jaccard,
@@ -66,7 +66,7 @@ def main() -> int:
         mh_path = os.path.join(mh_dir, "index")
 
         def pair_build():
-            clear_pair_cache(spark)
+            cache.release(spark, "jaccard_pairs")
             return jaccard_pair_frame(spark, SF_DIR)
 
         timed("jaccard_pair_build", pair_build, 3)

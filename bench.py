@@ -16,8 +16,8 @@ always lived for the judge.
     stdout:            {"metric": "sum_query_sec", "value": N,
                         "unit": "sec", "queries": {<registry>: sec},
                         "min_sec": [<floor per "queries" key, in key
-                        order — min over the raw runs; see the emit
-                        site for why an array, not a map>],
+                        order — min over the raw runs; see
+                        stdout_line for why an array, not a map>],
                         "sf": 0.1}
     BENCH_LOCAL.json:  full medians (all queries) + families + sum
     BENCH_COLD.json:   cold first-run seconds (all queries)
@@ -155,6 +155,58 @@ _REPEATS = 3
 _REPEAT_CUTOFF_SEC = 15.0
 # the driver keeps only the last 2000 chars of stdout; leave margin
 _STDOUT_LINE_BUDGET = 1900
+
+
+def stdout_line(
+    total: float,
+    timings: dict,
+    mins: dict,
+    registry,
+    sf,
+    budget: int = _STDOUT_LINE_BUDGET,
+) -> tuple[str, list[str]]:
+    """The one compact JSON line bench.py prints, and the keys dropped
+    to fit ``budget`` chars (the driver reads a ~2000-char stdout tail).
+
+    The line carries the headline sum over ALL benched queries and,
+    for the registry queries only, the median (``queries``, 2 dp; an
+    infinite timing, i.e. a failed query, is ``null``) and the floor
+    (``min_sec``).  ``min_sec`` is an ARRAY aligned with the
+    ``queries`` keys, not a second name->sec map: ``min_sec[i]`` is the
+    min-over-runs floor of the query named by the i-th key of
+    ``queries`` and ``null`` mirrors a failed query.  A keyed map
+    measured 2790 chars on the r14 data vs 1685 for the array form, and
+    an overflowing line is lost whole.  The floor separates plan moves
+    (floor moves) from ambient variance (median moves, floor doesn't).
+    Over budget, ``min_sec`` goes first, then the per-query map is
+    emptied; the headline always survives."""
+    line_queries = {
+        k: (round(timings[k], 2) if timings[k] != float("inf") else None)
+        for k in registry
+        if k in timings
+    }
+    out = {
+        "metric": "sum_query_sec",
+        "value": total,
+        "unit": "sec",
+        "queries": line_queries,
+        "min_sec": [
+            (round(mins[k], 2) if mins.get(k) is not None else None)
+            for k in line_queries
+        ],
+        "sf": sf,
+    }
+    dropped = []
+    line = json.dumps(out, separators=(",", ":"))
+    if len(line) > budget:
+        del out["min_sec"]
+        dropped.append("min_sec")
+        line = json.dumps(out, separators=(",", ":"))
+    if len(line) > budget:
+        out["queries"] = {}
+        dropped.append("queries")
+        line = json.dumps(out, separators=(",", ":"))
+    return line, dropped
 
 
 def main() -> int:
@@ -711,57 +763,13 @@ def main() -> int:
         json.dump({"cold": cold, "sf": sf}, f, indent=1, sort_keys=False)
         f.write("\n")
 
-    # stdout line: headline over ALL queries, per-query medians for the
-    # driver-registered 50 only, 2 dp, compact separators — must fit the
-    # driver's 2000-char tail window.
-    line_queries = {
-        k: (round(timings[k], 2) if timings[k] != float("inf") else None)
-        for k in registry
-        if k in timings
-    }
-    # Per-registry-row floors on the stdout line (r15, VERDICT r14 #2):
-    # the r14 round had 34 untouched rows flagged "regressed" purely by
-    # an ambient window; the min-over-runs floor separates plan moves
-    # (floor moves) from ambient variance (median moves, floor doesn't),
-    # and it was already computed and committed (BENCH_LOCAL.json) but
-    # invisible to the one-line JSON the driver parses.  Emitted as an
-    # ARRAY aligned with the "queries" keys, not a second name->sec map:
-    # a keyed map measures 2790 chars on the r14 data vs 1685 for the
-    # array form, and the driver reads a ~2000-char stdout tail — the
-    # map form would overflow it and lose the WHOLE line (the exact
-    # BENCH_r04 failure the 1900-char budget exists to prevent).
-    # min_sec[i] is the floor of the query named by the i-th key of
-    # "queries"; null mirrors a failed query.  Additive key — existing
-    # keys, their order, and their semantics are unchanged.
-    line_min = [
-        (round(mins[k], 2) if mins.get(k) is not None else None)
-        for k in line_queries
-    ]
-    out = {
-        "metric": "sum_query_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": line_queries,
-        "min_sec": line_min,
-        "sf": sf,
-    }
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) > _STDOUT_LINE_BUDGET:  # degrade gracefully, never overflow
+    line, dropped = stdout_line(total, timings, mins, registry, sf)
+    for key in dropped:
         print(
-            f"stdout line {len(line)} chars > {_STDOUT_LINE_BUDGET}; "
-            "dropping min_sec from stdout (full data in BENCH_LOCAL.json)",
+            f"stdout line over {_STDOUT_LINE_BUDGET} chars; dropping "
+            f"{key} from stdout (full data in BENCH_LOCAL.json)",
             file=sys.stderr,
         )
-        del out["min_sec"]
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > _STDOUT_LINE_BUDGET:
-        print(
-            f"stdout line {len(line)} chars > {_STDOUT_LINE_BUDGET}; "
-            "dropping per-query map from stdout (full data in BENCH_LOCAL.json)",
-            file=sys.stderr,
-        )
-        out["queries"] = {}
-        line = json.dumps(out, separators=(",", ":"))
     print(line)
     return 0
 

@@ -604,78 +604,119 @@ def _nearest_cell(emb_col: Column, cents: list[list[float]]) -> Column:
     return F.array_max(_cell_scores(emb_col, cents))["i"]
 
 
-def _train_ivf_centroids(emb: DataFrame) -> list[list[float]]:
-    """Distributed Lloyd's k-means for the IVF coarse quantizer.
+def _np_nearest_cell(X, C):
+    """NumPy twin of ``_nearest_cell`` for the rows of ``X``: the
+    max-cosine row of ``C``, ties going to the larger index as
+    Catalyst's ``array_max`` over (s, i) structs breaks them."""
+    import numpy as np
 
-    Init = Forgy (K actual vectors at deterministic ids); each iteration
-    is one scan over a DETERMINISTIC 1/3 sample (training a coarse
-    quantizer on a sample is the standard IVF recipe — FAISS does the
-    same — and caps training cost independently of corpus size): assign
-    every sampled vector to its max-cosine centroid (the centroids are
-    plan literals — the classic broadcast-model pattern), then recompute
-    centroids as per-cell component means via posexplode +
-    groupBy(cell, dim).  Driver state is K×DIM floats regardless of
-    corpus size; the full-corpus assignment happens once, at
-    query/index time.
+    C = np.asarray(C, dtype=np.float64)
+    Cn = C / np.sqrt((C * C).sum(1))[:, None]
+    s = (X @ Cn.T) / np.sqrt((X * X).sum(1))[:, None]
+    return s.shape[1] - 1 - s[:, ::-1].argmax(1)
 
-    Small-corpus behavior: with fewer than ``_IVF_K * 4`` vectors the
-    seed stride is derived from the actual row count so the seeds still
-    spread across the id range, and a corpus with fewer than K vectors
-    trains ``min(K, n)`` centroids (every vector its own cell) rather
-    than silently duplicating or under-seeding."""
-    # ONE bounded collect fetches ids AND embeddings for the seed
-    # window (r14 opt: the id-only pass + the isin re-scan were two
-    # full passes over the — possibly residual/rotated — upstream for
-    # K·4 rows of driver state); the stride slice of the id-ordered
-    # rows is exactly the old filter(isin).orderBy result
-    seed_rows = (
-        emb.select("vec_id", "embedding").orderBy("vec_id").limit(_IVF_K * 4).collect()
+
+# --- quantizer training: NumPy on the driver over one bounded sample -----
+# Every quantizer (IVF centroids, PQ and residual-PQ codebooks, the OPQ
+# rotation) trains from the same two bounded collects: the id-ordered
+# Forgy seed window and a deterministic sample capped at 256 rows per PQ
+# codeword, FAISS's training budget.  Training is then milliseconds of
+# NumPy; only the corpus-sized encode stays a Spark pass.
+
+_TRAIN_SAMPLE_CAP = 65_536  # 256 × _PQ_KS training rows at most
+
+
+def _collect_training_set(emb: DataFrame):
+    """(seed window, sample) as (n, DIM) float64 NumPy arrays.
+
+    The seed window is the first ``_PQ_KS * 4`` vectors by id (one
+    TakeOrdered job); the IVF seeds are its first ``_IVF_K * 4`` rows.
+    The sample is the deterministic ``vec_id % 3 == 0`` third of the
+    corpus; past ``_TRAIN_SAMPLE_CAP`` rows it keeps those with the
+    smallest ``xxhash64(vec_id)`` (a second TakeOrdered job), so the
+    sample spreads over the whole id range and a drift rebuild trains
+    on new arrivals too.  Driver state is at most the cap × DIM doubles
+    however large the corpus is."""
+    import numpy as np
+
+    cols = emb.select("vec_id", "embedding")
+    window = cols.orderBy("vec_id").limit(_PQ_KS * 4).collect()
+    if not window:
+        raise ValueError("quantizer training requires a non-empty corpus")
+    rows = (
+        cols.filter(F.col("vec_id") % 3 == 0)
+        .orderBy(F.xxhash64("vec_id"), "vec_id")
+        .limit(_TRAIN_SAMPLE_CAP)
+        .collect()
     )
-    if not seed_rows:
-        raise ValueError("IVF training requires a non-empty corpus")
-    k = min(_IVF_K, len(seed_rows))
-    stride = max(1, len(seed_rows) // k)
-    cents = [
-        [float(x) for x in r.embedding] for r in seed_rows[::stride][:k]
-    ]
-    # materialize the deterministic 1/3 training sample ONCE (r14 opt:
-    # each Lloyd iteration re-ran the full upstream scan; the lazy
-    # localCheckpoint is paid by iteration 1's action and iteration 2
-    # reads the blocks — same rows, same math)
-    emb = (
-        emb.filter(F.col("vec_id") % 3 == 0)
-        .select("embedding")
-        .localCheckpoint(eager=False)
-    )
-    if not emb.head(1):
-        # tiny corpus where the deterministic 1/3 sample is empty —
-        # the Forgy seeds stand unrefined (documented small-corpus path)
-        return cents
-    for _ in range(_IVF_ITERS):
-        # two-step select: a generator (posexplode) in the same projection
-        # as the argmax strips the struct field aliases it reads
-        assigned = emb.select(
-            "embedding", _nearest_cell(F.col("embedding"), cents).alias("cell")
-        ).select("cell", F.posexplode(_as_double(F.col("embedding"))).alias("d", "v"))
-        means = (
-            assigned.groupBy("cell", "d")
-            .agg(F.avg("v").alias("m"))
-            .collect()
+
+    def matrix(rs):
+        return np.array([r.embedding for r in rs], dtype=np.float64).reshape(
+            -1, _DIM
         )
-        new = [list(c) for c in cents]  # keep old centroid for empty cells
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cell.setdefault(r.cell, {})[r.d] = r.m
-        for cell, dims in by_cell.items():
-            new[cell] = [dims[d] for d in range(_DIM)]
-        cents = new
-    return cents
+
+    return matrix(window), matrix(rows)
+
+
+def _training_set(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """``_collect_training_set`` once per (session, sf_dir), shared by
+    every quantizer getter so a build collects its sample once."""
+    return cache.memo(
+        spark,
+        "ivf_centroids",
+        f"{sf_dir}#training-set",
+        lambda: _collect_training_set(emb),
+    )
+
+
+def _forgy(window, k: int):
+    """Forgy seeds: ``min(k, n)`` rows of the id-ordered window at an
+    even stride, so they spread across the id range even when the
+    corpus is smaller than the window."""
+    k = min(k, len(window))
+    return window[:: max(1, len(window) // k)][:k].copy()
+
+
+def _cell_means(X, cells, old):
+    """One Lloyd update: the mean of the rows of ``X`` in each cell; a
+    cell no row falls in keeps its ``old`` row."""
+    import numpy as np
+
+    counts = np.bincount(cells, minlength=len(old))
+    sums = np.zeros_like(old)
+    np.add.at(sums, cells, X)
+    new = old.copy()
+    hit = counts > 0
+    new[hit] = sums[hit] / counts[hit, None]
+    return new
+
+
+def _residuals(X, cents):
+    """Each row of ``X`` minus its nearest coarse centroid — the NumPy
+    form of ``_residual_corpus``."""
+    import numpy as np
+
+    C = np.asarray(cents, dtype=np.float64)
+    return X - C[_np_nearest_cell(X, C)]
+
+
+def _train_ivf_centroids(window, sample) -> list[list[float]]:
+    """Lloyd's k-means for the IVF coarse quantizer: Forgy seeds from
+    the first ``_IVF_K * 4`` window rows, then ``_IVF_ITERS`` rounds of
+    max-cosine assignment and per-cell means over the sample.  A corpus
+    with fewer than K vectors trains ``min(K, n)`` centroids, and an
+    empty sample leaves the seeds unrefined."""
+    cents = _forgy(window[: _IVF_K * 4], _IVF_K)
+    for _ in range(_IVF_ITERS):
+        cents = _cell_means(sample, _np_nearest_cell(sample, cents), cents)
+    return cents.tolist()
 
 
 # trained coarse quantizers, memoized per (session, sf_dir) — an IVF
 # index is a persisted artifact in any real deployment (train once,
-# serve many queries); this is the in-session equivalent.  The PQ
-# codebooks live in their own namespace ("pq_codebooks") so
+# serve many queries); this is the in-session equivalent.  The training
+# set the trainers share is memoized next to the centroids, and the PQ
+# codebooks and OPQ rotation live in namespace "pq_codebooks", so
 # cache-stats readers see each trained quantizer family under its own
 # name.
 def _get_ivf_centroids(
@@ -683,7 +724,10 @@ def _get_ivf_centroids(
 ) -> list[list[float]]:
     """Trained quantizer for (session, sf_dir), training on first use."""
     return cache.memo(
-        spark, "ivf_centroids", sf_dir, lambda: _train_ivf_centroids(emb)
+        spark,
+        "ivf_centroids",
+        sf_dir,
+        lambda: _train_ivf_centroids(*_training_set(spark, sf_dir, emb)),
     )
 
 
@@ -862,8 +906,9 @@ def _ivf_probes(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
         .select(
             F.col("vec_id").alias("probe_id"),
             F.col("embedding").alias("probe_emb"),
-            scored_cells.alias("cells"),  # built before the explode: see
-            # _train_ivf_centroids on generators stripping struct aliases
+            # built before the explode: a generator in the same
+            # projection strips the struct field aliases it reads
+            scored_cells.alias("cells"),
         )
         .select(
             "probe_id",
@@ -1157,86 +1202,26 @@ def _batch_codes(X, books_np):
     return out
 
 
-def _train_pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
-    """Per-subspace Lloyd\'s k-means for the PQ codebooks -> [m][k][d\']
-    (M*KS*SUB floats of driver state, corpus-size-independent).
-
-    Same recipe as the IVF coarse quantizer (_train_ivf_centroids):
-    Forgy seeds from evenly-spread deterministic ids, refinement on the
-    deterministic 1/3 sample - but the assignment+partial-mean step is
-    an Arrow ``mapInPandas`` pass (the blocked-GEMM pattern two
-    functions up): each batch assigns its vectors to codewords with one
-    numpy GEMM per subspace and emits per-(m, cell, d) partial sums and
-    counts (<= M*KS*SUB rows per batch, corpus-size-independent), which
-    one tiny groupBy reduces.  One action per iteration.  A Catalyst
-    HOF formulation was measured 10x slower at KS=256: the 16k-float
-    codebook literal made every per-row transform re-walk the nested
-    array - exactly the expression-size trap the IVF cell literal
-    note documents, past the point where the GEMM pays."""
+def _train_pq_codebooks(window, sample) -> list[list[list[float]]]:
+    """Per-subspace Lloyd's k-means for the PQ codebooks -> [m][k][d']
+    (M*KS*SUB floats of driver state).  Same recipe as the IVF coarse
+    quantizer: Forgy seeds from the whole seed window, then
+    ``_PQ_ITERS`` rounds of ``_batch_codes`` assignment and per-codeword
+    means over the sample, one subspace at a time.  ``window`` and
+    ``sample`` are raw, residual or rotated-residual rows, whichever
+    space the codes will live in."""
     import numpy as np
 
-    # ONE bounded collect for the seed window (ids + embeddings) — the
-    # id-only pass plus the isin re-scan were two full passes over the
-    # residual/rotated upstream (r14 opt, the _train_ivf_centroids
-    # treatment); the stride slice of the id-ordered rows is exactly
-    # the old filter(isin).orderBy result
-    seed_rows = (
-        emb.select("vec_id", "embedding").orderBy("vec_id").limit(_PQ_KS * 4).collect()
-    )
-    if not seed_rows:
-        raise ValueError("PQ training requires a non-empty corpus")
-    k = min(_PQ_KS, len(seed_rows))
-    stride = max(1, len(seed_rows) // k)
-    seeds = np.asarray(
-        [[float(x) for x in r.embedding] for r in seed_rows[::stride][:k]]
-    )
-    books = np.stack(
-        [seeds[:, m * _PQ_SUB : (m + 1) * _PQ_SUB] for m in range(_PQ_M)]
-    )  # (M, k, SUB); k == _PQ_KS unless the corpus is tiny
-    # materialize the 1/3 training sample ONCE for both refinement
-    # iterations (r14 opt: the %3 filter cannot push below the OPQ
-    # rotate mapInPandas, so each iteration re-ran the full
-    # residual+rotate chain; the lazy localCheckpoint pays it once)
-    sample = (
-        emb.filter(F.col("vec_id") % 3 == 0)
-        .select("embedding")
-        .localCheckpoint(eager=False)
-    )
-    if not sample.head(1):
-        return books.tolist()  # tiny corpus: Forgy seeds stand unrefined
+    seeds = _forgy(window, _PQ_KS)  # k == _PQ_KS unless the corpus is tiny
+    books = np.ascontiguousarray(
+        seeds.reshape(len(seeds), _PQ_M, _PQ_SUB).transpose(1, 0, 2)
+    )  # (M, k, SUB)
+    Xs = sample.reshape(len(sample), _PQ_M, _PQ_SUB)
     for _ in range(_PQ_ITERS):
-        bb = books
-
-        def mean_partials(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                codes = _batch_codes(X, bb)
-                Xs = X.reshape(len(X), _PQ_M, _PQ_SUB)
-                rows = []
-                for m in range(_PQ_M):
-                    for cell in np.unique(codes[:, m]):
-                        sel = Xs[codes[:, m] == cell, m, :]
-                        s = sel.sum(0)
-                        for d in range(_PQ_SUB):
-                            rows.append((m, int(cell), d, float(s[d]), len(sel)))
-                yield pd.DataFrame(
-                    rows, columns=["m", "cell", "d", "s", "c"]
-                )
-
-        means = (
-            sample.mapInPandas(
-                mean_partials, "m int, cell int, d int, s double, c long"
-            )
-            .groupBy("m", "cell", "d")
-            .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-            .collect()
+        codes = _batch_codes(sample, books)
+        books = np.stack(
+            [_cell_means(Xs[:, m], codes[:, m], books[m]) for m in range(_PQ_M)]
         )
-        new = books.copy()  # keep old codeword for empty cells
-        for r in means:
-            new[r.m, r.cell, r.d] = r.s / r.c
-        books = new
     return books.tolist()
 
 
@@ -1247,7 +1232,10 @@ def _get_pq_codebooks(
     train-once/serve-many memo discipline as the IVF quantizer, in
     namespace ``"pq_codebooks"``."""
     return cache.memo(
-        spark, "pq_codebooks", sf_dir, lambda: _train_pq_codebooks(emb)
+        spark,
+        "pq_codebooks",
+        sf_dir,
+        lambda: _train_pq_codebooks(*_training_set(spark, sf_dir, emb)),
     )
 
 
@@ -1364,16 +1352,14 @@ def _get_ivfpq_codebooks(
     and better centered than raw vectors, so the same 8-bit budget
     quantizes finer).  Memoized alongside the flat-PQ books under a
     distinct key of namespace ``"pq_codebooks"``."""
-    return cache.memo(
-        spark,
-        "pq_codebooks",
-        f"{sf_dir}#ivfpq-residual",
-        lambda: _train_pq_codebooks(
-            _residual_corpus(emb, cents).select(
-                "vec_id", F.col("residual").alias("embedding")
-            )
-        ),
-    )
+
+    def train():
+        window, sample = _training_set(spark, sf_dir, emb)
+        return _train_pq_codebooks(
+            _residuals(window, cents), _residuals(sample, cents)
+        )
+
+    return cache.memo(spark, "pq_codebooks", f"{sf_dir}#ivfpq-residual", train)
 
 
 def _ivfpq_state(
@@ -1586,29 +1572,23 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # variances balances — PQ's per-subspace codebooks then share the
 # distortion budget evenly instead of wasting codewords on a dominant
 # subspace.  The rotation is a DIM×DIM orthogonal matrix — bounded
-# model state exactly like the centroid grid — learned from ONE
-# distributed second-moment pass (the PCA GEMM machinery).
+# model state exactly like the centroid grid — learned on the driver
+# from the training sample's residual second moment.
 
 
-def _train_opq_rotation(emb: DataFrame, cents: list[list[float]]):
+def _train_opq_rotation(residuals):
     """DIM×DIM orthogonal rotation for the coarse-cell residuals:
-    eigendecompose the residual second moment (uncentered — ADC
-    distortion is governed by E[rrᵀ]; Lloyd residual means are ~0),
-    sort eigen-directions by eigenvalue, and deal them greedily into
-    the M subspaces balancing Σ log λ per subspace (the eigenvalue-
-    allocation step that makes this OPQ rather than plain PCA).  One
-    corpus pass (the covariance GEMM partials with μ=0), one eigh on
-    the driver.  Deterministic: eigh ordering + stable greedy with
+    eigendecompose the sample's residual second moment (uncentered —
+    ADC distortion is governed by E[rrᵀ]; Lloyd residual means are ~0),
+    sort eigen-directions by eigenvalue, and deal them greedily into the
+    M subspaces balancing Σ log λ per subspace (the eigenvalue-
+    allocation step that makes this OPQ rather than plain PCA).  The
+    moment comes from the training sample, not the corpus, as FAISS
+    trains OPQ.  Deterministic: eigh ordering + stable greedy with
     lowest-subspace tie-break."""
     import numpy as np
 
-    res = _residual_corpus(emb, cents).select(
-        "vec_id", F.col("residual").alias("embedding")
-    )
-    m2 = np.zeros((_DIM, _DIM))
-    for r in _covariance_partials(res, np.zeros(_DIM), _DIM).collect():
-        m2[r.i, r.j] = m2[r.j, r.i] = r.c
-    evals, evecs = np.linalg.eigh(m2)  # ascending
+    evals, evecs = np.linalg.eigh(residuals.T @ residuals)  # ascending
     order = np.argsort(evals)[::-1]
     evals, evecs = evals[order], evecs[:, order]
     # greedy allocation: next-largest eigenvalue goes to the unfilled
@@ -1625,37 +1605,17 @@ def _train_opq_rotation(emb: DataFrame, cents: list[list[float]]):
     return np.ascontiguousarray(evecs[:, perm])  # columns: subspace-ordered
 
 
-def _train_opq_pair(emb: DataFrame, cents: list[list[float]]):
-    """(rotation, codebooks) trained on ``emb``'s coarse-cell residuals
-    — the rotation from one second-moment pass, then the standard
-    residual-PQ trainer run on the ROTATED residual frame (one extra
-    Arrow rotate pass during training only — serving rotates inside the
-    existing encode/LUT numpy, no extra scan).  Pure trainer, no memo:
-    shared by the session-memoized ``_get_opq_state`` and the
-    drift-recovery ``rebuild_ivfpq_index`` (r14), which must retrain on
-    the CURRENT corpus rather than read any session state."""
-    import numpy as np
-    import pandas as pd
-
-    rot = _train_opq_rotation(emb, cents)
-    res = _residual_corpus(emb, cents).select(
-        "vec_id", F.col("residual").alias("embedding")
-    )
-
-    def rotate(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = (
-                np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-                )
-                @ rot
-            )
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "embedding": list(X)})
-
-    rotated = res.mapInPandas(rotate, "vec_id long, embedding array<double>")
-    return rot, _train_pq_codebooks(rotated)
+def _train_opq_pair(window, sample, cents):
+    """(rotation, codebooks) trained on the coarse-cell residuals of the
+    seed window and sample: the rotation from the sample's second
+    moment, then the residual-PQ trainer on the rotated rows (serving
+    rotates inside the existing encode/LUT numpy, no extra scan).  Pure
+    trainer, no memo: shared by the session-memoized ``_get_opq_state``
+    and the drift-recovery ``rebuild_ivfpq_index``, which must retrain
+    on the CURRENT corpus rather than read any session state."""
+    res_window, res_sample = _residuals(window, cents), _residuals(sample, cents)
+    rot = _train_opq_rotation(res_sample)
+    return rot, _train_pq_codebooks(res_window @ rot, res_sample @ rot)
 
 
 def _get_opq_state(spark: SparkSession, sf_dir: str, emb: DataFrame):
@@ -1665,7 +1625,10 @@ def _get_opq_state(spark: SparkSession, sf_dir: str, emb: DataFrame):
         spark,
         "pq_codebooks",
         f"{sf_dir}#opq",
-        lambda: _train_opq_pair(emb, _get_ivf_centroids(spark, sf_dir, emb)),
+        lambda: _train_opq_pair(
+            *_training_set(spark, sf_dir, emb),
+            _get_ivf_centroids(spark, sf_dir, emb),
+        ),
     )
 
 
@@ -1745,23 +1708,27 @@ def build_ivfpq_index(
     ``build_ivf_index`` layout carrying 8-bit codes instead of float
     vectors, i.e. both scale levers persisted at once (partition-pruned
     scan + ~32× smaller rows; the raw vectors stay in the source table,
-    touched only by the |shortlist|-row rerank join).  One corpus scan,
-    one Arrow encode pass, shuffle-free partitionBy write.  Returns the
+    touched only by the |shortlist|-row rerank join).  Returns the
     number of cells.
 
+    Jobs: the quantizers train in NumPy on the driver from one bounded
+    training set (two TakeOrdered collects, ``_collect_training_set``),
+    then one corpus scan with an Arrow encode pass feeds a shuffle-free
+    partitionBy write — the only corpus-sized work.
+
     ``vectors`` overrides the indexed frame (default: the whole
-    embeddings table) — both quantizers are ALWAYS the session's
+    embeddings table) — the quantizers are ALWAYS the session's
     memoized corpus-trained ones, so a partial build plus later
     ``ivfpq_index_add`` batches equals the full build row-for-row.
 
-    ``opq=True`` (r13, VERDICT r12 #1 — the missing serving piece):
-    build the ROTATED tier — the learned OPQ orthogonal matrix is
-    trained once (``_get_opq_state``), codes are encoded in the rotated
-    residual space, and the rotation is persisted in the sidecar next
-    to the centroids/codebooks, so a fresh session serves the
-    best-recall tier straight from disk (``ann_ivfpq_topk_indexed``
-    rotates probe residuals from the sidecar exactly as ``ann_opq_topk``
-    does in-session) — no retrain, no extra corpus pass at serve time."""
+    ``opq=True`` builds the ROTATED tier: the learned OPQ orthogonal
+    matrix is trained once (``_get_opq_state``), codes are encoded in
+    the rotated residual space, and the rotation is persisted in the
+    sidecar next to the centroids/codebooks, so a fresh session serves
+    the best-recall tier straight from disk (``ann_ivfpq_topk_indexed``
+    rotates probe residuals from the sidecar exactly as
+    ``ann_opq_topk`` does in-session) — no retrain, no extra corpus
+    pass at serve time."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _get_ivf_centroids(spark, sf_dir, emb)
     if opq:
@@ -1929,12 +1896,10 @@ def rebuild_ivfpq_index(
     opq: bool | None = None,
     epoch_layout: bool | None = None,
 ) -> int:
-    """DRIFT RECOVERY for a served IVFPQ(+OPQ) index (r14, VERDICT r13
-    #1 — the capability the streaming-ingest story hand-waved as
-    "periodic retrain + rebuild"): retrain the quantizer trio on the
-    CURRENT corpus and re-encode every vector FROM THE SOURCE
-    embeddings into a fresh cell-partitioned inverted file + sidecar at
-    ``new_path``.
+    """DRIFT RECOVERY for a served IVFPQ(+OPQ) index: retrain the
+    quantizer trio on the CURRENT corpus and re-encode every vector
+    FROM THE SOURCE embeddings into a fresh cell-partitioned inverted
+    file + sidecar at ``new_path``.
 
     Why this exists: ``ivfpq_index_add`` / the streaming ingest encode
     every arrival under the quantizer FROZEN at base-build time — by
@@ -1952,9 +1917,11 @@ def rebuild_ivfpq_index(
     already live).  Unlike ``build_ivfpq_index``, BOTH the training and
     the encode read that frame directly, never the session memos: a
     rebuild that read the memoized trio would reproduce the stale
-    quantizer it exists to retire.  ``opq=None`` inherits the tier from
-    ``old_path``'s sidecar (rotation present → rotated tier).  Returns
-    the number of cells.
+    quantizer it exists to retire.  It collects its own training set
+    once and feeds every trainer from it; the sample is hash-chosen
+    over all ids, so new arrivals are trained on.  ``opq=None``
+    inherits the tier from ``old_path``'s sidecar (rotation present →
+    rotated tier).  Returns the number of cells.
 
     A STREAM-MAINTAINED old index (epoch-partitioned —
     streaming/vector_ingest.py) rebuilds into the same (epoch, cell)
@@ -1966,10 +1933,12 @@ def rebuild_ivfpq_index(
     exist yet, so the fresh-checkpoint guard stays quiet).  Layout is
     inherited from ``old_path``; ``epoch_layout`` overrides it.
 
-    100 TB shape: identical to the from-scratch build — Lloyd/OPQ
-    training passes + one encode scan + a shuffle-free partitioned
-    write; the old index serves throughout, so the rebuild is a
-    background job, not downtime."""
+    100 TB shape: training is two bounded collects (the seed window and
+    a sample of at most ``_TRAIN_SAMPLE_CAP`` rows) and driver NumPy, so
+    its cost does not grow with the corpus; the one corpus-sized step is
+    the encode scan + a shuffle-free partitioned write.  The old index
+    serves throughout, so the rebuild is a background job, not
+    downtime."""
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = vectors if vectors is not None else emb
     if opq is None:
@@ -1993,15 +1962,14 @@ def rebuild_ivfpq_index(
                 st.getPath().getName().startswith("epoch=")
                 for st in fs.listStatus(p)
             )
-    cents = _train_ivf_centroids(corpus)
+    window, sample = _collect_training_set(corpus)
+    cents = _train_ivf_centroids(window, sample)
     if opq:
-        rot, books = _train_opq_pair(corpus, cents)
+        rot, books = _train_opq_pair(window, sample, cents)
     else:
         rot = None
         books = _train_pq_codebooks(
-            _residual_corpus(corpus, cents).select(
-                "vec_id", F.col("residual").alias("embedding")
-            )
+            _residuals(window, cents), _residuals(sample, cents)
         )
     books_np = _np_books(books)
     coded = _ivfpq_encode_frame(corpus, cents, books_np, rotate_np=rot)

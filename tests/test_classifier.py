@@ -513,9 +513,15 @@ def test_holdout_eval_repeat_calls_accumulate_nothing(spark):
 
     clear_classifier_cache(spark)
     jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        # ids, not a size: the ContextCleaner may drop an earlier test's
+        # RDD mid-call, and equal sizes could hide a leak plus a cleanup
+        return set(jsc.getPersistentRDDs().keySet())
+
     classifier_holdout_eval(spark, SF0001).collect()
-    after_first = jsc.getPersistentRDDs().size()
+    after_first = persistent_ids()
     classifier_holdout_eval(spark, SF0001).collect()
     classifier_holdout_eval(spark, SF0001).collect()
-    assert jsc.getPersistentRDDs().size() == after_first
+    assert persistent_ids() - after_first == set()
     clear_classifier_cache(spark)

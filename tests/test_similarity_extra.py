@@ -785,3 +785,119 @@ def test_lit_double_array_exact_roundtrip(spark):
     assert [bits(x) for x in row.a] == [bits(x) for x in row.b]
     assert [bits(x) for x in row.m[0]] == [bits(v) for v in vals]
     assert [bits(x) for x in row.m[1]] == [bits(v) for v in reversed(vals)]
+
+
+def _jobs_launched(spark, group, fn):
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_quantizer_training_job_budget(spark, tmp_path):
+    """The quantizer trio trains in NumPy from one bounded training set:
+    the IVF centroids plus the OPQ pair for a fresh corpus cost the two
+    TakeOrdered collects (seed window + sample), and a drift rebuild
+    adds only the encode + write."""
+    from distributed_graph_coloring_with_pyspark_spark import cache
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
+    try:
+        emb = S.load_table(spark, SF, "embeddings")
+
+        def train_trio():
+            S._get_ivf_centroids(spark, SF, emb)
+            S._get_opq_state(spark, SF, emb)
+
+        assert _jobs_launched(spark, "quantizer-trio", train_trio) <= 3
+        rebuild = _jobs_launched(
+            spark,
+            "quantizer-rebuild",
+            lambda: S.rebuild_ivfpq_index(
+                spark, SF, None, str(tmp_path / "idx"), opq=True
+            ),
+        )
+        assert rebuild <= 6
+    finally:
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
+
+
+def test_training_sample_is_capped_and_spread_over_ids(spark, monkeypatch):
+    """Uncapped, the sample is exactly the ``vec_id % 3 == 0`` third.
+    With the cap at 50 the trainers get exactly 50 of those rows, the
+    same ones on every build, chosen by hash rather than by id order: a
+    lowest-ids sample would never see new arrivals."""
+    import numpy as np
+
+    from distributed_graph_coloring_with_pyspark_spark import cache
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    emb = S.load_table(spark, SF, "embeddings")
+    corpus = {r.vec_id: r.embedding for r in emb.collect()}
+    id_of = {tuple(v): i for i, v in corpus.items()}
+    assert len(id_of) == len(corpus)  # every vector names its row
+    third = {i for i in corpus if i % 3 == 0}
+    assert len(third) > 50
+    _, full = S._collect_training_set(emb)
+    assert sorted(id_of[tuple(v)] for v in full) == sorted(third)
+
+    monkeypatch.setattr(S, "_TRAIN_SAMPLE_CAP", 50)
+    window, sample = S._collect_training_set(emb)
+    ids = [id_of[tuple(v)] for v in sample]
+    assert len(sample) == len(set(ids)) == 50
+    assert set(ids) <= third
+    assert max(ids) > np.median(sorted(corpus))
+    assert len(window) == min(len(corpus), S._PQ_KS * 4)
+
+    seen = []
+    train = S._train_ivf_centroids
+    monkeypatch.setattr(
+        S, "_train_ivf_centroids", lambda w, s: seen.append(s) or train(w, s)
+    )
+    try:
+        for _ in range(2):
+            cache.release(spark, "ivf_centroids")
+            S._get_ivf_centroids(spark, SF, emb)
+        assert len(seen) == 2
+        assert all(np.array_equal(s, sample) for s in seen)
+    finally:
+        cache.release(spark, "ivf_centroids")
+
+
+def test_numpy_cell_assignment_matches_catalyst(spark):
+    """The NumPy trainers assign cells and residuals as the Catalyst
+    encode path does, ties included: with cell 0 duplicated at the end,
+    both send cell 0's rows to the duplicate (the larger index)."""
+    import numpy as np
+
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    emb = S.load_table(spark, SF, "embeddings")
+    trained = S._train_ivf_centroids(*S._collect_training_set(emb))
+    cents = trained + [trained[0]]
+    rows = S._residual_corpus(emb, cents).orderBy("vec_id").collect()
+    X = np.array([r.embedding for r in rows], dtype=np.float64)
+    cells = S._np_nearest_cell(X, np.array(cents))
+    assert cells.tolist() == [r.cell for r in rows]
+    assert 0 not in set(cells.tolist()) and len(cents) - 1 in set(cells.tolist())
+    res = S._residuals(X, cents)
+    assert np.abs(res - np.array([r.residual for r in rows])).max() < 1e-12

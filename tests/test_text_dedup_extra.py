@@ -727,10 +727,16 @@ def test_epoch_shuffle_repeat_calls_accumulate_nothing(spark):
     )
 
     jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+
+    def persistent_ids():
+        # ids, not a size: the ContextCleaner may drop an earlier test's
+        # RDD mid-call, and equal sizes could hide a leak plus a cleanup
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persistent_ids()
     first = epoch_shuffle_manifest(spark, SF)
-    assert jsc.getPersistentRDDs().size() == before
+    assert persistent_ids() - before == set()
     n1 = first.count()
     epoch_shuffle_manifest(spark, SF).count()
-    assert jsc.getPersistentRDDs().size() == before
+    assert persistent_ids() - before == set()
     assert n1 > 0

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import math
 import random
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -753,21 +754,14 @@ def _write_quantizer_sidecar(
     books=None,
     rotation=None,
 ) -> None:
-    """Persist the index's OWN quantizer next to its partitions (r12,
-    VERDICT r11 #6 follow-through): without this, a fresh session
-    querying an existing index RETRAINS the quantizer from the source
-    table — identical on an immutable corpus (Lloyd is deterministic)
-    but silently divergent once the corpus has grown past the build,
-    which mis-probes cells the index never assigned.  JSON floats
-    round-trip exactly (shortest-repr), so sidecar state ≡ the session
-    memo that built the index.  ``rotation`` (r13) persists the OPQ
-    orthogonal matrix so the rotated tier serves from disk.
-
-    Durability (ADVICE r12): the bytes go to a dot-prefixed temp file
-    first and are RENAMED over the final name, so a crash mid-write can
-    never leave a truncated ``_quantizer.json`` — readers see the old
-    sidecar or the new one, never half of either.  All IO goes through
-    the Hadoop FileSystem API (local / HDFS / object store alike)."""
+    """Persist an index's own quantizer as ``_quantizer.json`` inside the
+    index dir: the centroids, plus the residual codebooks and the OPQ
+    rotation for an IVFPQ index.  Serving, adds and the drift report
+    read it back, so a later session, or a source table that has grown
+    since the build, never re-derives a quantizer the stored cells and
+    codes were not made under.  JSON floats round-trip exactly
+    (shortest repr).  The write is atomic (``_atomic_json_write``):
+    readers see the old sidecar or the new one, never part of either."""
     payload: dict = {"centroids": cents}
     if books is not None:
         payload["codebooks"] = books
@@ -825,23 +819,14 @@ def _atomic_json_write(
 
 
 def _read_quantizer_sidecar(spark: SparkSession, index_path: str):
-    """The index's persisted quantizer, or None for a pre-r12 artifact
-    with NO sidecar (callers then fall back to the session-memoized
-    trainer — correct for those artifacts, which were always built from
-    the session's corpus-trained quantizer).
-
-    A sidecar that EXISTS but cannot be read or parsed RAISES instead
-    (tightened in r13 after review): since the OPQ tier landed, the
-    session fallback is no longer guaranteed equivalent — an OPQ index
-    served or (worse) APPENDED TO with the unrotated session quantizer
-    silently returns wrong neighbors / permanently mixes wrong-space
-    codes into the index.  The write path is atomic (temp + FileContext
-    OVERWRITE rename), so an unreadable sidecar means external
-    tampering or real IO failure — both deserve a loud, actionable
-    error, not a warning the job outlives.  (ADVICE r12 asked that
-    corruption not surface as a bare JSONDecodeError on every serve;
-    the clear diagnosis is kept, the silent fallback is not, because
-    it stopped being safe.)"""
+    """The index's persisted quantizer as the raw sidecar dict, or None
+    when the index has no sidecar.  A sidecar that exists but cannot be
+    read or parsed raises ``ValueError``: the write is atomic, so an
+    unreadable one means tampering or an IO failure, and any quantizer
+    guessed in its place could serve wrong neighbours or append codes
+    in the wrong space.  IVFPQ readers go through ``_index_quantizer``,
+    which also refuses an absent sidecar; only the plain IVF readers
+    treat absence as a legacy index and train in-session."""
     return _read_json_sidecar(
         spark,
         index_path,
@@ -884,17 +869,6 @@ def _read_json_sidecar(
             f"{describe} at {dir_path} exists but is unreadable "
             f"({type(exc).__name__}) — {refusal}"
         ) from exc
-
-
-def _sidecar_rotation(side):
-    """The persisted OPQ rotation as float64, or None for an unrotated
-    index — the one place the payload key is interpreted (three
-    consumers: batch add, indexed serve, streaming ingest)."""
-    import numpy as np
-
-    if side and side.get("rotation") is not None:
-        return np.asarray(side["rotation"], dtype=np.float64)
-    return None
 
 
 def _ivf_probes(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
@@ -1341,50 +1315,235 @@ def _residual_corpus(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
     return corpus.withColumn("residual", res)
 
 
+def _train_residual_books(window, sample, cents) -> list[list[list[float]]]:
+    """Residual PQ codebooks: the PQ trainer on the coarse-cell
+    residuals of the seed window and sample (the IVFPQ recipe:
+    residuals are smaller and better centred than raw vectors, so the
+    same 8-bit budget quantizes finer)."""
+    return _train_pq_codebooks(_residuals(window, cents), _residuals(sample, cents))
+
+
 def _get_ivfpq_codebooks(
     spark: SparkSession,
     sf_dir: str,
     emb: DataFrame,
     cents: list[list[float]],
 ) -> list[list[list[float]]]:
-    """Residual PQ codebooks for (session, sf_dir) — trained on the
-    coarse-quantizer RESIDUALS (the IVFPQ recipe: residuals are smaller
-    and better centered than raw vectors, so the same 8-bit budget
-    quantizes finer).  Memoized alongside the flat-PQ books under a
-    distinct key of namespace ``"pq_codebooks"``."""
-
-    def train():
-        window, sample = _training_set(spark, sf_dir, emb)
-        return _train_pq_codebooks(
-            _residuals(window, cents), _residuals(sample, cents)
-        )
-
-    return cache.memo(spark, "pq_codebooks", f"{sf_dir}#ivfpq-residual", train)
+    """Residual PQ codebooks for (session, sf_dir), memoized alongside
+    the flat-PQ books under a distinct key of namespace
+    ``"pq_codebooks"``."""
+    return cache.memo(
+        spark,
+        "pq_codebooks",
+        f"{sf_dir}#ivfpq-residual",
+        lambda: _train_residual_books(*_training_set(spark, sf_dir, emb), cents),
+    )
 
 
-def _ivfpq_state(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame,
-    cents: list[list[float]] | None = None,
-    books_np=None,
-    rotate_np=None,
-):
-    """Bounded driver state shared by the in-session and indexed IVFPQ
-    paths: (books, probe ids, probed cells per probe, per-(probe,
-    probed-cell) ADC tables) — every array corpus-size-independent by
-    the fixed probe/K/M/KS contract.  Probed cells replicate the
-    Catalyst ``_ivf_probes`` (cosine, idx)-descending order on the
-    driver because the LUTs need the probed centroid VALUES, not just
-    a cell join."""
+# --- OPQ: learned orthogonal rotation ahead of PQ ------------------------
+# Parametric OPQ (Ge et al., "Optimized Product Quantization", CVPR
+# 2013, §4 "OPQ-P"): PCA-rotate the residual space, then allocate
+# eigen-directions to the M subspaces so the PRODUCT of per-subspace
+# variances balances — PQ's per-subspace codebooks then share the
+# distortion budget evenly instead of wasting codewords on a dominant
+# subspace.  The rotation is a DIM×DIM orthogonal matrix — bounded
+# model state exactly like the centroid grid — learned on the driver
+# from the training sample's residual second moment.
+
+
+def _train_opq_rotation(residuals):
+    """DIM×DIM orthogonal rotation for the coarse-cell residuals:
+    eigendecompose the sample's residual second moment (uncentered —
+    ADC distortion is governed by E[rrᵀ]; Lloyd residual means are ~0),
+    sort eigen-directions by eigenvalue, and deal them greedily into the
+    M subspaces balancing Σ log λ per subspace (the eigenvalue-
+    allocation step that makes this OPQ rather than plain PCA).  The
+    moment comes from the training sample, not the corpus, as FAISS
+    trains OPQ.  Deterministic: eigh ordering + stable greedy with
+    lowest-subspace tie-break."""
     import numpy as np
 
-    if cents is None:
-        cents = _get_ivf_centroids(spark, sf_dir, emb)
-    if books_np is None:
-        books_np = _np_books(_get_ivfpq_codebooks(spark, sf_dir, emb, cents))
-    C = np.asarray(cents, dtype=np.float64)  # (K, DIM)
-    k_cells = len(cents)
+    evals, evecs = np.linalg.eigh(residuals.T @ residuals)  # ascending
+    order = np.argsort(evals)[::-1]
+    evals, evecs = evals[order], evecs[:, order]
+    # greedy allocation: next-largest eigenvalue goes to the unfilled
+    # subspace with the smallest running log-product
+    slots = [[] for _ in range(_PQ_M)]
+    load = [0.0] * _PQ_M
+    floor = max(float(evals[-1]), 1e-12)
+    for d in range(_DIM):
+        cands = [m for m in range(_PQ_M) if len(slots[m]) < _PQ_SUB]
+        m = min(cands, key=lambda i: (load[i], i))
+        slots[m].append(d)
+        load[m] += float(np.log(max(float(evals[d]), floor * 1e-6)))
+    perm = [d for m in range(_PQ_M) for d in slots[m]]
+    return np.ascontiguousarray(evecs[:, perm])  # columns: subspace-ordered
+
+
+def _train_opq_pair(window, sample, cents):
+    """(rotation, codebooks) trained on the coarse-cell residuals of the
+    seed window and sample: the rotation from the sample's second
+    moment, then the PQ trainer on the rotated rows.  Pure trainer, no
+    memo: shared by the session-memoized ``_get_opq_state`` and the
+    memo-free ``_train_quantizer``."""
+    res_window, res_sample = _residuals(window, cents), _residuals(sample, cents)
+    rot = _train_opq_rotation(res_sample)
+    return rot, _train_pq_codebooks(res_window @ rot, res_sample @ rot)
+
+
+def _get_opq_state(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """(rotation, codebooks) for (session, corpus), memoized alongside
+    the PQ books in namespace ``"pq_codebooks"``."""
+    return cache.memo(
+        spark,
+        "pq_codebooks",
+        f"{sf_dir}#opq",
+        lambda: _train_opq_pair(
+            *_training_set(spark, sf_dir, emb),
+            _get_ivf_centroids(spark, sf_dir, emb),
+        ),
+    )
+
+
+# --- the IVFPQ(+OPQ) quantizer as one value ------------------------------
+
+
+class Quantizer(NamedTuple):
+    """One IVFPQ quantizer: the K×DIM coarse centroids (lists, the form
+    the Catalyst cell assignment takes), the (M, KS, SUB) float64
+    residual codebooks, and the DIM×DIM OPQ rotation, or None for the
+    unrotated tier.  Codes mean something only under the quantizer that
+    encoded them, so every IVFPQ step takes one of these whole: from the
+    session trainer (``_session_quantizer``), a memo-free retrain
+    (``_train_quantizer``) or an index's sidecar (``_index_quantizer``)."""
+
+    centroids: list
+    books: Any
+    rotation: Any = None
+
+
+def _session_quantizer(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, opq: bool
+) -> Quantizer:
+    """The session-memoized quantizer for (session, sf_dir): the IVF
+    centroids, then the OPQ pair (``opq=True``) or the plain residual
+    codebooks, each under its own memo key."""
+    cents = _get_ivf_centroids(spark, sf_dir, emb)
+    if opq:
+        rot, books = _get_opq_state(spark, sf_dir, emb)
+    else:
+        rot, books = None, _get_ivfpq_codebooks(spark, sf_dir, emb, cents)
+    return Quantizer(cents, _np_books(books), rot)
+
+
+def _train_quantizer(window, sample, opq: bool) -> Quantizer:
+    """``_session_quantizer``'s training without any memo, from one
+    training set (``_collect_training_set``)."""
+    cents = _train_ivf_centroids(window, sample)
+    if opq:
+        rot, books = _train_opq_pair(window, sample, cents)
+    else:
+        rot, books = None, _train_residual_books(window, sample, cents)
+    return Quantizer(cents, _np_books(books), rot)
+
+
+def _index_quantizer(spark: SparkSession, index_path: str) -> Quantizer:
+    """The quantizer an IVFPQ index at ``index_path`` (a concrete dir,
+    not a versioned root) was encoded under, from its sidecar.  Raises
+    ``ValueError`` when the sidecar is absent or carries no codebooks
+    (a plain IVF index): the stored codes cannot be served, extended or
+    decoded under any other quantizer, so the index must be rebuilt."""
+    import numpy as np
+
+    side = _read_quantizer_sidecar(spark, index_path)
+    if not side or "codebooks" not in side:
+        raise ValueError(
+            f"index at {index_path} has no IVFPQ quantizer sidecar "
+            f"({_QUANTIZER_SIDECAR} with codebooks): its codes can only be "
+            "read under the quantizer that encoded them; rebuild the index"
+        )
+    rot = side.get("rotation")
+    return Quantizer(
+        side["centroids"],
+        _np_books(side["codebooks"]),
+        None if rot is None else np.asarray(rot, dtype=np.float64),
+    )
+
+
+def _ivfpq_encode_frame(vectors: DataFrame, q: Quantizer) -> DataFrame:
+    """(vec_id, cell, codes) for a vector frame under the fixed
+    quantizer ``q``: cell assignment and residual in Catalyst, then one
+    Arrow pass that rotates the residuals (OPQ tier) and takes the
+    codeword argmin.  Every IVFPQ path encodes here — builds, adds,
+    streaming epochs and the in-session queries — so any two of them
+    agree code for code under the same quantizer."""
+    import numpy as np
+
+    books, rot = q.books, q.rotation  # all the workers need
+
+    def encode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            X = np.stack(pdf["residual"].to_numpy()).astype(np.float64)
+            if rot is not None:
+                X = X @ rot
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "cell": pdf["cell"],
+                    "codes": list(_batch_codes(X, books)),
+                }
+            )
+
+    return (
+        _residual_corpus(vectors, q.centroids)
+        .select("vec_id", "cell", "residual")
+        .mapInPandas(encode, "vec_id long, cell int, codes array<int>")
+    )
+
+
+_BASE_EPOCH = -1  # epoch of the build in an (epoch, cell) layout;
+# streamed epochs start at 0, so no ingest epoch can overwrite the base
+
+
+def _write_ivfpq_index(
+    vectors: DataFrame, path: str, q: Quantizer, epoch_layout: bool
+) -> int:
+    """Encode ``vectors`` under ``q`` and write a fresh IVFPQ index at
+    ``path``: ``cell=N`` partitions, or ``epoch=-1/cell=N`` ones for a
+    stream-maintained index, then the sidecar (after the data, so a
+    sidecar never describes codes that are not there).  One corpus scan
+    and Arrow encode feed a shuffle-free partitioned write.  Returns the
+    number of cells."""
+    coded = _ivfpq_encode_frame(vectors, q)
+    parts = ["cell"]
+    if epoch_layout:
+        coded = coded.withColumn("epoch", F.lit(_BASE_EPOCH))
+        parts = ["epoch", "cell"]
+    coded.write.mode("overwrite").partitionBy(*parts).parquet(path)
+    _write_quantizer_sidecar(
+        vectors.sparkSession,
+        path,
+        q.centroids,
+        q.books.tolist(),
+        rotation=None if q.rotation is None else q.rotation.tolist(),
+    )
+    return len(q.centroids)
+
+
+def _ivfpq_state(emb: DataFrame, q: Quantizer):
+    """Bounded driver state of an IVFPQ query: (probe ids, probed cells
+    per probe, per-(probe, probed-cell) ADC tables), every array
+    corpus-size-independent by the fixed probe/K/M/KS contract.  Probed
+    cells replicate the Catalyst ``_ivf_probes`` (cosine, idx)-descending
+    order on the driver because the tables need the probed centroid
+    values, not just a cell join.  On the OPQ tier the probe residuals
+    are rotated into the space the codebooks live in."""
+    import numpy as np
+
+    C = np.asarray(q.centroids, dtype=np.float64)  # (K, DIM)
+    k_cells = len(C)
     nprobe = min(_IVF_NPROBE, k_cells)
     probe_rows = (
         emb.filter(F.col("vec_id") < _N_PROBES)
@@ -1412,33 +1571,22 @@ def _ivfpq_state(
     )  # (n_probes, nprobe), each row sorted for searchsorted slots
     # per-(probe, probed-cell) residual ADC tables: (n_probes, nprobe, M, KS)
     R = P[:, None, :] - C[probed]  # probe residual vs each probed centroid
-    if rotate_np is not None:  # OPQ: rotate probe residuals to match
-        R = R @ rotate_np  # the rotated-codebook space (r' = Qᵀr)
+    if q.rotation is not None:
+        R = R @ q.rotation  # r' = Qᵀr, the rotated-codebook space
     Rs = R.reshape(len(probe_ids), nprobe, _PQ_M, 1, _PQ_SUB)
-    luts = ((Rs - books_np[None, None]) ** 2).sum(-1)
-    return cents, books_np, probe_ids, probed, luts
+    luts = ((Rs - q.books[None, None]) ** 2).sum(-1)
+    return probe_ids, probed, luts
 
 
-def _ivfpq_adc_scan(
-    frame: DataFrame,
-    books_np,
-    probe_ids,
-    probed,
-    luts,
-    stored_codes: bool,
-    rotate_np=None,
-) -> DataFrame:
-    """ADC scan shared by both IVFPQ paths: one pass over (vec_id, cell,
-    residual|codes) emitting per-batch partial top-``_PQ_SHORTLIST``
-    rows per probe — the corpus-sized score stream never shuffles.
-    ``stored_codes=True`` reads pre-encoded codes (the persisted index);
-    ``False`` encodes residuals in the same pass (the in-session path).
-    Either way the codes come from the same ``_batch_codes`` argmin, so
-    the two paths score identically; identical scores alone would NOT
-    pin identical results (physical batching differs between the two
-    paths), so the per-batch cut below additionally keeps the
-    (adc_dist, vec_id)-smallest rows — together these make the
-    indexed-equality test's pin exact, not probabilistic."""
+def _ivfpq_adc_scan(frame: DataFrame, probe_ids, probed, luts) -> DataFrame:
+    """ADC scan over (vec_id, cell, codes): one pass emitting per-batch
+    partial top-``_PQ_SHORTLIST`` rows per probe, so the corpus-sized
+    score stream never shuffles.  Each batch keeps its
+    (adc_dist, vec_id)-smallest rows, not an arbitrary subset of the
+    boundary ties, so every globally top-ranked row survives its batch
+    and the result does not depend on how rows fall into batches: a
+    stored index and an in-session encode of the same codes answer
+    identically."""
     import numpy as np
 
     def adc_batches(batches):
@@ -1446,13 +1594,7 @@ def _ivfpq_adc_scan(
 
         midx = np.arange(_PQ_M)
         for pdf in batches:
-            if stored_codes:
-                codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            else:
-                X = np.stack(pdf["residual"].to_numpy()).astype(np.float64)
-                if rotate_np is not None:  # OPQ-rotated codebook space
-                    X = X @ rotate_np
-                codes = _batch_codes(X, books_np)
+            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
             cells = pdf["cell"].to_numpy().astype(np.int64)
             vids = pdf["vec_id"].to_numpy()
             frames = []
@@ -1467,18 +1609,7 @@ def _ivfpq_adc_scan(
                 if keep == len(d):
                     top = np.arange(len(d))
                 else:
-                    # Deterministic cut (ADVICE r11): argpartition keeps
-                    # an ARBITRARY subset of boundary-distance ties, so
-                    # batch composition (which differs between the
-                    # in-session and indexed scans) could change which
-                    # tied rows survive.  Keep the (adc_dist, vec_id)-
-                    # lexicographically smallest `keep` rows instead:
-                    # each batch then retains every globally-top-k row
-                    # it holds, making the downstream global window's
-                    # result independent of batching — the indexed ≡
-                    # in-session identity becomes structural.  The
-                    # O(t log t) lexsort runs only over the ≤keep+ties
-                    # boundary candidates, not the whole batch.
+                    # lexsort only the ≤ keep + ties boundary candidates
                     part = np.argpartition(d, keep - 1)
                     thresh = d[part[keep - 1]]
                     cand = np.flatnonzero(d <= thresh)
@@ -1529,6 +1660,30 @@ def _ivfpq_shortlist_rerank(emb: DataFrame, adc: DataFrame) -> DataFrame:
     return _topk_per_probe(rerank)
 
 
+def _ivfpq_topk(emb: DataFrame, q: Quantizer, codes: DataFrame) -> DataFrame:
+    """IVFPQ top-k for the probes of ``emb`` over a (vec_id, cell, codes)
+    frame encoded under ``q``, stored or in-session alike: the probed
+    cell ids go into an IN filter on ``cell`` (a parquet partition
+    filter on a stored index, so unprobed cells never leave disk), then
+    the ADC scan and the exact rerank."""
+    probe_ids, probed, luts = _ivfpq_state(emb, q)
+    probed_cells = sorted({int(c) for row in probed for c in row})
+    corpus = codes.filter(F.col("cell").isin(probed_cells)).select(
+        "vec_id", "cell", "codes"
+    )
+    adc = _ivfpq_adc_scan(corpus, probe_ids, probed, luts)
+    return _ivfpq_shortlist_rerank(emb, adc)
+
+
+def _session_ivfpq_topk(spark: SparkSession, sf_dir: str, opq: bool) -> DataFrame:
+    """In-session IVFPQ top-k: the session quantizer encodes the corpus
+    in one Arrow pass and the shared scan reads those codes, exactly as
+    it reads a stored index's."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = _session_quantizer(spark, sf_dir, emb, opq)
+    return _ivfpq_topk(emb, q, _ivfpq_encode_frame(emb, q))
+
+
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN top-5 for the same probes as ``knn_exact_topk`` — the
     composite billion-vector serving design (FAISS ``IVFx,PQy``): the
@@ -1541,158 +1696,31 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     detail that distinguishes real IVFPQ from flat PQ behind an IVF
     filter — and every candidate row is scored by M table lookups.
 
-    Scale shape: ONE corpus pass computes cell + residual codes and
-    emits only map-side partial top-k (``_ivfpq_adc_scan``); the
-    persisted twin (``build_ivfpq_index`` + ``ann_ivfpq_topk_indexed``)
-    stores the codes in the cell-partitioned inverted file so the scan
-    also partition-prunes to probed cells.  Driver state is bounded by
-    contract: probes (``_N_PROBES``×DIM), probed-cell ids
-    (×``_IVF_NPROBE``), centroids (K×DIM), codebooks (M·KS·SUB), and
-    the LUT block (probes×NPROBE×M×KS doubles).  Exact-cosine rerank of
-    the shortlist restores float precision; recall vs the exact query
-    is pytest-gated (tests/test_similarity.py), rows-only otherwise —
-    ADC ranks are not SQL-hash-reproducible."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents, books_np, probe_ids, probed, luts = _ivfpq_state(spark, sf_dir, emb)
-    adc = _ivfpq_adc_scan(
-        _residual_corpus(emb, cents).select("vec_id", "cell", "residual"),
-        books_np,
-        probe_ids,
-        probed,
-        luts,
-        stored_codes=False,
-    )
-    return _ivfpq_shortlist_rerank(emb, adc)
-
-
-# --- OPQ: learned orthogonal rotation ahead of PQ (r12) ------------------
-# Parametric OPQ (Ge et al., "Optimized Product Quantization", CVPR
-# 2013, §4 "OPQ-P"): PCA-rotate the residual space, then allocate
-# eigen-directions to the M subspaces so the PRODUCT of per-subspace
-# variances balances — PQ's per-subspace codebooks then share the
-# distortion budget evenly instead of wasting codewords on a dominant
-# subspace.  The rotation is a DIM×DIM orthogonal matrix — bounded
-# model state exactly like the centroid grid — learned on the driver
-# from the training sample's residual second moment.
-
-
-def _train_opq_rotation(residuals):
-    """DIM×DIM orthogonal rotation for the coarse-cell residuals:
-    eigendecompose the sample's residual second moment (uncentered —
-    ADC distortion is governed by E[rrᵀ]; Lloyd residual means are ~0),
-    sort eigen-directions by eigenvalue, and deal them greedily into the
-    M subspaces balancing Σ log λ per subspace (the eigenvalue-
-    allocation step that makes this OPQ rather than plain PCA).  The
-    moment comes from the training sample, not the corpus, as FAISS
-    trains OPQ.  Deterministic: eigh ordering + stable greedy with
-    lowest-subspace tie-break."""
-    import numpy as np
-
-    evals, evecs = np.linalg.eigh(residuals.T @ residuals)  # ascending
-    order = np.argsort(evals)[::-1]
-    evals, evecs = evals[order], evecs[:, order]
-    # greedy allocation: next-largest eigenvalue goes to the unfilled
-    # subspace with the smallest running log-product
-    slots = [[] for _ in range(_PQ_M)]
-    load = [0.0] * _PQ_M
-    floor = max(float(evals[-1]), 1e-12)
-    for d in range(_DIM):
-        cands = [m for m in range(_PQ_M) if len(slots[m]) < _PQ_SUB]
-        m = min(cands, key=lambda i: (load[i], i))
-        slots[m].append(d)
-        load[m] += float(np.log(max(float(evals[d]), floor * 1e-6)))
-    perm = [d for m in range(_PQ_M) for d in slots[m]]
-    return np.ascontiguousarray(evecs[:, perm])  # columns: subspace-ordered
-
-
-def _train_opq_pair(window, sample, cents):
-    """(rotation, codebooks) trained on the coarse-cell residuals of the
-    seed window and sample: the rotation from the sample's second
-    moment, then the residual-PQ trainer on the rotated rows (serving
-    rotates inside the existing encode/LUT numpy, no extra scan).  Pure
-    trainer, no memo: shared by the session-memoized ``_get_opq_state``
-    and the drift-recovery ``rebuild_ivfpq_index``, which must retrain
-    on the CURRENT corpus rather than read any session state."""
-    res_window, res_sample = _residuals(window, cents), _residuals(sample, cents)
-    rot = _train_opq_rotation(res_sample)
-    return rot, _train_pq_codebooks(res_window @ rot, res_sample @ rot)
-
-
-def _get_opq_state(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    """(rotation, codebooks) for (session, corpus), memoized alongside
-    the PQ books in namespace ``"pq_codebooks"``."""
-    return cache.memo(
-        spark,
-        "pq_codebooks",
-        f"{sf_dir}#opq",
-        lambda: _train_opq_pair(
-            *_training_set(spark, sf_dir, emb),
-            _get_ivf_centroids(spark, sf_dir, emb),
-        ),
-    )
+    Scale shape: one corpus pass encodes cell + residual codes
+    (``_ivfpq_encode_frame``) and feeds the ADC scan in the same stage,
+    which emits only map-side partial top-k; the persisted twin
+    (``build_ivfpq_index`` + ``ann_ivfpq_topk_indexed``) stores those
+    codes cell-partitioned so its scan also prunes to probed cells.
+    Driver state is bounded by contract: probes (``_N_PROBES``×DIM),
+    probed-cell ids (×``_IVF_NPROBE``), centroids (K×DIM), codebooks
+    (M·KS·SUB), and the LUT block (probes×NPROBE×M×KS doubles).
+    Exact-cosine rerank of the shortlist restores float precision;
+    recall vs the exact query is pytest-gated (tests/test_similarity.py),
+    rows-only otherwise — ADC ranks are not SQL-hash-reproducible."""
+    return _session_ivfpq_topk(spark, sf_dir, opq=False)
 
 
 def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-OPQ-PQ ANN top-5 — ``ann_ivfpq_topk`` with a learned
     orthogonal rotation between the coarse quantizer and PQ (FAISS
-    ``OPQx_y,IVFk,PQx`` practice; VERDICT r11 "What's missing" #3).
-    Identical plan shape and driver-state contract as the plain
-    composite: the rotation adds one DIM×DIM matmul inside the existing
-    Arrow encode batch and the LUT build — no extra corpus pass at
-    serve time.  Gates (tests/test_similarity_extra.py): rotation
-    orthogonality, subspace-variance balance vs unrotated, recall ≥
-    the 0.85 family floor on the graded fixture, exact-rerank tail
-    identical to the other tiers."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = _get_ivf_centroids(spark, sf_dir, emb)
-    rot, books = _get_opq_state(spark, sf_dir, emb)
-    cents_list, books_np, probe_ids, probed, luts = _ivfpq_state(
-        spark, sf_dir, emb, cents=cents, books_np=_np_books(books), rotate_np=rot
-    )
-    adc = _ivfpq_adc_scan(
-        _residual_corpus(emb, cents).select("vec_id", "cell", "residual"),
-        books_np,
-        probe_ids,
-        probed,
-        luts,
-        stored_codes=False,
-        rotate_np=rot,
-    )
-    return _ivfpq_shortlist_rerank(emb, adc)
-
-
-def _ivfpq_encode_frame(
-    vectors: DataFrame, cents: list[list[float]], books_np, rotate_np=None
-) -> DataFrame:
-    """(vec_id, cell, codes) for a vector frame under a FIXED quantizer
-    pair — cell assignment + residual in Catalyst, codeword argmin in
-    one Arrow pass.  Shared by the full build and incremental adds so
-    partial-build+adds equals the full build row-for-row.  ``rotate_np``
-    (r13): encode in the OPQ-rotated residual space — one DIM×DIM
-    matmul inside the existing Arrow batch, no extra corpus pass,
-    exactly where ``_ivfpq_adc_scan``'s in-session path applies it."""
-    import numpy as np
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            X = np.stack(pdf["residual"].to_numpy()).astype(np.float64)
-            if rotate_np is not None:
-                X = X @ rotate_np
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": pdf["cell"],
-                    "codes": list(_batch_codes(X, books_np)),
-                }
-            )
-
-    return (
-        _residual_corpus(vectors, cents)
-        .select("vec_id", "cell", "residual")
-        .mapInPandas(encode, "vec_id long, cell int, codes array<int>")
-    )
+    ``OPQx_y,IVFk,PQx`` practice).  Same plan shape and driver-state
+    contract as the plain composite: the rotation adds one DIM×DIM
+    matmul inside the encode batch and the LUT build, no extra corpus
+    pass.  Gates (tests/test_similarity_extra.py): rotation
+    orthogonality, subspace-variance balance vs unrotated, recall ≥ the
+    0.85 family floor on the graded fixture, exact-rerank tail identical
+    to the other tiers."""
+    return _session_ivfpq_topk(spark, sf_dir, opq=True)
 
 
 def build_ivfpq_index(
@@ -1708,8 +1736,9 @@ def build_ivfpq_index(
     ``build_ivf_index`` layout carrying 8-bit codes instead of float
     vectors, i.e. both scale levers persisted at once (partition-pruned
     scan + ~32× smaller rows; the raw vectors stay in the source table,
-    touched only by the |shortlist|-row rerank join).  Returns the
-    number of cells.
+    touched only by the |shortlist|-row rerank join).  The quantizer is
+    written next to the codes as the ``_quantizer.json`` sidecar.
+    Returns the number of cells.
 
     Jobs: the quantizers train in NumPy on the driver from one bounded
     training set (two TakeOrdered collects, ``_collect_training_set``),
@@ -1717,69 +1746,40 @@ def build_ivfpq_index(
     partitionBy write — the only corpus-sized work.
 
     ``vectors`` overrides the indexed frame (default: the whole
-    embeddings table) — the quantizers are ALWAYS the session's
-    memoized corpus-trained ones, so a partial build plus later
+    embeddings table); the quantizer is always the session's memoized
+    corpus-trained one, so a partial build plus later
     ``ivfpq_index_add`` batches equals the full build row-for-row.
 
-    ``opq=True`` builds the ROTATED tier: the learned OPQ orthogonal
-    matrix is trained once (``_get_opq_state``), codes are encoded in
-    the rotated residual space, and the rotation is persisted in the
-    sidecar next to the centroids/codebooks, so a fresh session serves
-    the best-recall tier straight from disk (``ann_ivfpq_topk_indexed``
-    rotates probe residuals from the sidecar exactly as
-    ``ann_opq_topk`` does in-session) — no retrain, no extra corpus
-    pass at serve time."""
+    ``opq=True`` builds the rotated tier: codes are encoded in the
+    OPQ-rotated residual space and the rotation is stored in the
+    sidecar, so ``ann_ivfpq_topk_indexed`` serves the same answers as
+    ``ann_opq_topk`` from disk with no retraining."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _get_ivf_centroids(spark, sf_dir, emb)
-    if opq:
-        rot, books = _get_opq_state(spark, sf_dir, emb)
-        books_np = _np_books(books)
-    else:
-        rot = None
-        books_np = _np_books(_get_ivfpq_codebooks(spark, sf_dir, emb, cents))
-    coded = _ivfpq_encode_frame(
-        vectors if vectors is not None else emb, cents, books_np, rotate_np=rot
+    q = _session_quantizer(spark, sf_dir, emb, opq)
+    return _write_ivfpq_index(
+        vectors if vectors is not None else emb, index_path, q, epoch_layout=False
     )
-    coded.write.mode("overwrite").partitionBy("cell").parquet(index_path)
-    _write_quantizer_sidecar(
-        spark,
-        index_path,
-        cents,
-        books_np.tolist(),
-        rotation=rot.tolist() if rot is not None else None,
-    )
-    return len(cents)
 
 
 def ivfpq_index_add(
     spark: SparkSession, sf_dir: str, index_path: str, new_vectors: DataFrame
 ) -> int:
     """INCREMENTAL IVFPQ maintenance: encode a batch under the index's
-    FIXED quantizer pair (coarse centroids + residual codebooks — never
-    retrained per batch, same rationale as ``ivf_index_add``) and
-    append to only the batch's cell partitions.  Append cost ∝ batch
-    size.  Returns the number of rows appended — hard-frozen by an
-    eager localCheckpoint (r12, same as ``ivf_index_add``): lineage is
-    severed, so the count can never diverge from the written rows via
-    a recomputed non-deterministic input.  An OPQ-built index carries
-    its rotation in the sidecar, so adds encode in the SAME rotated
-    space the stored codes live in — partial build + adds equals the
-    full rotated build row-for-row (pinned); an unreadable sidecar
-    RAISES in ``_read_quantizer_sidecar`` before anything is appended.
-    ``index_path`` may be a versioned root (r14): the add resolves the
-    pointer and appends to the ACTIVE version."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    own sidecar quantizer (never retrained per batch, same rationale as
+    ``ivf_index_add``) and append to only the batch's cell partitions.
+    Append cost ∝ batch size.  Partial build + adds equals the full
+    build row-for-row, on both tiers.  Returns the number of rows
+    appended, frozen by an eager localCheckpoint: lineage is severed,
+    so the count can never diverge from the written rows via a
+    recomputed non-deterministic input.
+
+    An index with no IVFPQ sidecar, or an unreadable one, raises
+    ``ValueError`` before anything is appended.  ``index_path`` may be
+    a versioned root: the add appends to the active version.
+    ``sf_dir`` is not read; the quantizer comes from the index."""
     index_path = resolve_index_path(spark, index_path)
-    side = _read_quantizer_sidecar(spark, index_path)
-    if side and "codebooks" in side:
-        cents, books_np = side["centroids"], _np_books(side["codebooks"])
-    else:
-        cents = _get_ivf_centroids(spark, sf_dir, emb)
-        books_np = _np_books(_get_ivfpq_codebooks(spark, sf_dir, emb, cents))
-    rot = _sidecar_rotation(side)
-    coded = _ivfpq_encode_frame(
-        new_vectors, cents, books_np, rotate_np=rot
-    ).localCheckpoint(eager=True)
+    q = _index_quantizer(spark, index_path)
+    coded = _ivfpq_encode_frame(new_vectors, q).localCheckpoint(eager=True)
     n_added = coded.count()
     coded.write.mode("append").partitionBy("cell").parquet(index_path)
     return n_added
@@ -1794,42 +1794,20 @@ def ann_ivfpq_topk_indexed(
     filter on the partition column, so the parquet scan reads ONLY the
     probed ``cell=N`` directories of 8-bit codes — unprobed cells never
     leave disk AND what is read is ~32× smaller than the float corpus.
-    Same state, ADC math, shortlist, and rerank as ``ann_ivfpq_topk``
-    (result identity pinned by tests/test_ivf_index.py).  A sidecar
-    carrying a ``rotation`` (r13: an ``opq=True`` build) serves the
-    ROTATED tier: the stored codes live in the rotated residual space,
-    so the probe-residual LUTs are built with the same rotation — the
-    from-disk twin of ``ann_opq_topk``, identity-pinned likewise.
-    ``index_path`` may be a versioned root carrying a ``_current.json``
-    pointer (r14): the serve resolves it once per query, so a rebuild
-    publishes atomically under serving traffic."""
+    The quantizer, including an OPQ rotation, comes from the index's
+    sidecar, and the scan and rerank are ``ann_ivfpq_topk``'s, so the
+    answer equals the in-session one under the same quantizer (pinned
+    by tests/test_ivf_index.py).  An index without an IVFPQ sidecar
+    raises ``ValueError``.  ``index_path`` may be a versioned root
+    carrying a ``_current.json`` pointer: the serve resolves it once per
+    query, so a rebuild publishes atomically under serving traffic."""
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = resolve_index_path(spark, index_path)
-    side = _read_quantizer_sidecar(spark, index_path)
-    rot = _sidecar_rotation(side)
-    _, books_np, probe_ids, probed, luts = _ivfpq_state(
-        spark,
-        sf_dir,
-        emb,
-        cents=side["centroids"] if side else None,
-        books_np=_np_books(side["codebooks"])
-        if side and "codebooks" in side
-        else None,
-        rotate_np=rot,
-    )
-    probed_cells = sorted({int(c) for row in probed for c in row})
-    corpus = (
-        spark.read.parquet(index_path)
-        .filter(F.col("cell").isin(probed_cells))
-        .select("vec_id", "cell", "codes")
-    )
-    adc = _ivfpq_adc_scan(
-        corpus, books_np, probe_ids, probed, luts, stored_codes=True
-    )
-    return _ivfpq_shortlist_rerank(emb, adc)
+    q = _index_quantizer(spark, index_path)
+    return _ivfpq_topk(emb, q, spark.read.parquet(index_path))
 
 
-# --- versioned serving + drift recovery (r14, VERDICT r13 #1) ------------
+# --- versioned serving + drift recovery --------------------------------
 
 _INDEX_POINTER = "_current.json"  # underscore-prefixed like the sidecar
 
@@ -1897,9 +1875,9 @@ def rebuild_ivfpq_index(
     epoch_layout: bool | None = None,
 ) -> int:
     """DRIFT RECOVERY for a served IVFPQ(+OPQ) index: retrain the
-    quantizer trio on the CURRENT corpus and re-encode every vector
-    FROM THE SOURCE embeddings into a fresh cell-partitioned inverted
-    file + sidecar at ``new_path``.
+    quantizer on the CURRENT corpus and re-encode every vector FROM THE
+    SOURCE embeddings into a fresh cell-partitioned inverted file +
+    sidecar at ``new_path``.
 
     Why this exists: ``ivfpq_index_add`` / the streaming ingest encode
     every arrival under the quantizer FROZEN at base-build time — by
@@ -1916,12 +1894,13 @@ def rebuild_ivfpq_index(
     embeddings table — where base + every streamed/added arrival
     already live).  Unlike ``build_ivfpq_index``, BOTH the training and
     the encode read that frame directly, never the session memos: a
-    rebuild that read the memoized trio would reproduce the stale
-    quantizer it exists to retire.  It collects its own training set
-    once and feeds every trainer from it; the sample is hash-chosen
-    over all ids, so new arrivals are trained on.  ``opq=None``
-    inherits the tier from ``old_path``'s sidecar (rotation present →
-    rotated tier).  Returns the number of cells.
+    rebuild that read the memoized quantizer would reproduce the stale
+    one it exists to retire.  It collects one training set and trains
+    every quantizer part from it (``_train_quantizer``); the sample is
+    hash-chosen over all ids, so new arrivals are trained on.
+    ``opq=None`` inherits the tier from ``old_path``'s sidecar (rotation
+    present → rotated tier) and raises ``ValueError`` when that index
+    has no IVFPQ sidecar.  Returns the number of cells.
 
     A STREAM-MAINTAINED old index (epoch-partitioned —
     streaming/vector_ingest.py) rebuilds into the same (epoch, cell)
@@ -1941,52 +1920,21 @@ def rebuild_ivfpq_index(
     downtime."""
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = vectors if vectors is not None else emb
+    old = None if old_path is None else resolve_index_path(spark, old_path)
     if opq is None:
-        if old_path is None:
+        if old is None:
             raise ValueError(
                 "rebuild_ivfpq_index needs either old_path (to inherit "
                 "the tier) or an explicit opq="
             )
-        opq = (
-            _sidecar_rotation(
-                _read_quantizer_sidecar(spark, resolve_index_path(spark, old_path))
-            )
-            is not None
+        opq = _index_quantizer(spark, old).rotation is not None
+    if epoch_layout is None and old is not None:
+        _, fs, p = _sidecar_fs(spark, old)
+        epoch_layout = fs.exists(p) and any(
+            st.getPath().getName().startswith("epoch=") for st in fs.listStatus(p)
         )
-    if epoch_layout is None:
-        epoch_layout = False
-        if old_path is not None:
-            old_resolved = resolve_index_path(spark, old_path)
-            _, fs, p = _sidecar_fs(spark, old_resolved)
-            epoch_layout = fs.exists(p) and any(
-                st.getPath().getName().startswith("epoch=")
-                for st in fs.listStatus(p)
-            )
-    window, sample = _collect_training_set(corpus)
-    cents = _train_ivf_centroids(window, sample)
-    if opq:
-        rot, books = _train_opq_pair(window, sample, cents)
-    else:
-        rot = None
-        books = _train_pq_codebooks(
-            _residuals(window, cents), _residuals(sample, cents)
-        )
-    books_np = _np_books(books)
-    coded = _ivfpq_encode_frame(corpus, cents, books_np, rotate_np=rot)
-    if epoch_layout:
-        coded.withColumn("epoch", F.lit(-1)).write.mode(
-            "overwrite"
-        ).partitionBy("epoch", "cell").parquet(new_path)
-    else:
-        coded.write.mode("overwrite").partitionBy("cell").parquet(new_path)
-    _write_quantizer_sidecar(
-        spark,
-        new_path,
-        cents,
-        books_np.tolist(),
-        rotation=rot.tolist() if rot is not None else None,
-    )
-    return len(cents)
+    q = _train_quantizer(*_collect_training_set(corpus), opq)
+    return _write_ivfpq_index(corpus, new_path, q, bool(epoch_layout))
 
 
 def index_drift_report(
@@ -1997,9 +1945,9 @@ def index_drift_report(
     sample_mod: int = 1,
     by_epoch: bool = False,
 ) -> DataFrame:
-    """The MONITOR that decides when ``rebuild_ivfpq_index`` runs (r14
-    — closes the drift lifecycle: ingest → **detect** → rebuild → flip
-    pointer).  Per index segment ("base" = the build / epoch<0
+    """The MONITOR that decides when ``rebuild_ivfpq_index`` runs (the
+    drift lifecycle: ingest → **detect** → rebuild → flip pointer).
+    Per index segment ("base" = the build / epoch<0
     partitions, "streamed" = ingested epoch>=0 partitions) →
     (segment, n_vectors, n_cells_used, top_cell_share, mean_sq_err,
     max_sq_err), where sq_err is the squared L2 reconstruction error
@@ -2021,7 +1969,9 @@ def index_drift_report(
     against (default: the embeddings table, the same convention as
     ``rebuild_ivfpq_index``); indexed vec_ids absent from it are
     skipped — a straggler with no raw vector can't be measured.
-    ``index_path`` may be a versioned root (pointer-resolved).
+    ``index_path`` may be a versioned root (pointer-resolved).  The
+    codes are decoded under the index's sidecar quantizer; an index
+    without an IVFPQ sidecar raises ``ValueError``.
 
     ``sample_mod`` > 1 measures a deterministic 1/mod id-slice
     (``vec_id % mod = 0``, the same rows every run so reports are
@@ -2047,16 +1997,9 @@ def index_drift_report(
     import numpy as np
 
     index_path = resolve_index_path(spark, index_path)
-    side = _read_quantizer_sidecar(spark, index_path)
-    if not side or "codebooks" not in side:
-        raise ValueError(
-            f"index at {index_path} has no quantizer sidecar — the "
-            "drift report decodes stored codes, which needs the index's "
-            "own codebooks (pre-r12 artifacts must be rebuilt)"
-        )
-    cents_np = np.asarray(side["centroids"], dtype=np.float64)
-    books_np = _np_books(side["codebooks"])
-    rot = _sidecar_rotation(side)
+    q = _index_quantizer(spark, index_path)
+    cents_np = np.asarray(q.centroids, dtype=np.float64)
+    books_np, rot = q.books, q.rotation
     src = (
         vectors
         if vectors is not None

@@ -59,18 +59,16 @@ def compact_parquet(
     Root-level underscore-prefixed SIDECAR files (``_quantizer.json``
     on the IVF/IVFPQ indexes — parquet readers skip them like
     ``_SUCCESS``, so spark.read never carries them through a rewrite)
-    are copied to the compaction target (ADVICE r12): without this a
-    compacted serving index silently lost its persisted quantizer and
-    every later serve/add fell back to session retraining —
-    reintroducing the cross-session mis-probe the sidecar exists to
-    prevent (tests/test_ivf_index.py poisons the session memos after
-    compaction to pin this).  The carry uses the same LOCAL-filesystem
-    listing as the size scan above — this whole function is documented
+    are copied to the compaction target: a compacted index without its
+    quantizer could no longer be served or extended — the IVFPQ readers
+    refuse an index with no sidecar, and the plain IVF readers would
+    retrain in-session and mis-probe cells the index never assigned
+    (tests/test_ivf_index.py poisons the session memos after compaction
+    to pin this).  The carry uses the same LOCAL-filesystem listing as
+    the size scan above — this whole function is documented
     posix-bound; an HDFS/S3 deployment must replace BOTH the size scan
     and this carry with FileSystem calls (the sidecar read/write in
-    similarity.py already goes through that API), because a missed
-    carry leaves the target sidecar-less and the reader treats an
-    ABSENT sidecar as a legacy artifact (session-trainer fallback)."""
+    similarity.py already goes through that API)."""
     files = _part_files(src_path)
     bytes_in = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(bytes_in / (target_mb * 1024 * 1024)))

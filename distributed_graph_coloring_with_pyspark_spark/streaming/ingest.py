@@ -164,6 +164,27 @@ def _state_paths(state_dir: str) -> tuple[str, str, str]:
     )
 
 
+_LEGACY_STATE_DIRS = ("kept", "index", "decisions")  # the older layout:
+# one top-level epoch-partitioned dir per store instead of ``store/kind=*``
+
+
+def _refuse_legacy_state(state_dir: str) -> None:
+    """Raise ``ValueError`` when ``state_dir`` holds the older per-store
+    layout (top-level ``kept/``, ``index/`` or ``decisions/`` dirs).  The
+    gate reads only ``store/kind=*``, so it would take such a state dir
+    for an empty corpus and admit every duplicate of what it kept."""
+    legacy = [
+        d for d in _LEGACY_STATE_DIRS if os.path.isdir(os.path.join(state_dir, d))
+    ]
+    if legacy:
+        raise ValueError(
+            f"gate state at {state_dir} uses the legacy per-store layout "
+            f"({', '.join(d + '/' for d in legacy)}), which this gate does "
+            "not read; continuing would treat the kept corpus as empty. "
+            "Start from a fresh state_dir or migrate the state first"
+        )
+
+
 def _has_epochs(path: str) -> bool:
     return os.path.isdir(path) and any(e.startswith("epoch=") for e in os.listdir(path))
 
@@ -426,7 +447,10 @@ def streaming_neardup_gate(
     micro-batch per file) and return the accumulated decision log →
     (doc_id, verdict ∈ {novel, dup_vs_corpus, dup_in_batch},
     matched_doc).  Restartable: pass the same ``checkpoint_dir`` and
-    ``state_dir`` to resume exactly-once after a stop."""
+    ``state_dir`` to resume exactly-once after a stop.  A ``state_dir``
+    in the legacy per-store layout raises ``ValueError`` before the
+    stream starts."""
+    _refuse_legacy_state(state_dir)
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)

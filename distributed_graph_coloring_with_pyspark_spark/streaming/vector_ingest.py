@@ -1,30 +1,29 @@
 """Streaming vector-index maintenance — the ONLINE form of the ANN
-serving family (r13): embedding batches arrive as a Structured
-Streaming file source and are encoded + landed into the persisted
-IVFPQ(+OPQ) inverted file under the index's FIXED sidecar quantizer,
-so a serving index absorbs a continuous embedding feed with no rebuild
-and no retrain.  This is the deployment loop a 100 TB vector store
-actually runs (new embeddings land continuously; rebuilding the
-inverted file per arrival is corpus-quadratic over time) and it
-composes the engine's already-pinned pieces:
+serving family: embedding batches arrive as a Structured Streaming file
+source and are encoded + landed into the persisted IVFPQ(+OPQ) inverted
+file under the index's FIXED sidecar quantizer, so a serving index
+absorbs a continuous embedding feed with no rebuild and no retrain.
+This is the deployment loop a 100 TB vector store actually runs (new
+embeddings land continuously; rebuilding the inverted file per arrival
+is corpus-quadratic over time) and it composes the engine's pinned
+pieces:
 
-- the quantizer trio (coarse centroids, residual PQ codebooks, and —
-  when the base was built ``opq=True`` — the learned rotation) comes
-  from the index's ``_quantizer.json`` SIDECAR, never the session
-  trainer, so every epoch encodes in exactly the space the stored
-  codes live in (the cross-session contract
-  tests/test_ivf_index.py pins for batch adds);
+- the base build (``build_streaming_ivfpq_base``) is
+  ``build_ivfpq_index``'s session quantizer and index writer, laid out
+  (epoch, cell)-partitioned under ``epoch=-1``;
+- each ingest reads the quantizer once from the index's
+  ``_quantizer.json`` sidecar (``_index_quantizer``: centroids,
+  residual codebooks and, for an ``opq=True`` base, the rotation) and
+  refuses an index without one, so every epoch encodes in exactly the
+  space the stored codes live in;
 - per-epoch encoding is the shared ``_ivfpq_encode_frame`` Arrow pass
-  (cell + residual in Catalyst, codeword argmin in numpy) — batch-
+  (cell + residual in Catalyst, codeword argmin in NumPy) — batch-
   sized work, one partitioned write touching only the batch's cells;
-- state is (epoch, cell)-partitioned parquet maintained by
-  ``foreachBatch``; each epoch is STAGED as an invisible
-  ``_staged_epoch_N`` dir and PUBLISHED with one atomic rename to
-  ``epoch=N`` (r15 — the dynamic-partition-overwrite commit it
-  replaces paid a fixed ~1-2 s/epoch of committer reconciliation
-  against the whole index root), so restarts are exactly-once and
-  ``epoch=N`` is always either absent or complete — a plain append
-  (the batch ``ivfpq_index_add``) would double-write on replay;
+- each epoch is STAGED as an invisible ``_staged_epoch_N`` dir and
+  PUBLISHED with one rename to ``epoch=N`` (see ``_index_epoch`` for
+  which filesystems make that rename atomic), so restarts are
+  exactly-once — a plain append (the batch ``ivfpq_index_add``) would
+  double-write on replay;
 - the serve path is UNCHANGED: ``ann_ivfpq_topk_indexed`` reads the
   (epoch, cell) layout through the same probed-cell PartitionFilter
   (cell stays a physical partition key; the extra epoch level is
@@ -39,16 +38,14 @@ under poisoned session memos and across a kill/restart resume.
 100 TB notes: per-epoch cost ∝ batch size (encode + a write into the
 batch's cells); the standing index is never read by ingestion.  The
 quantizer is fixed at base-build time by design — distribution drift
-degrades cell balance, not correctness, and the production answer is
-periodic retrain + rebuild, which since r14 is a real operator:
-``rebuild_ivfpq_index`` (operators/similarity.py) retrains the trio on
-the current corpus, re-encodes from the source embeddings into a fresh
-dir + sidecar, and ``write_index_pointer`` publishes it atomically
-under serving traffic (VERDICT r13 #1; pins in tests/test_ivf_index).
-Epoch
-proliferation is the small-files disease ``compact_parquet`` already
-treats (it carries the sidecar since r13); a nightly compaction to a
-single epoch level keeps file counts bounded.
+degrades cell balance, not correctness, and the answer is periodic
+retrain + rebuild: ``rebuild_ivfpq_index`` (operators/similarity.py)
+retrains on the current corpus into a fresh dir + sidecar, keeping the
+(epoch, cell) layout, and ``write_index_pointer`` publishes it
+atomically under serving traffic.  Epoch proliferation is the
+small-files disease ``compact_parquet`` treats (it carries the
+sidecar); a nightly compaction to a single epoch level keeps file
+counts bounded.
 """
 
 from __future__ import annotations
@@ -59,15 +56,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import (
-    _get_ivf_centroids,
-    _get_ivfpq_codebooks,
-    _get_opq_state,
+    _BASE_EPOCH,
+    _index_quantizer,
     _ivfpq_encode_frame,
-    _np_books,
-    _read_quantizer_sidecar,
+    _session_quantizer,
     _sidecar_fs,
-    _sidecar_rotation,
-    _write_quantizer_sidecar,
+    _write_ivfpq_index,
     resolve_index_path,
 )
 from ..sources.tables import load_table
@@ -75,8 +69,6 @@ from .ingest import write_arrival_file
 
 VEC_STREAM_SCHEMA = "vec_id long, embedding array<float>"
 _N_SLICES = 4  # arrival slices for the corpus-driven entry below
-_BASE_EPOCH = -1  # streaming epoch ids start at 0; the base build
-# lands under epoch=-1 so no micro-batch can dynamic-overwrite it
 
 
 def build_streaming_ivfpq_base(
@@ -86,81 +78,46 @@ def build_streaming_ivfpq_base(
     base_vectors: DataFrame,
     opq: bool = True,
 ) -> int:
-    """The base build of a STREAM-MAINTAINED inverted file: same
-    quantizer training and encode as ``build_ivfpq_index`` (session-
-    memoized corpus-trained trio; ``opq=True`` stores the rotation),
-    but laid out (epoch, cell)-partitioned under ``epoch=-1`` so the
-    streaming epochs' dynamic overwrites can never touch it.  Returns
-    the number of cells."""
+    """The base build of a STREAM-MAINTAINED inverted file: the same
+    session quantizer and index writer as ``build_ivfpq_index``
+    (``opq=True`` stores the rotation), laid out (epoch, cell)-
+    partitioned under ``epoch=-1`` so no streamed epoch can overwrite
+    it.  Returns the number of cells."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _get_ivf_centroids(spark, sf_dir, emb)
-    if opq:
-        rot, books = _get_opq_state(spark, sf_dir, emb)
-        books_np = _np_books(books)
-    else:
-        rot = None
-        books_np = _np_books(_get_ivfpq_codebooks(spark, sf_dir, emb, cents))
-    coded = _ivfpq_encode_frame(
-        base_vectors, cents, books_np, rotate_np=rot
-    ).withColumn("epoch", F.lit(_BASE_EPOCH))
-    coded.write.mode("overwrite").partitionBy("epoch", "cell").parquet(index_path)
-    _write_quantizer_sidecar(
-        spark,
-        index_path,
-        cents,
-        books_np.tolist(),
-        rotation=rot.tolist() if rot is not None else None,
-    )
-    return len(cents)
-
-
-def _index_quantizer(spark: SparkSession, index_path: str):
-    """(centroids, books_np, rotation|None) from the index's sidecar —
-    read ONCE per streaming query (the quantizer is fixed at base-build
-    time by design, so re-reading per micro-batch was pure per-arrival
-    overhead; review r13).  Raises if no base was built."""
-    side = _read_quantizer_sidecar(spark, index_path)
-    if not side or "codebooks" not in side:
-        raise ValueError(
-            f"streaming ingest needs a built base index at {index_path} "
-            "(quantizer sidecar missing)"
-        )
-    return side["centroids"], _np_books(side["codebooks"]), _sidecar_rotation(side)
+    q = _session_quantizer(spark, sf_dir, emb, opq)
+    return _write_ivfpq_index(base_vectors, index_path, q, epoch_layout=True)
 
 
 def _index_epoch(
     index_path: str, quant, batch_df: DataFrame, epoch_id: int
 ) -> None:
-    """One micro-batch: encode under the index's FIXED quantizer
-    ``quant`` (the sidecar trio, resolved at query start) and land the
+    """One micro-batch: encode under the index's fixed quantizer
+    ``quant`` (read from the sidecar once at query start) and land the
     codes as this epoch's partitions.
 
-    r15 opt (VERDICT r14 #5, guide §6): the epoch used to commit via
-    dynamic partition overwrite against the WHOLE index root — a fixed
-    ~1-2 s/epoch of committer work (staging under the root, existing-
-    partition reconciliation across every epoch=*/cell=* dir) for a
-    write that by construction only ever owns ``epoch=N``.  Now the
-    batch is written as a plain static-overwrite parquet dir STAGED
-    under ``_staged_epoch_N`` (underscore-prefixed — invisible to every
+    The batch is written as a plain parquet dir STAGED under
+    ``_staged_epoch_N`` (underscore-prefixed — invisible to every
     parquet reader) and PUBLISHED with one filesystem rename to
-    ``epoch=N``.  The final on-disk layout is byte-identical to before
-    (epoch=N/cell=M/part-*.parquet; the epoch value comes from the
-    directory name exactly as dynamic overwrite left it), and the
-    exactly-once contract is strictly stronger: ``epoch=N`` is either
-    absent or COMPLETE (rename is atomic on one filesystem), a replayed
-    epoch deletes-then-renames idempotently, and a crash mid-epoch
-    leaves only an invisible staging dir that the replay overwrites.
-    Concurrent-reader visibility during the replace is the same story
-    as before (dynamic overwrite also swapped files non-atomically);
-    the serving answer for that remains the r14 version-pointer flip,
-    which this path already honors (``resolve_index_path`` at query
-    start)."""
+    ``epoch=N``; the epoch value comes from the directory name.  A
+    replayed epoch deletes the prior ``epoch=N`` and renames again, and
+    a crash mid-epoch leaves only an invisible staging dir that the
+    replay overwrites, so restarts are exactly-once.  Staging keeps the
+    commit to this epoch's own dir instead of a dynamic partition
+    overwrite reconciled against every ``epoch=*/cell=*`` dir of the
+    index (measured in SCALE.md).
+
+    The publish is atomic only where rename is: on HDFS and the local
+    filesystem ``epoch=N`` is either absent or complete.  On object
+    stores such as s3a a directory rename is a non-atomic copy and
+    delete, so a reader listing the index mid-publish, or after a crash
+    inside the rename, can see part of an epoch; the filesystem is not
+    checked.  On any filesystem a concurrent reader of a replayed epoch
+    can see it absent between the delete and the rename."""
     b = batch_df.select("vec_id", "embedding").localCheckpoint(eager=True)
     if b.isEmpty():
         return  # replayed empty epoch
     cur = int(epoch_id)
-    cents, books_np, rot = quant
-    coded = _ivfpq_encode_frame(b, cents, books_np, rotate_np=rot)
+    coded = _ivfpq_encode_frame(b, quant)
     staged = os.path.join(index_path, f"_staged_epoch_{cur}")
     coded.write.mode("overwrite").partitionBy("cell").parquet(staged)
     spark = b.sparkSession
@@ -230,20 +187,19 @@ def streaming_vector_index_ingest(
     ``checkpoint_dir`` and ``index_path`` to resume exactly-once after
     a stop — replayed epochs overwrite their own partitions only.
 
-    ``checkpoint_dir`` defaults to ``<index_path>/_ingest_checkpoint``
-    (ADVICE r13): the un-checkpointed form restarted batch ids at 0 on
-    every call, and the dynamic partition overwrite then silently
-    REPLACED existing ``epoch=0..`` partitions with the new arrivals —
-    data loss on plain API misuse.  Defaulting the checkpoint into the
-    index dir makes repeat calls resume; and a FRESH checkpoint (default
-    or explicit) against an index that already holds streamed epochs
-    refuses to start rather than renumber over them.
+    ``checkpoint_dir`` defaults to ``<index_path>/_ingest_checkpoint``,
+    so repeat calls resume rather than restart batch ids at 0 and
+    overwrite existing ``epoch=0..`` partitions with new arrivals; a
+    FRESH checkpoint (default or explicit) against an index that
+    already holds streamed epochs refuses to start rather than renumber
+    over them.  An index without an IVFPQ sidecar raises ``ValueError``
+    before the stream starts.
 
-    ``index_path`` may be a versioned root (r14): the ingest resolves
-    the pointer ONCE at query start and lands epochs in the active
-    version — after a drift rebuild + pointer flip, the next ingest
-    call (with its default checkpoint, which lives INSIDE the version
-    dir) starts a clean batch sequence against the rebuilt index."""
+    ``index_path`` may be a versioned root: the ingest resolves the
+    pointer ONCE at query start and lands epochs in the active version
+    — after a drift rebuild + pointer flip, the next ingest call (with
+    its default checkpoint, which lives INSIDE the version dir) starts
+    a clean batch sequence against the rebuilt index."""
     index_path = resolve_index_path(spark, index_path)
     if checkpoint_dir is None:
         checkpoint_dir = os.path.join(index_path, _INGEST_CHECKPOINT)

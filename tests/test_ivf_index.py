@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from distributed_graph_coloring_with_pyspark_spark import cache
 from distributed_graph_coloring_with_pyspark_spark.operators import similarity as S
 from distributed_graph_coloring_with_pyspark_spark.plans.audit import plan_string
@@ -710,6 +712,46 @@ def test_drift_report_requires_sidecar(spark, tmp_path):
         S.index_drift_report(spark, SF, path)
     cache.release(spark, "ivf_centroids")
     cache.release(spark, "pq_codebooks")
+
+
+@pytest.mark.parametrize("case", ["serve", "add", "rebuild", "add_to_ivf"])
+def test_ivfpq_readers_require_sidecar(spark, tmp_path, case):
+    """Every IVFPQ reader takes the quantizer from the index's sidecar
+    and refuses an index without one: the stored codes were encoded
+    under that quantizer, and a session-trained one could serve wrong
+    neighbours, append codes in another space, or rebuild the wrong
+    tier.  A plain IVF index's sidecar holds centroids only, so an
+    IVFPQ add to it must refuse too, not encode with session
+    codebooks."""
+    import os
+
+    path = str(tmp_path / "idx")
+    if case == "add_to_ivf":
+        S.build_ivf_index(spark, SF, path)
+    else:
+        S.build_ivfpq_index(spark, SF, path, opq=True)
+        os.remove(os.path.join(path, "_quantizer.json"))
+        crc = os.path.join(path, "._quantizer.json.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    batch = S.load_table(spark, SF, "embeddings").filter("vec_id < 10")
+    calls = {
+        "serve": lambda: S.ann_ivfpq_topk_indexed(spark, SF, path).collect(),
+        "add": lambda: S.ivfpq_index_add(spark, SF, path, batch),
+        "rebuild": lambda: S.rebuild_ivfpq_index(
+            spark, SF, path, str(tmp_path / "new"), opq=None
+        ),
+        "add_to_ivf": lambda: S.ivfpq_index_add(spark, SF, path, batch),
+    }
+    n_before = spark.read.parquet(path).count()
+    try:
+        with pytest.raises(ValueError, match="sidecar"):
+            calls[case]()
+        assert spark.read.parquet(path).count() == n_before  # nothing appended
+        assert not (tmp_path / "new").exists()  # nothing rebuilt
+    finally:
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
 
 
 def test_versioned_root_is_relocatable(spark, tmp_path):

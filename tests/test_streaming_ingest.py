@@ -189,3 +189,26 @@ def test_gate_empty_corpus_returns_empty_log(spark, tmp_path):
     out2 = streaming_neardup_gate(spark, src, state)
     assert out2.columns == ["doc_id", "verdict", "matched_doc"]
     assert out2.count() == 0
+
+
+def test_gate_refuses_legacy_state_layout(spark, tmp_path):
+    """A state dir in the older layout (top-level ``kept/``, ``index/``,
+    ``decisions/`` dirs) is not read by the gate, which would take it for
+    an empty corpus and admit duplicates of everything it kept: the gate
+    must refuse it before any epoch runs and write no ``store/``."""
+    from distributed_graph_coloring_with_pyspark_spark.streaming.ingest import (
+        write_arrival_file,
+    )
+
+    src = str(tmp_path / "src")
+    state = tmp_path / "state"
+    os.makedirs(src)
+    (state / "kept" / "epoch=0").mkdir(parents=True)
+    write_arrival_file(
+        spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string"),
+        src,
+        "c0",
+    )
+    with pytest.raises(ValueError, match="legacy"):
+        streaming_neardup_gate(spark, src, str(state))
+    assert not (state / "store").exists()

@@ -66,18 +66,26 @@ def norm(a: Column) -> Column:
 
 
 def _topk_per_probe(scored: DataFrame) -> DataFrame:
-    """Deterministic per-probe top-K tail shared by the exact KNN and
-    both ANN paths (review r5 deduplicated three verbatim copies): rank
-    by (cos_sim desc, vec_id) for a stable tie-break, keep _TOP_K, emit
-    the common (probe_id, rank, neighbor_id, cos_sim) schema.  One
-    definition keeps the ANN paths in lockstep with the exact query
-    their recall gates compare against."""
+    """Per-probe top-K tail shared by the exact KNN and every ANN path:
+    rank each probe's candidates by (cos_sim desc, vec_id) for a stable
+    tie-break, keep ``_TOP_K``, and emit (probe_id, rank, neighbor_id,
+    cos_sim) sorted by (probe_id, rank).  One definition keeps the ANN
+    paths in lockstep with the exact query their recall gates compare
+    against.
+
+    Jobs: one shuffle, the window's.  The rank filter becomes a map-side
+    partial top-K ahead of it, so at most probes × K rows per map task
+    cross it and the scoring stage keeps its width.  The final order is
+    a sort inside one partition; an ``orderBy`` would add two jobs, a
+    range-sampling one and a second shuffle (SCALE.md).
+    ``(probe_id, rank)`` is unique, so the order is total."""
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TOP_K)
         .select("probe_id", "rank", F.col("vec_id").alias("neighbor_id"), "cos_sim")
-        .orderBy("probe_id", "rank")
+        .coalesce(1)
+        .sortWithinPartitions("probe_id", "rank")
     )
 
 
@@ -737,11 +745,10 @@ _QUANTIZER_SIDECAR = "_quantizer.json"  # underscore-prefixed: parquet
 
 
 def _sidecar_fs(spark: SparkSession, path_str: str):
-    """(jvm, FileSystem, Path) for a sidecar location, resolved through
-    the HADOOP FILESYSTEM API (r13, VERDICT r12 #5): the same call that
-    writes a local dir in tests writes hdfs:// or s3a:// in a cluster
-    deployment — the sidecar is no longer the one index artifact that
-    silently required a posix-visible path."""
+    """(jvm, FileSystem, Path) for a path, resolved through the Hadoop
+    FileSystem API, so the index's control files (quantizer sidecar,
+    version pointer) and layout checks work on a local dir, hdfs:// or
+    s3a:// alike.  Launches no Spark job."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path_str)
     return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration()), p
@@ -843,14 +850,17 @@ def _read_quantizer_sidecar(spark: SparkSession, index_path: str):
 def _read_json_sidecar(
     spark: SparkSession, dir_path: str, name: str, describe: str, refusal: str
 ):
-    """Shared Hadoop-FS JSON read for the index's '_'-prefixed control
-    files (quantizer sidecar, version pointer — review r14: the two
-    readers had drifted into near-identical copies): None when the file
-    is ABSENT (each caller's legacy/concrete-dir case), ValueError when
-    it EXISTS but cannot be read or parsed — both writers are atomic
+    """The parsed JSON of the control file ``dir_path/name`` (quantizer
+    sidecar or version pointer), read through the Hadoop FileSystem API.
+    None when the file is absent; ``ValueError`` when it exists but
+    cannot be read or parsed: both writers are atomic
     (``_atomic_json_write``), so an unreadable control file means
-    tampering or real IO failure, and every caller refuses loudly
-    rather than guessing."""
+    tampering or an IO failure, and every caller refuses rather than
+    guesses.
+
+    Jobs: none.  The file crosses py4j as one UTF-8 string; a ``byte[]``
+    would be unpacked in Python one element at a time, which costs more
+    than the read itself for the OPQ sidecar (SCALE.md)."""
     import json
     import os
 
@@ -860,10 +870,12 @@ def _read_json_sidecar(
     try:
         stream = fs.open(p)
         try:
-            data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
         finally:
             stream.close()
-        return json.loads(data.decode("utf-8"))
+        if "\ufffd" in text:  # undecodable bytes; the writers emit ASCII
+            raise UnicodeError("malformed UTF-8")
+        return json.loads(text)
     except Exception as exc:  # truncated JSON, checksum mismatch, IO
         raise ValueError(
             f"{describe} at {dir_path} exists but is unreadable "
@@ -1013,28 +1025,29 @@ def ivf_index_add(
 def ann_ivf_topk_indexed(
     spark: SparkSession, sf_dir: str, index_path: str
 ) -> DataFrame:
-    """Query a ``build_ivf_index`` artifact with STATIC partition
-    pruning: the probed cell ids are computed first (bounded driver
-    state — at most K distinct ids, the same order of magnitude as the
-    centroid literals themselves) and pushed as an IN filter on the
-    partition column, so the parquet scan reads ONLY the probed
-    ``cell=N`` directories — ~NPROBE/K of the stored corpus never
-    leaves disk.  Same probes, rerank, and results as ``ann_ivf_topk``
-    (pinned by tests/test_ivf_index.py).  ``index_path`` may be a
-    versioned root carrying a ``_current.json`` pointer (r14)."""
+    """Query a ``build_ivf_index`` artifact with static partition
+    pruning: the probed cell ids (at most K) are collected first and
+    pushed as an IN filter on the partition column, so the parquet scan
+    reads only the probed ``cell=N`` directories.  Same probes, rerank
+    and results as ``ann_ivf_topk`` (pinned by tests/test_ivf_index.py).
+    The quantizer is the index's sidecar when present, so the answer
+    holds across sessions and source-table growth; an index without one
+    falls back to the session trainer.  ``index_path`` may be a
+    versioned root carrying a ``_current.json`` pointer.
+
+    Jobs: 7 on a warm session at sf0.01 — the embeddings table's schema
+    inference (``load_table``), two for the probed-cells collect over
+    the persisted probe frame, the index's schema inference, and three
+    query-stage jobs for the rerank and its top-K tail
+    (``_topk_per_probe``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = resolve_index_path(spark, index_path)
     side = _read_quantizer_sidecar(spark, index_path)
-    # the index's OWN persisted quantizer when present (r12): correct
-    # across sessions and across source-table growth; pre-r12 artifacts
-    # fall back to the session trainer
     cents = (
         side["centroids"] if side else _get_ivf_centroids(spark, sf_dir, emb)
     )
-    # tracked persist (review r5): the probes pipeline is consumed twice
-    # — once by the probed-cells collect below and again inside the
-    # rerank join — and without a persist the serve path re-scanned the
-    # probe side and re-scored all K centroids per action
+    # persisted: the probe frame feeds both the probed-cells collect and
+    # the rerank join, which would otherwise re-score all K centroids
     probes = persist_tracked(spark, _ivf_probes(emb, cents))
     probed_cells = sorted(
         r.cell for r in probes.select("cell").distinct().collect()
@@ -1213,6 +1226,27 @@ def _get_pq_codebooks(
     )
 
 
+def _probe_matrix(emb: DataFrame):
+    """(probe ids ascending, (n_probes, DIM) float64 matrix) of the
+    ``_N_PROBES`` probe rows, for the driver-built ADC tables.
+
+    Jobs: one collect.  The rows are sorted by vec_id on the driver; an
+    ``orderBy`` would add a range-sampling job and a shuffle for a few
+    dozen rows."""
+    import numpy as np
+
+    rows = sorted(
+        emb.filter(F.col("vec_id") < _N_PROBES)
+        .select("vec_id", "embedding")
+        .collect(),
+        key=lambda r: r.vec_id,
+    )
+    return (
+        np.asarray([r.vec_id for r in rows]),
+        np.asarray([[float(x) for x in r.embedding] for r in rows]),
+    )
+
+
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ flat ANN top-5 for the same probes as ``knn_exact_topk`` -
     the MEMORY-bound scale path that completes the vector-index family
@@ -1238,14 +1272,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     books_np = _np_books(_get_pq_codebooks(spark, sf_dir, emb))
-    probe_rows = (
-        emb.filter(F.col("vec_id") < _N_PROBES)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    probe_ids = np.asarray([r.vec_id for r in probe_rows])
-    P = np.asarray([[float(x) for x in r.embedding] for r in probe_rows])
+    probe_ids, P = _probe_matrix(emb)
     Ps = P.reshape(len(P), _PQ_M, _PQ_SUB)
     # per-probe ADC lookup tables: (n_probes, M, KS)
     luts = np.stack(
@@ -1470,6 +1497,11 @@ def _index_quantizer(spark: SparkSession, index_path: str) -> Quantizer:
     )
 
 
+# The row of every IVFPQ index, whatever its partition layout: the
+# serve path reads stored indexes with it instead of inferring it.
+_IVFPQ_SCHEMA = "vec_id long, cell int, codes array<int>"
+
+
 def _ivfpq_encode_frame(vectors: DataFrame, q: Quantizer) -> DataFrame:
     """(vec_id, cell, codes) for a vector frame under the fixed
     quantizer ``q``: cell assignment and residual in Catalyst, then one
@@ -1499,7 +1531,7 @@ def _ivfpq_encode_frame(vectors: DataFrame, q: Quantizer) -> DataFrame:
     return (
         _residual_corpus(vectors, q.centroids)
         .select("vec_id", "cell", "residual")
-        .mapInPandas(encode, "vec_id long, cell int, codes array<int>")
+        .mapInPandas(encode, _IVFPQ_SCHEMA)
     )
 
 
@@ -1533,26 +1565,22 @@ def _write_ivfpq_index(
 
 
 def _ivfpq_state(emb: DataFrame, q: Quantizer):
-    """Bounded driver state of an IVFPQ query: (probe ids, probed cells
-    per probe, per-(probe, probed-cell) ADC tables), every array
-    corpus-size-independent by the fixed probe/K/M/KS contract.  Probed
-    cells replicate the Catalyst ``_ivf_probes`` (cosine, idx)-descending
-    order on the driver because the tables need the probed centroid
-    values, not just a cell join.  On the OPQ tier the probe residuals
-    are rotated into the space the codebooks live in."""
+    """Bounded driver state of an IVFPQ query: (probe ids in ascending
+    order, probed cells per probe, per-(probe, probed-cell) ADC tables),
+    every array corpus-size-independent by the fixed probe/K/M/KS
+    contract.  Probed cells replicate the Catalyst ``_ivf_probes``
+    (cosine, idx)-descending order on the driver because the tables
+    need the probed centroid values, not just a cell join.  On the OPQ
+    tier the probe residuals are rotated into the space the codebooks
+    live in.
+
+    Jobs: one, the probe collect (``_probe_matrix``)."""
     import numpy as np
 
     C = np.asarray(q.centroids, dtype=np.float64)  # (K, DIM)
     k_cells = len(C)
     nprobe = min(_IVF_NPROBE, k_cells)
-    probe_rows = (
-        emb.filter(F.col("vec_id") < _N_PROBES)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    probe_ids = np.asarray([r.vec_id for r in probe_rows])
-    P = np.asarray([[float(x) for x in r.embedding] for r in probe_rows])
+    probe_ids, P = _probe_matrix(emb)
     Cn = C / np.sqrt((C * C).sum(1))[:, None]
     scores = (P @ Cn.T) / np.sqrt((P * P).sum(1))[:, None]  # (n_probes, K)
     probed = np.stack(
@@ -1761,6 +1789,16 @@ def build_ivfpq_index(
     )
 
 
+def _has_epoch_layout(spark: SparkSession, index_path: str) -> bool:
+    """True when the index dir holds ``epoch=N`` partitions, i.e. it is
+    a stream-maintained ``(epoch, cell)`` index.  Lists one directory;
+    launches no Spark job."""
+    _, fs, p = _sidecar_fs(spark, index_path)
+    return fs.exists(p) and any(
+        st.getPath().getName().startswith("epoch=") for st in fs.listStatus(p)
+    )
+
+
 def ivfpq_index_add(
     spark: SparkSession, sf_dir: str, index_path: str, new_vectors: DataFrame
 ) -> int:
@@ -1774,10 +1812,21 @@ def ivfpq_index_add(
     recomputed non-deterministic input.
 
     An index with no IVFPQ sidecar, or an unreadable one, raises
-    ``ValueError`` before anything is appended.  ``index_path`` may be
-    a versioned root: the add appends to the active version.
+    ``ValueError`` before anything is appended, and so does a
+    stream-maintained ``(epoch, cell)`` index: flat ``cell=N`` dirs next
+    to its ``epoch=N`` ones would make every later read of the index
+    fail on conflicting partition columns.  Such an index takes new
+    vectors through ``streaming_vector_index_ingest``.  ``index_path``
+    may be a versioned root: the add appends to the active version.
     ``sf_dir`` is not read; the quantizer comes from the index."""
     index_path = resolve_index_path(spark, index_path)
+    if _has_epoch_layout(spark, index_path):
+        raise ValueError(
+            f"index at {index_path} is stream-maintained ((epoch, cell) "
+            "partitions); ivfpq_index_add writes flat cell partitions, "
+            "which would leave it unreadable: add vectors with "
+            "streaming_vector_index_ingest instead"
+        )
     q = _index_quantizer(spark, index_path)
     coded = _ivfpq_encode_frame(new_vectors, q).localCheckpoint(eager=True)
     n_added = coded.count()
@@ -1788,23 +1837,32 @@ def ivfpq_index_add(
 def ann_ivfpq_topk_indexed(
     spark: SparkSession, sf_dir: str, index_path: str
 ) -> DataFrame:
-    """Query a ``build_ivfpq_index`` artifact with STATIC partition
-    pruning: the probed cell ids are computed on the driver (bounded —
-    the union over probes of ``_IVF_NPROBE`` ids) and pushed as an IN
-    filter on the partition column, so the parquet scan reads ONLY the
-    probed ``cell=N`` directories of 8-bit codes — unprobed cells never
-    leave disk AND what is read is ~32× smaller than the float corpus.
-    The quantizer, including an OPQ rotation, comes from the index's
-    sidecar, and the scan and rerank are ``ann_ivfpq_topk``'s, so the
-    answer equals the in-session one under the same quantizer (pinned
-    by tests/test_ivf_index.py).  An index without an IVFPQ sidecar
-    raises ``ValueError``.  ``index_path`` may be a versioned root
-    carrying a ``_current.json`` pointer: the serve resolves it once per
-    query, so a rebuild publishes atomically under serving traffic."""
+    """Query a ``build_ivfpq_index`` artifact with static partition
+    pruning: the probed cell ids are computed on the driver (the union
+    over probes of ``_IVF_NPROBE`` ids) and pushed as an IN filter on
+    the partition column, so the parquet scan reads only the probed
+    ``cell=N`` directories of 8-bit codes.  The quantizer, including an
+    OPQ rotation, comes from the index's sidecar, and the scan and
+    rerank are ``ann_ivfpq_topk``'s, so the answer equals the in-session
+    one under the same quantizer (pinned by tests/test_ivf_index.py).
+    An index without an IVFPQ sidecar raises ``ValueError``.
+    ``index_path`` may be a versioned root carrying a ``_current.json``
+    pointer: the serve resolves it once per query, so a rebuild
+    publishes atomically under serving traffic.
+
+    The index is read with the fixed ``_IVFPQ_SCHEMA`` rather than an
+    inferred one; the ``epoch`` partition column of a stream-maintained
+    index is still discovered from its directories.
+
+    Jobs: 7 on a warm session at sf0.01 — the embeddings table's schema
+    inference (``load_table``), the probe collect (``_ivfpq_state``),
+    and five query-stage jobs for the pruned ADC scan, the shortlist
+    window, the rerank join and the top-K tail (``_topk_per_probe``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = resolve_index_path(spark, index_path)
     q = _index_quantizer(spark, index_path)
-    return _ivfpq_topk(emb, q, spark.read.parquet(index_path))
+    codes = spark.read.schema(_IVFPQ_SCHEMA).parquet(index_path)
+    return _ivfpq_topk(emb, q, codes)
 
 
 # --- versioned serving + drift recovery --------------------------------
@@ -1929,10 +1987,7 @@ def rebuild_ivfpq_index(
             )
         opq = _index_quantizer(spark, old).rotation is not None
     if epoch_layout is None and old is not None:
-        _, fs, p = _sidecar_fs(spark, old)
-        epoch_layout = fs.exists(p) and any(
-            st.getPath().getName().startswith("epoch=") for st in fs.listStatus(p)
-        )
+        epoch_layout = _has_epoch_layout(spark, old)
     q = _train_quantizer(*_collect_training_set(corpus), opq)
     return _write_ivfpq_index(corpus, new_path, q, bool(epoch_layout))
 

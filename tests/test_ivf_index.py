@@ -614,6 +614,14 @@ def test_corrupt_sidecar_raises_absent_sidecar_falls_back(spark, tmp_path):
     cache.release(spark, "ivf_centroids")
 
 
+def test_control_file_with_undecodable_bytes_raises(spark, tmp_path):
+    """A control file whose bytes are not UTF-8 is refused like a
+    truncated one; it is never decoded into a guessed target."""
+    (tmp_path / "_current.json").write_bytes(b'{"current": "v\xff1"}')
+    with pytest.raises(ValueError, match="unreadable"):
+        S.read_index_pointer(spark, str(tmp_path))
+
+
 def test_sidecar_write_is_tempfile_then_rename(spark, tmp_path):
     """The durability contract itself: after a build the index dir holds
     the final sidecar and NO leftover temp file, and rewriting an

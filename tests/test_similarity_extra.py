@@ -837,6 +837,77 @@ def test_quantizer_training_job_budget(spark, tmp_path):
         cache.release(spark, "pq_codebooks")
 
 
+@pytest.fixture(scope="module")
+def served_indexes(spark, tmp_path_factory):
+    """(IVFPQ+OPQ index, IVF index) built over the sf0.01 embeddings."""
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    root = tmp_path_factory.mktemp("served")
+    pq_idx, ivf_idx = str(root / "ivfpq"), str(root / "ivf")
+    S.build_ivfpq_index(spark, SF, pq_idx, opq=True)
+    S.build_ivf_index(spark, SF, ivf_idx)
+    return pq_idx, ivf_idx
+
+
+def test_serve_path_job_budget(spark, served_indexes):
+    """A repeated top-k query pays for its search and little else: no
+    range-sampling sort of the probe rows or of the result, and no
+    schema inference of a stored IVFPQ index.  Each query runs once
+    before it is counted, as a serving session's queries do."""
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    pq_idx, ivf_idx = served_indexes
+    budgets = {
+        "ivfpq-indexed": (
+            lambda: S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect(),
+            7,
+        ),
+        "ivf-indexed": (
+            lambda: S.ann_ivf_topk_indexed(spark, SF, ivf_idx).collect(),
+            7,
+        ),
+        "knn-exact": (lambda: S.knn_exact_topk(spark, SF).collect(), 4),
+    }
+    for group, (query, budget) in budgets.items():
+        query()
+        n_jobs = _jobs_launched(spark, f"serve-{group}", query)
+        assert n_jobs <= budget, (group, n_jobs)
+
+
+def test_topk_rows_come_sorted_by_probe_then_rank(spark, served_indexes):
+    """Every query ending in the shared top-K tail returns its rows in
+    (probe_id, rank) order, with ranks 1..K for every probe."""
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    pq_idx, ivf_idx = served_indexes
+    queries = {
+        "knn_exact_topk": lambda: S.knn_exact_topk(spark, SF),
+        "ann_hyperplane_topk": lambda: S.ann_hyperplane_topk(spark, SF),
+        "ann_ivf_topk": lambda: S.ann_ivf_topk(spark, SF),
+        "ann_ivf_topk_indexed": lambda: S.ann_ivf_topk_indexed(spark, SF, ivf_idx),
+        "ann_pq_topk": lambda: S.ann_pq_topk(spark, SF),
+        "ann_ivfpq_topk": lambda: S.ann_ivfpq_topk(spark, SF),
+        "ann_opq_topk": lambda: S.ann_opq_topk(spark, SF),
+        "ann_ivfpq_topk_indexed": lambda: S.ann_ivfpq_topk_indexed(
+            spark, SF, pq_idx
+        ),
+    }
+    for name, query in queries.items():
+        rows = [(r.probe_id, r.rank) for r in query().collect()]
+        assert rows == sorted(rows), name
+        ranks = {}
+        for probe, rank in rows:
+            ranks.setdefault(probe, []).append(rank)
+        assert len(ranks) == S._N_PROBES, name
+        assert all(r == list(range(1, S._TOP_K + 1)) for r in ranks.values()), name
+
+
 def test_training_sample_is_capped_and_spread_over_ids(spark, monkeypatch):
     """Uncapped, the sample is exactly the ``vec_id % 3 == 0`` third.
     With the cap at 50 the trainers get exactly 50 of those rows, the

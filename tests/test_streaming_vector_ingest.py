@@ -474,3 +474,23 @@ def test_rebuild_epoch_layout_override_enables_streaming(spark, tmp_path):
     assert sum(v for k, v in by_epoch.items() if k >= 0) == slices[0].count()
     cache.release(spark, "ivf_centroids")
     cache.release(spark, "pq_codebooks")
+
+
+def test_add_refuses_stream_maintained_index(spark, tmp_path):
+    """``ivfpq_index_add`` writes flat ``cell=N`` dirs; next to the
+    ``epoch=N`` dirs of a stream-maintained index they would make every
+    later read fail on conflicting partition columns.  The add refuses
+    such an index before writing, and the index stays readable."""
+    import pytest
+
+    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    base = emb.filter(F.pmod("vec_id", F.lit(4)) != 0)
+    rest = emb.filter(F.pmod("vec_id", F.lit(4)) == 0)
+    sidx = str(tmp_path / "stream_idx")
+    VI.build_streaming_ivfpq_base(spark, SF, sidx, base, opq=True)
+
+    with pytest.raises(ValueError, match="streaming_vector_index_ingest"):
+        S.ivfpq_index_add(spark, SF, sidx, rest)
+    assert spark.read.parquet(sidx).count() == base.count()
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")

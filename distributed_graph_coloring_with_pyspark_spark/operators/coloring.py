@@ -1,62 +1,64 @@
-"""Distributed greedy graph coloring — the reference's core algorithm,
-rebuilt as DataFrame plans (reference: /root/reference/coloring.py:73-132,
-coloring_optimized.py:70-146).
+"""Distributed greedy graph coloring: the reference's core algorithm
+(the reference's coloring.py:73-132 and coloring_optimized.py:70-146)
+as vertex-centric ("Pregel") rounds over one DataFrame.
 
-Data model (SURVEY.md §1): the reference shuffles pickled ``Node`` objects
-whose ``neighbors`` are *object pointers* (node.py:4), so each shuffled
-element drags a copy of its connected component. Here the graph is two
-normalized DataFrames:
+Data model (SURVEY.md §1): the reference shuffles pickled ``Node``
+objects whose ``neighbors`` are *object pointers* (node.py:4), so each
+shuffled element drags a copy of its connected component.  Here the
+loop state is one adjacency-list frame, built once per attempt:
 
-    vertices(id LONG, degree LONG, color INT)   -- color NULL = uncolored
-    edges(src LONG, dst LONG)                   -- symmetric, like the
-                                                   reference's doubled
-                                                   adjacency (graph.py:40-41)
+    state(id LONG, degree LONG, nbrs ARRAY<LONG>, color INT)
+                                    -- color NULL = uncolored
 
-Per-round algorithm (one Spark action per round, vs the reference's
-collectAsMap + broadcast + 2 counts + 4 shuffles, coloring.py:80-131).
-One action is not one Spark job: under AQE each query stage runs as its
-own job, and ``localCheckpoint(eager=False)`` runs the winner-side
-shuffle stages when it is called, so a round is about 11 jobs (a traced
-5k-vertex, Δ=8 ``minimal_coloring`` on local[4]: 77 jobs for the 7
-rounds it runs):
+``nbrs`` is the vertex's row of the symmetric ``edges(src, dst)`` frame
+(the reference's doubled adjacency, graph.py:40-41), gathered by one
+``groupBy(id).collect_list(dst)`` over the union of the vertex ids and
+the edges, and ``degree = size(nbrs)``.
 
-1. candidates: for each uncolored vertex, ``used`` = set of neighbor
-   colors (edges join colored vertices, groupBy src + collect_set);
-   candidate = lowest color in [0, k) not in ``used`` — pure Catalyst:
-   ``element_at(array_except(sequence(0, k-1), used), 1)``. NULL
-   candidate ⇒ palette exhausted ⇒ the attempt fails (reference G5,
-   coloring.py:104-108). This follows the *optimized* variant's semantic
-   (zero colored neighbors ⇒ take color 0 immediately,
-   coloring_optimized.py:159-160, not baseline's defer at coloring.py:48-49).
-2. winners: a vertex keeps its candidate iff no neighbor shares the same
-   candidate with lexicographically greater (degree, id) — an order-free
-   Jones-Plassmann/Luby-style local-max rule replacing the reference's
-   sequential per-bucket greedy scan (coloring.py:56-70,
-   coloring_optimized.py:168-200), which is partition-order-dependent.
-   Each color class is still an independent set (two adjacent winners
-   with equal candidates is impossible: the lower-priority one loses).
-3. patch: left join winners onto vertices, ``coalesce(old, new)``, then
-   ``localCheckpoint(eager=False)`` to truncate lineage (the reference
-   never truncates — its ``-Xss4m`` at coloring.py:198 exists to survive
-   deep recursive lineage/pickling).  The checkpointed rows and the
-   persisted candidate frame both materialize inside the next round's
-   stats collect, so each round issues exactly ONE Spark action.
+Per round, two message exchanges and no joins (the reference spends a
+collectAsMap, a broadcast, 2 counts and 4 shuffles, coloring.py:80-131):
 
-Progress: the globally max-priority uncolored vertex with a non-NULL
-candidate always wins its round, so each round colors ≥1 vertex and the
-loop terminates in ≤ |V| rounds (typically O(log n) for random graphs —
-measured on local[32], generate+color+validate, validator-clean:
-50 000 nodes / 383 000 directed edges → 9 rounds, 28 s; 500 000 nodes
-/ 3.83 M edges → 8 rounds, 46 s — 10× the data for 1.65× the wall
-clock, because the round count is size-stable and per-round work
-parallelizes).
+1. candidates: each vertex's own row and one message per neighbour of
+   every colored vertex (``explode(nbrs)`` carrying its color) meet in
+   one ``groupBy(id)``, which gives ``used``, the set of neighbour
+   colors.  An uncolored vertex's candidate is its lowest color in
+   [0, min(k-1, degree)] not in ``used``.  The palette is capped at
+   degree+1 because at most ``degree`` neighbour colors can block, so
+   the cap is exactly the full [0, k) rule at O(min(k, degree)) work per
+   vertex.  A NULL candidate means the palette is exhausted and the
+   attempt fails (reference G5, coloring.py:104-108).  Zero colored
+   neighbours means color 0 at once, the optimized variant's semantic
+   (coloring_optimized.py:159-160, not baseline's defer at
+   coloring.py:48-49).
+2. winners: own rows and one ``(degree, id, candidate)`` message per
+   neighbour of every vertex with a candidate meet in a second
+   ``groupBy(id)``; a vertex keeps its candidate unless a neighbour
+   proposed the same color with a lexicographically greater (degree,
+   id).  This order-free Jones-Plassmann/Luby local-max rule replaces
+   the reference's sequential per-bucket greedy scan
+   (coloring.py:56-70, coloring_optimized.py:168-200), which depends on
+   partition order.  Two adjacent winners never share a color: the
+   lower-priority one loses.
 
-Scale notes (100 TB): every step is joins/aggregations on (id)-keyed
-frames — shuffle-partitioned by Catalyst, AQE-coalesced, skew-join
-splittable. The small ``winners``/``used`` sides become runtime
-broadcast joins under AQE. No driver-side state grows with |V| (the
-reference collects an id→color map to the driver every round,
-coloring.py:136).
+The new state also carries the round's candidate and a
+``was_uncolored`` flag.  It is ``localCheckpoint(eager=False)``-ed,
+which truncates the lineage (the reference never truncates; its
+``-Xss4m`` at coloring.py:198 survives deep recursive lineage), and ONE
+stats collect over it returns the round's uncolored-before, exhausted,
+max-candidate, uncolored-after and max-color figures.  Under AQE a
+round is four Spark jobs: planning the checkpoint runs the two
+exchanges' map stages, and the collect runs the stats' partial and
+final aggregates.  A 5k-vertex, Δ=8 ``minimal_coloring`` on local[4]
+runs 28 jobs: 4 for the adjacency build and its (n, Δ) collect (2 when
+the adjacency is already cached), 4 for each of its 6 rounds.
+
+Progress: the max-priority uncolored vertex with a candidate always
+wins its round, so each round colors at least one vertex and the loop
+ends within |V| rounds (O(log n) rounds on random graphs).  Both
+exchanges are id-keyed aggregations, shuffle-partitioned by Catalyst
+and coalesced by AQE; a vertex sends at most ``degree`` messages per
+exchange.  No driver state grows with |V| (the reference collects an
+id→color map to the driver every round, coloring.py:136).
 """
 
 from __future__ import annotations
@@ -64,9 +66,8 @@ from __future__ import annotations
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 @contextmanager
@@ -107,8 +108,8 @@ def degrees(edges: DataFrame) -> DataFrame:
 
 
 def init_vertices(node_ids: DataFrame, edges: DataFrame) -> DataFrame:
-    """Build the loop state (id, degree, color=NULL) from a frame with an
-    ``id`` column plus the symmetric edges frame."""
+    """(id, degree, color=NULL) from a frame with an ``id`` column plus
+    the symmetric edges frame."""
     return (
         node_ids.select("id")
         .join(degrees(edges), "id", "left")
@@ -120,12 +121,89 @@ def init_vertices(node_ids: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def _higher_priority(du: Column, u: Column, dv: Column, v: Column) -> Column:
-    """(dv, v) lexicographically greater than (du, u) — deterministic
-    tie-break replacing the reference's partition-order-dependent reduce
-    (coloring.py:19-35) and greedy scan order (coloring.py:64 asc vs
-    coloring_optimized.py:170-172 desc — the two variants disagree)."""
-    return (dv > du) | ((dv == du) & (v > u))
+def adjacency(node_ids: DataFrame, edges: DataFrame) -> DataFrame:
+    """The loop state (id, degree, nbrs, color=NULL) from a frame with
+    an ``id`` column plus the symmetric edges frame: each vertex's
+    out-neighbours in one array, empty for an isolated vertex.  One
+    exchange: the vertices' own rows and the edges meet in one
+    ``groupBy(id)``, and edges whose ``src`` is not a vertex are
+    dropped, as a left join of the neighbour lists would drop them."""
+    own = node_ids.select("id", F.lit(None).cast("long").alias("dst"), F.lit(1).alias("own"))
+    out = edges.select(F.col("src").alias("id"), "dst", F.lit(None).cast("int").alias("own"))
+    return (
+        own.unionByName(out)
+        .groupBy("id")
+        .agg(F.collect_list("dst").alias("nbrs"), F.max("own").alias("own"))
+        .filter(F.col("own").isNotNull())
+        .select(
+            "id",
+            F.size("nbrs").cast("long").alias("degree"),
+            "nbrs",
+            F.lit(None).cast("int").alias("color"),
+        )
+    )
+
+
+# One round as two SQL texts, because a round's plan is rebuilt on the
+# driver every round and one ``spark.sql`` call costs far fewer py4j
+# calls than the same plan built Column by Column.  Each phase is a
+# union of the vertices' own rows and their messages, grouped by the
+# receiving id: ``max`` picks the one own row's fields out of a group
+# (message rows carry NULL there), and a group with no own row (a
+# message to an id missing from the vertex frame) is dropped.  Phase 2
+# keeps a candidate unless a neighbour proposed it with a greater
+# (degree, id): a deterministic tie-break, where the reference's reduce
+# (coloring.py:19-35) and greedy scan order (coloring.py:64 asc vs
+# coloring_optimized.py:170-172 desc) depend on partition order.
+_CANDIDATES_SQL = """
+SELECT id, degree, nbrs, color,
+       CASE WHEN color IS NULL THEN try_element_at(array_except(
+         sequence(0, CAST(least({top}, degree) AS INT)), used), 1) END AS cand
+FROM (
+  SELECT id, max(degree) AS degree, max(nbrs) AS nbrs, max(color) AS color,
+         collect_set(msg) AS used
+  FROM (
+    SELECT id, degree, nbrs, color, CAST(NULL AS INT) AS msg FROM {state}
+    UNION ALL
+    SELECT explode(nbrs), NULL, NULL, NULL, color FROM {state}
+    WHERE color IS NOT NULL
+  )
+  GROUP BY id
+)
+WHERE degree IS NOT NULL
+"""
+
+_WINNERS_SQL = """
+SELECT id, degree, nbrs,
+       CASE WHEN cand IS NOT NULL AND NOT exists(msgs, m -> m.c = cand
+              AND (m.d > degree OR (m.d = degree AND m.i > id)))
+            THEN cand ELSE old_color END AS color,
+       cand, old_color IS NULL AS was_uncolored
+FROM (
+  SELECT id, max(degree) AS degree, max(nbrs) AS nbrs,
+         max(color) AS old_color, max(cand) AS cand, collect_list(msg) AS msgs
+  FROM (
+    SELECT id, degree, nbrs, color, cand,
+           CAST(NULL AS STRUCT<d: BIGINT, i: BIGINT, c: INT>) AS msg
+    FROM {cands}
+    UNION ALL
+    SELECT explode(nbrs), NULL, NULL, NULL, NULL,
+           named_struct('d', degree, 'i', id, 'c', cand)
+    FROM {cands} WHERE cand IS NOT NULL
+  )
+  GROUP BY id
+)
+WHERE degree IS NOT NULL
+"""
+
+_ROUND_STATS_SQL = """
+SELECT count_if(was_uncolored) AS uncolored,
+       count_if(was_uncolored AND cand IS NULL) AS exhausted,
+       max(cand) AS max_candidate,
+       count_if(color IS NULL) AS uncolored_after,
+       max(color) AS max_color
+FROM {state}
+"""
 
 
 @dataclass
@@ -156,119 +234,61 @@ def color_graph_attempt(
     """One coloring attempt with palette [0, k). Reference G1
     (coloring.py:73-132).
 
-    ``vertices`` must be (id, degree, color) with color all-NULL;
-    ``edges`` symmetric and ideally persisted by the caller.
+    ``vertices`` supplies the vertex ids (an ``init_vertices`` frame or
+    any frame with an ``id`` column); every vertex starts uncolored.
+    ``edges`` is symmetric.  The attempt builds its ``adjacency`` state
+    from the two and colors it.
     """
-    if k < 1:
-        # review r5: sequence(0, k-1) DESCENDS for k <= 0 (Spark infers
-        # step -1), which would hand out negative "colors" and report a
-        # bogus success — fail loudly instead
-        raise ValueError(f"color_graph_attempt: palette size k must be >= 1, got {k}")
-    state = vertices.localCheckpoint(eager=False)
-    rounds = 0
-    max_candidates: list[int | None] = []
-    prev_cand: DataFrame | None = None
+    return _color_rounds(adjacency(vertices, edges), k, max_rounds)
 
-    def _cleanup() -> None:
-        if prev_cand is not None:
-            prev_cand.unpersist(False)
+
+def _color_rounds(state: DataFrame, k: int, max_rounds: int) -> AttemptResult:
+    """The round loop over an ``adjacency`` state.
+
+    ``AttemptResult.rounds`` counts the round that would find nothing
+    left to color, though it is not run: its answer is the last run
+    round's uncolored-after count, and its ``max_candidates`` entry is
+    None.  The returned vertices are (id, degree, color)."""
+    if k < 1:
+        # sequence(0, k-1) DESCENDS for k <= 0 (Spark infers step -1),
+        # which would hand out negative "colors" and report a bogus
+        # success — fail loudly instead
+        raise ValueError(f"color_graph_attempt: palette size k must be >= 1, got {k}")
+    spark = state.sparkSession
+    # ``spark.sql`` reads a DataFrame argument through a temporary view,
+    # and a view's plan does not pick up the frame's persisted blocks:
+    # start the loop from a checkpoint, whose rows come from the cache
+    state = state.localCheckpoint(eager=False)
+    max_candidates: list[int | None] = []
+    rounds = 0
+
+    def result(success: bool, max_color: int | None = None) -> AttemptResult:
+        # an EMPTY graph has max(color) = NULL and uses zero colors
+        n_used = -1 if not success else (max_color + 1 if max_color is not None else 0)
+        return AttemptResult(
+            success, state.select("id", "degree", "color"), rounds, n_used, max_candidates
+        )
 
     while True:
         rounds += 1
         if rounds > max_rounds:  # stall guard (reference G4, coloring.py:93-96;
             # unreachable here since every round makes progress, kept as a belt)
-            _cleanup()
-            return AttemptResult(False, state, rounds, -1, max_candidates)
-
-        colored = state.filter(F.col("color").isNotNull()).select(
-            F.col("id").alias("nbr_id"), F.col("color").alias("nbr_color")
-        )
-        used = (
-            edges.join(colored, edges.dst == colored.nbr_id)
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.collect_set("nbr_color").alias("used"))
-        )
-        cand = (
-            state.filter(F.col("color").isNull())
-            .join(used, "id", "left")
-            .select(
-                "id",
-                "degree",
-                F.try_element_at(
-                    F.array_except(
-                        # palette capped at degree+1 (pigeonhole: <= degree
-                        # neighbor colors can block, so a free color always
-                        # exists in 0..degree) -- EXACTLY equivalent to the
-                        # full 0..k-1 sequence but per-vertex work becomes
-                        # O(min(k, deg)) instead of O(k).  Matters when the
-                        # Delta+1 seed meets a hub: a 10k-degree skew probe
-                        # at k=10009 runs 37.5 s uncapped vs 15.8 s capped
-                        # (r6 A/B, tools/scale_probe_graph.py).
-                        F.sequence(
-                            F.lit(0),
-                            F.least(F.lit(k - 1), F.col("degree")).cast("int"),
-                        ),
-                        F.coalesce(F.col("used"), F.array().cast("array<int>")),
-                    ),
-                    F.lit(1),
-                ).alias("candidate"),
-            )
-        )
-        cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-
-        # ONE action per round: remaining-uncolored + palette-exhausted
-        # counts, and the largest candidate (minimal_coloring derives the
-        # smaller-palette attempt from it).  This collect also
-        # materializes the checkpointed ``state`` from the previous round
-        # and caches ``cand`` for the winner join below.
-        stats = cand.agg(
-            F.count("*").alias("uncolored"),
-            F.count(F.when(F.col("candidate").isNull(), 1)).alias("exhausted"),
-            F.max("candidate").alias("max_candidate"),
-        ).collect()[0]
+            return result(False)
+        cands = spark.sql(_CANDIDATES_SQL, state=state, top=k - 1)
+        state = spark.sql(_WINNERS_SQL, cands=cands).localCheckpoint(eager=False)
+        # ONE action per round; it also materializes the checkpoint
+        stats = spark.sql(_ROUND_STATS_SQL, state=state).collect()[0]
         max_candidates.append(stats["max_candidate"])
-        # the prior round's cand is now unreferenced (state was checkpointed
-        # inside the collect above) — release it
-        _cleanup()
-        prev_cand = cand
         if stats["uncolored"] == 0:
-            used_colors = state.agg(F.max("color")).collect()[0][0]
-            _cleanup()
-            # None-checked, not `or 0` (review r5): an EMPTY graph has
-            # max(color) = NULL and uses zero colors, not one
-            n_used = (used_colors + 1) if used_colors is not None else 0
-            return AttemptResult(True, state, rounds, n_used, max_candidates)
+            return result(True, stats["max_color"])
         if stats["exhausted"] > 0:  # G5 failure detector (coloring.py:104-108)
-            _cleanup()
-            return AttemptResult(False, state, rounds, -1, max_candidates)
-
-        c_src = cand.select(
-            F.col("id").alias("u"), F.col("degree").alias("du"), F.col("candidate").alias("cu")
-        )
-        c_dst = cand.select(
-            F.col("id").alias("v"), F.col("degree").alias("dv"), F.col("candidate").alias("cv")
-        )
-        losers = (
-            edges.join(c_src, edges.src == c_src.u)
-            .join(c_dst, edges.dst == c_dst.v)
-            .filter(
-                (F.col("cu") == F.col("cv"))
-                & _higher_priority(F.col("du"), F.col("u"), F.col("dv"), F.col("v"))
-            )
-            .select(F.col("u").alias("id"))
-        )
-        winners = cand.join(losers, "id", "left_anti").select(
-            "id", F.col("candidate").alias("new_color")
-        )
-        state = (
-            state.join(winners, "id", "left")
-            .select(
-                "id",
-                "degree",
-                F.coalesce("color", "new_color").cast("int").alias("color"),
-            )
-            .localCheckpoint(eager=False)
-        )
+            return result(False)
+        if stats["uncolored_after"] == 0:
+            rounds += 1  # the round that finds nothing left to color
+            if rounds > max_rounds:
+                return result(False)
+            max_candidates.append(None)
+            return result(True, stats["max_color"])
 
 
 def _failing_round(max_candidates: list[int | None], k: int) -> int:
@@ -311,80 +331,45 @@ def minimal_coloring(
     failing attempt's round count is the first round whose maximum
     candidate (``AttemptResult.max_candidates``) is ≥ m-1.
 
-    Cache lifetime (ADVICE r6): each call registers one tracked persist
-    of its vertex frame (see the verts0 note below) that lives until
-    ``release_session_caches`` — deliberate for repeated colorings of
-    the SAME graph (the bench/serve pattern).  Callers looping over many
-    DISTINCT graphs (scale probes, library use) should call
-    ``release_session_caches(spark)`` periodically, or each graph's
-    blocks accumulate until Spark's LRU eviction.
+    ``edges`` is read once, by the adjacency build.  The adjacency state
+    is a tracked persist (``cache.persist_tracked``) that lives until
+    ``release_session_caches``: Spark's CacheManager matches cached
+    plans by canonical form, so a later coloring of the same graph
+    reuses its blocks.  Callers coloring many distinct graphs in one
+    session should call ``release_session_caches(spark)`` now and then,
+    or each graph's blocks stay until Spark's LRU eviction.
     """
-    caller_k = start_k is not None
-    # persist-ownership discipline (perf regression r5: the bench showed
-    # graph_color_customers 4.4 s → 16.8 s after the finally-unpersist
-    # landed): when the CALLER hands in an already-persisted edge frame
-    # (the session customer-graph cache, a caller's own working set),
-    # unpersisting it here silently evicts THEIR cache — the flagship
-    # query then rebuilt the edge projection for the in-query validator
-    # and again on every subsequent run.  Only release what this
-    # function itself persisted.
-    edges_were_persisted = edges.storageLevel.useMemory or edges.storageLevel.useDisk
-    if not edges_were_persisted:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # verts0 is a TRACKED persist (cache.py), not a per-call
-    # persist/finally-unpersist pair: Spark's CacheManager matches
-    # cached plans by canonicalized form, so a later coloring of the
-    # same graph reuses these blocks outright — the r5 finally-unpersist
-    # destroyed that reuse and cost the flagship ~0.7 s/run at sf0.1
-    # plus a much longer warmup (r6 isolation of the graph-family
-    # creep: 12-run steady state 4.6 → 3.9 s with the unpersist
-    # removed).  The r5 leak concern stays addressed with the same
-    # lifetime every session memo has: release_session_caches drops the
-    # tracked blocks in bulk.
     from ..cache import persist_tracked
 
-    verts0 = persist_tracked(node_ids.sparkSession, init_vertices(node_ids, edges))
-    try:
-        stats = verts0.agg(
-            F.count("*").alias("n"), F.max("degree").alias("max_deg")
-        ).collect()[0]
-        if start_k is None:
-            start_k = (stats["max_deg"] or 0) + 1  # Δ+1 always suffices (coloring.py:212)
+    caller_k = start_k is not None
+    adj = persist_tracked(node_ids.sparkSession, adjacency(node_ids, edges))
+    stats = adj.agg(F.count("*").alias("n"), F.max("degree").alias("max_deg")).collect()[0]
+    if start_k is None:
+        start_k = (stats["max_deg"] or 0) + 1  # Δ+1 always suffices (coloring.py:212)
 
-        k = max(start_k, 1)
-        # every round is joins/aggs over |V|-row frames — size the loop's
-        # shuffle width to that, not to the session's scan-oriented value
-        with scoped_shuffle_partitions(edges.sparkSession, int(stats["n"])):
-            res = color_graph_attempt(verts0, edges, k, max_rounds=max_rounds)
+    k = max(start_k, 1)
+    # every round aggregates |V|-row frames — size the loop's shuffle
+    # width to that, not to the session's scan-oriented value
+    with scoped_shuffle_partitions(edges.sparkSession, int(stats["n"])):
+        res = _color_rounds(adj, k, max_rounds)
 
-        if not res.success:
-            if caller_k:
-                # review r5: a too-small CALLER palette is an expected
-                # outcome, not a broken input — say so
-                raise ValueError(
-                    f"coloring failed: caller-supplied start_k={start_k} is"
-                    " below the chromatic number; retry with a larger palette"
-                    " or start_k=None for the Δ+1 guarantee"
-                )
-            # Even Δ+1 failed — impossible for a simple graph; only reachable
-            # if the input violates the symmetric/no-self-loop contract.
+    if not res.success:
+        if caller_k:
+            # a too-small CALLER palette is an expected outcome, not a
+            # broken input — say so
             raise ValueError(
-                "coloring failed at k = Δ+1; input graph is not simple/symmetric"
+                f"coloring failed: caller-supplied start_k={start_k} is"
+                " below the chromatic number; retry with a larger palette"
+                " or start_k=None for the Δ+1 guarantee"
             )
-        m = res.colors_used
-        attempts = [(k, True, res.rounds)]
-        if m >= 2:
-            attempts.append((m - 1, False, _failing_round(res.max_candidates, m - 1)))
-        return ColoringResult(m, res.vertices, attempts)
-    finally:
-        # the returned vertices are localCheckpoint-backed (materialized
-        # by the attempt's final stats collect), so the edge blocks THIS
-        # call persisted can be released; caller-persisted edges stay
-        # cached (see ownership note above).  verts0 deliberately stays
-        # cached under the tracked-persist registry for cross-call plan
-        # reuse — release_session_caches is its lifetime.
-        if not edges_were_persisted:
-            edges.unpersist(False)
+        # Even Δ+1 failed — impossible for a simple graph; only reachable
+        # if the input violates the symmetric/no-self-loop contract.
+        raise ValueError("coloring failed at k = Δ+1; input graph is not simple/symmetric")
+    m = res.colors_used
+    attempts = [(k, True, res.rounds)]
+    if m >= 2:
+        attempts.append((m - 1, False, _failing_round(res.max_candidates, m - 1)))
+    return ColoringResult(m, res.vertices, attempts)
 
 
 def validate_coloring(vertices: DataFrame, edges: DataFrame) -> tuple[bool, int, int]:
@@ -393,14 +378,25 @@ def validate_coloring(vertices: DataFrame, edges: DataFrame) -> tuple[bool, int,
     edge joins two equal colors. Returns (valid, n_uncolored,
     conflict_count); symmetric edges mean each conflict edge counts twice,
     exactly like the reference (coloring.py:157-159).
+
+    One Spark action: the uncolored vertices and the conflicting edges
+    are counted by one aggregate over their union.
     """
-    n_uncolored = vertices.filter(F.col("color").isNull()).count()
     cs = vertices.select(F.col("id").alias("s_id"), F.col("color").alias("s_color"))
     cd = vertices.select(F.col("id").alias("d_id"), F.col("color").alias("d_color"))
     conflicts = (
         edges.join(cs, edges.src == cs.s_id)
         .join(cd, edges.dst == cd.d_id)
         .filter(F.col("s_color") == F.col("d_color"))
-        .count()
+        .select(F.lit(0).alias("uncolored"), F.lit(1).alias("conflict"))
     )
+    uncolored = vertices.filter(F.col("color").isNull()).select(
+        F.lit(1).alias("uncolored"), F.lit(0).alias("conflict")
+    )
+    row = (
+        uncolored.unionByName(conflicts)
+        .agg(F.sum("uncolored").alias("uncolored"), F.sum("conflict").alias("conflicts"))
+        .collect()[0]
+    )
+    n_uncolored, conflicts = row["uncolored"] or 0, row["conflicts"] or 0
     return (n_uncolored == 0 and conflicts == 0, n_uncolored, conflicts)

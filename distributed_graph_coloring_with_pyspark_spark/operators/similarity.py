@@ -1037,7 +1037,7 @@ def ann_ivf_topk_indexed(
 
     Jobs: 7 on a warm session at sf0.01 — the embeddings table's schema
     inference (``load_table``), two for the probed-cells collect over
-    the persisted probe frame, the index's schema inference, and three
+    the checkpointed probe frame, the index's schema inference, and three
     query-stage jobs for the rerank and its top-K tail
     (``_topk_per_probe``)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1046,9 +1046,11 @@ def ann_ivf_topk_indexed(
     cents = (
         side["centroids"] if side else _get_ivf_centroids(spark, sf_dir, emb)
     )
-    # persisted: the probe frame feeds both the probed-cells collect and
-    # the rerank join, which would otherwise re-score all K centroids
-    probes = persist_tracked(spark, _ivf_probes(emb, cents))
+    # checkpointed: the probe frame feeds both the probed-cells collect
+    # and the rerank join, which would otherwise re-score all K
+    # centroids; its blocks go with the frame, so a serving session
+    # keeps nothing per query
+    probes = _ivf_probes(emb, cents).localCheckpoint(eager=False)
     probed_cells = sorted(
         r.cell for r in probes.select("cell").distinct().collect()
     )

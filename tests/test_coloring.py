@@ -9,6 +9,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from oracle_util import jobs_launched
+
 from distributed_graph_coloring_with_pyspark_spark.operators.coloring import (
     color_graph_attempt,
     init_vertices,
@@ -75,39 +77,86 @@ def test_isolated_nodes_color_zero(spark):
     assert res.vertices.filter(F.col("color") == 0).count() == 5
 
 
+def _count_actions(monkeypatch, DF):
+    """{"collect": n, "count": n}, counting the calls made from now on.
+    ``DF`` is the concrete (classic) DataFrame class, which overrides
+    collect/count: patching the pyspark.sql.DataFrame base would not
+    intercept instance calls."""
+    calls = {"collect": 0, "count": 0}
+    for name in calls:
+        orig = getattr(DF, name)
+
+        def counted(self, _name=name, _orig=orig):
+            calls[_name] += 1
+            return _orig(self)
+
+        monkeypatch.setattr(DF, name, counted)
+    return calls
+
+
 def test_one_action_per_round(spark, monkeypatch):
     """Pin the module's core perf contract (coloring.py docstring): each
-    round issues exactly ONE Spark action — the stats collect — plus one
-    final max(color) collect on success.  The reference runs 4-8 jobs per
-    round (collectAsMap + broadcast + 2 counts, coloring.py:80-131).
-    Catches regressions like an eager localCheckpoint (round-2 ADVICE) or
-    a stray .count() sneaking into the loop.  ``minimal_coloring`` runs
-    only its first attempt (the failing one is derived), adding just the
-    vertex stats collect."""
+    executed round issues exactly ONE Spark action, the stats collect,
+    and the reported trailing round (nothing left to color) and the
+    color count come from the last collect, not from more actions.  The
+    reference runs 4-8 jobs per round (collectAsMap + broadcast + 2
+    counts, coloring.py:80-131).  Catches regressions like an eager
+    localCheckpoint or a stray .count() sneaking into the loop.
+    ``minimal_coloring`` runs only its first attempt (the failing one is
+    derived), adding just the (n, Δ) collect."""
     node_ids, edges = generate_graph(spark, 60, 6, seed=11)
     verts = init_vertices(node_ids, edges)
-    DF = type(verts)  # the concrete (classic) DataFrame class, which
-    # overrides collect/count — patching the pyspark.sql.DataFrame base
-    # would not intercept instance calls
-
-    calls = {"collect": 0, "count": 0}
-    orig_collect, orig_count = DF.collect, DF.count
-    monkeypatch.setattr(
-        DF, "collect", lambda self: (calls.__setitem__("collect", calls["collect"] + 1), orig_collect(self))[1]
-    )
-    monkeypatch.setattr(
-        DF, "count", lambda self: (calls.__setitem__("count", calls["count"] + 1), orig_count(self))[1]
-    )
+    calls = _count_actions(monkeypatch, type(verts))
     res = color_graph_attempt(verts, edges, k=7)
     assert res.success
-    assert calls["collect"] == res.rounds + 1, calls
+    assert res.max_candidates[-1] is None
+    assert calls["collect"] == res.rounds - 1, calls
     assert calls["count"] == 0, calls
 
     calls.update(collect=0, count=0)
     result = minimal_coloring(node_ids, edges)
     assert len(result.attempts) == 2
-    assert calls["collect"] == result.attempts[0][2] + 2, calls
+    assert calls["collect"] == result.attempts[0][2], calls
     assert calls["count"] == 0, calls
+
+
+def test_coloring_job_budget(spark):
+    """An executed round is about four Spark jobs under AQE: the map
+    stages of its two message exchanges and the stats collect's two
+    stages; the adjacency build and its (n, Δ) collect add a few more.
+    A join-per-phase round is about eleven."""
+    node_ids, edges = generate_graph(spark, 60, 6, seed=13)
+    out = {}
+    n_jobs = jobs_launched(
+        spark,
+        "test_coloring_job_budget",
+        lambda: out.setdefault("result", minimal_coloring(node_ids, edges)),
+    )
+    executed = out["result"].attempts[0][2] - 1
+    assert executed >= 2
+    assert n_jobs <= 4 * executed + 6, (n_jobs, executed)
+
+
+def test_validate_coloring_one_action(spark, monkeypatch):
+    """The validator is one collect and no count, and counts each
+    conflicting symmetric edge twice, as the reference does
+    (coloring.py:157-159)."""
+    und = [(0, 1), (1, 2), (2, 3), (3, 4), (0, 2)]
+    edges = spark.createDataFrame(
+        und + [(b, a) for a, b in und], "src long, dst long"
+    )
+    # conflicts on 0-1 (color 0) and 2-3 (color 1); 4 is uncolored, and
+    # an uncolored endpoint is no conflict
+    improper = spark.createDataFrame(
+        [(0, 0), (1, 0), (2, 1), (3, 1), (4, None)], "id long, color int"
+    )
+    proper = spark.createDataFrame(
+        [(0, 0), (1, 1), (2, 2), (3, 0), (4, 1)], "id long, color int"
+    )
+    calls = _count_actions(monkeypatch, type(edges))
+    assert validate_coloring(improper, edges) == (False, 1, 4)
+    assert calls == {"collect": 1, "count": 0}, calls
+    assert validate_coloring(proper, edges) == (True, 0, 0)
 
 
 def test_palette_exhaustion_fails(spark):
@@ -176,12 +225,11 @@ def test_read_graph_json_rejects_null_ids(spark, tmp_path):
 
 
 def test_minimal_coloring_respects_caller_persisted_edges(spark):
-    """Persist-ownership regression (bench r5: graph_color_customers
-    4.4 s → 16.8 s): minimal_coloring's cleanup must release only the
-    blocks IT persisted — a caller-persisted edge frame (the session
-    customer-graph cache) must stay cached for the caller's validator
-    and subsequent queries, while a cold edge frame it persisted
-    itself must be released."""
+    """Persist ownership (an evicted caller cache once cost
+    graph_color_customers 4.4 s → 16.8 s): a caller-persisted edge frame
+    (the session customer-graph cache) must stay cached for the
+    caller's validator and subsequent queries, and a cold edge frame,
+    which minimal_coloring reads once, must not be left persisted."""
     node_ids, edges = generate_graph(spark, 40, 5, seed=11)
 
     cached = edges.persist()
@@ -193,7 +241,7 @@ def test_minimal_coloring_respects_caller_persisted_edges(spark):
     finally:
         cached.unpersist(False)
 
-    # a cold frame is persisted AND released by minimal_coloring itself
+    # a cold frame is read by the adjacency build and never persisted
     node_ids2, cold = generate_graph(spark, 40, 5, seed=12)
     minimal_coloring(node_ids2, cold)
     lvl = cold.storageLevel

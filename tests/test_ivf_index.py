@@ -45,6 +45,21 @@ def test_ivf_index_roundtrip_and_pruning(spark, tmp_path):
     cache.release(spark, "ivf_centroids")
 
 
+def test_ivf_indexed_queries_leave_no_tracked_frames(spark, tmp_path):
+    """A serving session's repeated indexed IVF queries keep nothing in
+    the session store: the probe frame is checkpointed per query, not a
+    tracked persist that only ``release_session_caches`` drops."""
+    idx = str(tmp_path / "ivf_index")
+    S.build_ivf_index(spark, SF, idx)
+    before = len(cache.entries(spark, "tracked_frames"))
+    want = [tuple(r) for r in S.ann_ivf_topk_indexed(spark, SF, idx).collect()]
+    for _ in range(4):
+        got = [tuple(r) for r in S.ann_ivf_topk_indexed(spark, SF, idx).collect()]
+        assert got == want
+    assert len(cache.entries(spark, "tracked_frames")) == before
+    cache.release(spark, "ivf_centroids")
+
+
 def test_ivf_index_incremental_add_equals_full_build(spark, tmp_path):
     """Partial build + ivf_index_add batches must equal a from-scratch
     full build row-for-row (same session quantizer), and the indexed

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from oracle_util import canon_rows
+from oracle_util import canon_rows, jobs_launched
 
 from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (
     PYTEST_ORACLES,
@@ -787,23 +787,6 @@ def test_lit_double_array_exact_roundtrip(spark):
     assert [bits(x) for x in row.m[1]] == [bits(v) for v in reversed(vals)]
 
 
-def _jobs_launched(spark, group, fn):
-    """Number of Spark jobs ``fn()`` launches, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for key in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        ):
-            sc.setLocalProperty(key, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_quantizer_training_job_budget(spark, tmp_path):
     """The quantizer trio trains in NumPy from one bounded training set:
     the IVF centroids plus the OPQ pair for a fresh corpus cost the two
@@ -823,8 +806,8 @@ def test_quantizer_training_job_budget(spark, tmp_path):
             S._get_ivf_centroids(spark, SF, emb)
             S._get_opq_state(spark, SF, emb)
 
-        assert _jobs_launched(spark, "quantizer-trio", train_trio) <= 3
-        rebuild = _jobs_launched(
+        assert jobs_launched(spark, "quantizer-trio", train_trio) <= 3
+        rebuild = jobs_launched(
             spark,
             "quantizer-rebuild",
             lambda: S.rebuild_ivfpq_index(
@@ -874,7 +857,7 @@ def test_serve_path_job_budget(spark, served_indexes):
     }
     for group, (query, budget) in budgets.items():
         query()
-        n_jobs = _jobs_launched(spark, f"serve-{group}", query)
+        n_jobs = jobs_launched(spark, f"serve-{group}", query)
         assert n_jobs <= budget, (group, n_jobs)
 
 

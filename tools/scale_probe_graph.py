@@ -13,8 +13,9 @@ graph has one size per sf, so scaling needs generated inputs):
     that the uniform 50k/500k curve (SCALE.md §Coloring) never hits.
 
 Each measurement is the SECOND run (warm — JIT/codegen amortized, same
-convention as bench.py's medians).  Results are transcribed into
-SCALE.md; re-run with `python tools/scale_probe_graph.py`.
+convention as bench.py's medians); the skewed coloring prints its cold
+run too, and the `xl`/`xxl` colorings run once.  Results are
+transcribed into SCALE.md; re-run with `python tools/scale_probe_graph.py`.
 """
 
 from __future__ import annotations
@@ -105,10 +106,10 @@ def main() -> int:
     # `xxl` (r12, VERDICT r11 #7): one decade further — 16M nodes /
     # ~100M directed edges, same 50k hub; confirms the round count
     # stays flat (<=10) while wall grows ~linearly with edges.
-    for part, n, hub_deg in (
-        ("skew", 100_000, 10_000),
-        ("xl", 8_000_000, 50_000),
-        ("xxl", 16_000_000, 50_000),
+    for part, n, hub_deg, runs in (
+        ("skew", 100_000, 10_000, 2),
+        ("xl", 8_000_000, 50_000, 1),
+        ("xxl", 16_000_000, 50_000, 1),
     ):
         if part not in parts:
             continue
@@ -132,17 +133,19 @@ def main() -> int:
             f"max_degree={hd:,} ---",
             flush=True,
         )
-        t0 = time.monotonic()
-        res = minimal_coloring(node_ids, edges)  # Δ+1 seed = hub_deg+1 —
-        # the skew case that motivated the degree-capped palette expression
-        valid, nu, cf = validate_coloring(res.vertices, edges)
-        wall = time.monotonic() - t0
-        print(
-            f"skewed coloring ({part}): {wall:.1f} s, colors={res.minimal_colors}, "
-            f"attempts={res.attempts}, valid={valid} (uncolored={nu}, conflicts={cf})",
-            flush=True,
-        )
-        assert valid
+        for run in range(runs):
+            t0 = time.monotonic()
+            res = minimal_coloring(node_ids, edges)  # Δ+1 seed = hub_deg+1 —
+            # the skew case that motivated the degree-capped palette expression
+            valid, nu, cf = validate_coloring(res.vertices, edges)
+            wall = time.monotonic() - t0
+            print(
+                f"skewed coloring ({part}, {'warm' if run else 'cold'}): {wall:.1f} s,"
+                f" colors={res.minimal_colors}, attempts={res.attempts},"
+                f" valid={valid} (uncolored={nu}, conflicts={cf})",
+                flush=True,
+            )
+            assert valid
         edges.unpersist()
     spark.stop()
     return 0

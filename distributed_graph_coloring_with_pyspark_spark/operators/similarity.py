@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 from .. import cache
 from ..cache import persist_tracked
 from ..litutil import lit_double_array, lit_double_matrix
-from ..sources.tables import load_table
+from ..sources.tables import forget_schema, load_table, read_parquet
 
 _DIM = 64
 _N_PLANES = 16
@@ -65,28 +65,36 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def _topk_per_probe(scored: DataFrame) -> DataFrame:
-    """Per-probe top-K tail shared by the exact KNN and every ANN path:
-    rank each probe's candidates by (cos_sim desc, vec_id) for a stable
-    tie-break, keep ``_TOP_K``, and emit (probe_id, rank, neighbor_id,
-    cos_sim) sorted by (probe_id, rank).  One definition keeps the ANN
-    paths in lockstep with the exact query their recall gates compare
-    against.
+# The per-probe top-K tail shared by the exact KNN and every ANN path,
+# as SQL text over a ``{scored}`` relation of (probe_id, vec_id, cos_sim)
+# rows: rank each probe's candidates by (cos_sim desc, vec_id) for a
+# stable tie-break, keep ``_TOP_K``, and emit (probe_id, rank,
+# neighbor_id, cos_sim) sorted by (probe_id, rank).  One definition keeps
+# the ANN paths in lockstep with the exact query their recall gates
+# compare against.
+#
+# Jobs: one shuffle, the window's.  The rank filter becomes a map-side
+# partial top-K ahead of it, so at most probes × K rows per map task
+# cross it and the scoring stage keeps its width.  The final order is a
+# sort inside one partition (``COALESCE(1)`` + ``SORT BY``); an ORDER BY
+# would add two jobs, a range-sampling one and a second shuffle
+# (SCALE.md).  ``(probe_id, rank)`` is unique, so the order is total.
+_TOPK_SQL = f"""
+SELECT /*+ COALESCE(1) */ probe_id, rank, vec_id AS neighbor_id, cos_sim
+FROM (
+  SELECT probe_id, vec_id, cos_sim,
+         row_number() OVER (PARTITION BY probe_id
+                            ORDER BY cos_sim DESC, vec_id) AS rank
+  FROM {{scored}}
+)
+WHERE rank <= {_TOP_K}
+SORT BY probe_id, rank
+"""
 
-    Jobs: one shuffle, the window's.  The rank filter becomes a map-side
-    partial top-K ahead of it, so at most probes × K rows per map task
-    cross it and the scoring stage keeps its width.  The final order is
-    a sort inside one partition; an ``orderBy`` would add two jobs, a
-    range-sampling one and a second shuffle (SCALE.md).
-    ``(probe_id, rank)`` is unique, so the order is total."""
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("probe_id", "rank", F.col("vec_id").alias("neighbor_id"), "cos_sim")
-        .coalesce(1)
-        .sortWithinPartitions("probe_id", "rank")
-    )
+
+def _topk_per_probe(scored: DataFrame) -> DataFrame:
+    """``_TOPK_SQL`` over a (probe_id, vec_id, cos_sim) frame."""
+    return scored.sparkSession.sql(_TOPK_SQL, scored=scored)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -974,6 +982,7 @@ def build_ivf_index(
         "vec_id", "embedding", _nearest_cell(F.col("embedding"), cents).alias("cell")
     )
     corpus.write.mode("overwrite").partitionBy("cell").parquet(index_path)
+    forget_schema(spark, index_path)
     _write_quantizer_sidecar(spark, index_path, cents)  # AFTER the overwrite
     return len(cents)
 
@@ -1035,11 +1044,14 @@ def ann_ivf_topk_indexed(
     falls back to the session trainer.  ``index_path`` may be a
     versioned root carrying a ``_current.json`` pointer.
 
-    Jobs: 7 on a warm session at sf0.01 — the embeddings table's schema
-    inference (``load_table``), two for the probed-cells collect over
-    the checkpointed probe frame, the index's schema inference, and three
-    query-stage jobs for the rerank and its top-K tail
-    (``_topk_per_probe``)."""
+    The index is read through ``read_parquet``: its schema (the
+    ``embedding`` type follows the source table) is inferred once per
+    session, and ``build_ivf_index`` and compaction drop it when they
+    rewrite the index.
+
+    Jobs: 5 on a warm session at sf0.01 — two for the probed-cells
+    collect over the checkpointed probe frame, and three query-stage
+    jobs for the rerank and its top-K tail (``_topk_per_probe``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = resolve_index_path(spark, index_path)
     side = _read_quantizer_sidecar(spark, index_path)
@@ -1054,7 +1066,7 @@ def ann_ivf_topk_indexed(
     probed_cells = sorted(
         r.cell for r in probes.select("cell").distinct().collect()
     )
-    corpus = spark.read.parquet(index_path).filter(F.col("cell").isin(probed_cells))
+    corpus = read_parquet(spark, index_path).filter(F.col("cell").isin(probed_cells))
     return _ivf_rerank(probes, corpus)
 
 
@@ -1191,6 +1203,25 @@ def _batch_codes(X, books_np):
     return out
 
 
+def _batch_shortlist(d, vids):
+    """Indices of the ``_PQ_SHORTLIST`` rows of one Arrow batch that are
+    smallest by (adc_dist ``d``, vec_id ``vids``), in that order.
+
+    ADC ties are common (vectors with identical codes get identical
+    distances), and ``argpartition`` alone keeps an arbitrary subset of
+    the ties at the boundary.  Keeping the (adc_dist, vec_id)-smallest
+    rows instead means every row the global shortlist window ranks in
+    survives its batch, so a scan's answer does not depend on how rows
+    fall into batches.  Only the boundary candidates (≤ keep + ties) are
+    lexsorted.  ``d`` is non-empty."""
+    import numpy as np
+
+    keep = min(_PQ_SHORTLIST, len(d))
+    thresh = d[np.argpartition(d, keep - 1)[keep - 1]]
+    cand = np.flatnonzero(d <= thresh)
+    return cand[np.lexsort((vids[cand], d[cand]))[:keep]]
+
+
 def _train_pq_codebooks(window, sample) -> list[list[list[float]]]:
     """Per-subspace Lloyd's k-means for the PQ codebooks -> [m][k][d']
     (M*KS*SUB floats of driver state).  Same recipe as the IVF coarse
@@ -1298,10 +1329,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 d = luts[p][midx[None, :], codes].sum(1)  # (n,)
                 mask = vids != probe_ids[p]  # self never a neighbor
                 dv, vv = d[mask], vids[mask]
-                keep = min(_PQ_SHORTLIST, len(dv))
-                if keep == 0:
+                if len(dv) == 0:
                     continue
-                top = np.argpartition(dv, keep - 1)[:keep]
+                top = _batch_shortlist(dv, vv)
                 frames.append(
                     pd.DataFrame(
                         {
@@ -1556,6 +1586,7 @@ def _write_ivfpq_index(
         coded = coded.withColumn("epoch", F.lit(_BASE_EPOCH))
         parts = ["epoch", "cell"]
     coded.write.mode("overwrite").partitionBy(*parts).parquet(path)
+    forget_schema(vectors.sparkSession, path)
     _write_quantizer_sidecar(
         vectors.sparkSession,
         path,
@@ -1610,13 +1641,9 @@ def _ivfpq_state(emb: DataFrame, q: Quantizer):
 
 def _ivfpq_adc_scan(frame: DataFrame, probe_ids, probed, luts) -> DataFrame:
     """ADC scan over (vec_id, cell, codes): one pass emitting per-batch
-    partial top-``_PQ_SHORTLIST`` rows per probe, so the corpus-sized
-    score stream never shuffles.  Each batch keeps its
-    (adc_dist, vec_id)-smallest rows, not an arbitrary subset of the
-    boundary ties, so every globally top-ranked row survives its batch
-    and the result does not depend on how rows fall into batches: a
-    stored index and an in-session encode of the same codes answer
-    identically."""
+    partial top-``_PQ_SHORTLIST`` rows per probe (``_batch_shortlist``),
+    so the corpus-sized score stream never shuffles and a stored index
+    and an in-session encode of the same codes answer identically."""
     import numpy as np
 
     def adc_batches(batches):
@@ -1635,16 +1662,7 @@ def _ivfpq_adc_scan(frame: DataFrame, probe_ids, probed, luts) -> DataFrame:
                 slot = np.searchsorted(probed[p], cells[mask])
                 d = luts[p][slot[:, None], midx[None, :], codes[mask]].sum(1)
                 vv = vids[mask]
-                keep = min(_PQ_SHORTLIST, len(d))
-                if keep == len(d):
-                    top = np.arange(len(d))
-                else:
-                    # lexsort only the ≤ keep + ties boundary candidates
-                    part = np.argpartition(d, keep - 1)
-                    thresh = d[part[keep - 1]]
-                    cand = np.flatnonzero(d <= thresh)
-                    order = np.lexsort((vv[cand], d[cand]))
-                    top = cand[order[:keep]]
+                top = _batch_shortlist(d, vv)
                 frames.append(
                     pd.DataFrame(
                         {
@@ -1663,31 +1681,56 @@ def _ivfpq_adc_scan(frame: DataFrame, probe_ids, probed, luts) -> DataFrame:
     )
 
 
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of ``dot`` over two double arrays."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """SQL text of ``cosine``: the same expression tree, so the same
+    doubles."""
+    ad = f"transform({a}, v -> CAST(v AS DOUBLE))"
+    bd = f"transform({b}, v -> CAST(v AS DOUBLE))"
+    return (
+        f"{_dot_sql(ad, bd)} / (sqrt({_dot_sql(ad, ad)}) * sqrt({_dot_sql(bd, bd)}))"
+    )
+
+
+# Global shortlist rank over the ADC scan's batch winners (≤ probes ×
+# SHORTLIST rows per batch reach the window), exact-cosine rerank of the
+# shortlist against the broadcast probes, then the top-K tail: the FAISS
+# PQ+refine tail of the flat-PQ path and both IVFPQ paths, as one SQL
+# text over ``{adc}`` (probe_id, vec_id, adc_dist) and ``{emb}``.  A
+# query builds this plan on the driver every time, and one ``spark.sql``
+# call costs far fewer py4j calls than the same plan built Column by
+# Column.
+_SHORTLIST_RERANK_SQL = _TOPK_SQL.replace(
+    "{scored}",
+    f"""(
+  SELECT /*+ BROADCAST(p) */ s.probe_id, s.vec_id,
+         round({_cosine_sql("p.probe_emb", "e.embedding")}, 6) AS cos_sim
+  FROM (
+    SELECT probe_id, vec_id
+    FROM (
+      SELECT probe_id, vec_id,
+             row_number() OVER (PARTITION BY probe_id
+                                ORDER BY adc_dist, vec_id) AS rk
+      FROM {{adc}}
+    )
+    WHERE rk <= {_PQ_SHORTLIST}
+  ) s
+  JOIN {{emb}} e ON s.vec_id = e.vec_id
+  JOIN (
+    SELECT vec_id AS probe_id, embedding AS probe_emb
+    FROM {{emb}} WHERE vec_id < {_N_PROBES}
+  ) p ON s.probe_id = p.probe_id
+)""",
+)
+
+
 def _ivfpq_shortlist_rerank(emb: DataFrame, adc: DataFrame) -> DataFrame:
-    """Global shortlist rank over batch winners (≤ probes×SHORTLIST rows
-    per batch reach the window) + exact-cosine rerank — the FAISS
-    PQ+refine tail shared by the flat-PQ path and both IVFPQ paths."""
-    w = Window.partitionBy("probe_id").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _PQ_SHORTLIST)
-        .select("probe_id", "vec_id")
-    )
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_emb")
-    )
-    rerank = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(probes), "probe_id")
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(cosine(F.col("probe_emb"), F.col("embedding")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    return _topk_per_probe(rerank)
+    """``_SHORTLIST_RERANK_SQL`` over an ADC scan's output."""
+    return emb.sparkSession.sql(_SHORTLIST_RERANK_SQL, adc=adc, emb=emb)
 
 
 def _ivfpq_topk(emb: DataFrame, q: Quantizer, codes: DataFrame) -> DataFrame:
@@ -1695,7 +1738,14 @@ def _ivfpq_topk(emb: DataFrame, q: Quantizer, codes: DataFrame) -> DataFrame:
     frame encoded under ``q``, stored or in-session alike: the probed
     cell ids go into an IN filter on ``cell`` (a parquet partition
     filter on a stored index, so unprobed cells never leave disk), then
-    the ADC scan and the exact rerank."""
+    the ADC scan and the exact rerank, one SQL text
+    (``_SHORTLIST_RERANK_SQL``).
+
+    Jobs on a warm session at sf0.01: the probe collect
+    (``_ivfpq_state``), then the query-stage jobs of the ADC scan, the
+    shortlist window, the rerank join and the top-K tail — 6 in all over
+    a stored index (``ann_ivfpq_topk_indexed``), 5 over an in-session
+    encode (``ann_ivfpq_topk``, ``ann_opq_topk``)."""
     probe_ids, probed, luts = _ivfpq_state(emb, q)
     probed_cells = sorted({int(c) for row in probed for c in row})
     corpus = codes.filter(F.col("cell").isin(probed_cells)).select(
@@ -1856,10 +1906,8 @@ def ann_ivfpq_topk_indexed(
     inferred one; the ``epoch`` partition column of a stream-maintained
     index is still discovered from its directories.
 
-    Jobs: 7 on a warm session at sf0.01 — the embeddings table's schema
-    inference (``load_table``), the probe collect (``_ivfpq_state``),
-    and five query-stage jobs for the pruned ADC scan, the shortlist
-    window, the rerank join and the top-K tail (``_topk_per_probe``)."""
+    Jobs: 6 on a warm session at sf0.01 (``_ivfpq_topk``); the
+    embeddings table's schema is ``load_table``'s per-session one."""
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = resolve_index_path(spark, index_path)
     q = _index_quantizer(spark, index_path)

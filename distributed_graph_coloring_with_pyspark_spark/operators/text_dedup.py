@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..cache import persist_tracked
-from ..sources.tables import load_table
+from ..sources.tables import forget_schema, load_table
 
 # MinHash parameters: b bands × r rows = k hashes.
 # s-curve: P(candidate | jaccard=s) = 1 - (1 - s^r)^b
@@ -2077,6 +2077,7 @@ def export_training_shards(
             .partitionBy("shard")
             .parquet(out_path)
         )
+        forget_schema(spark, out_path)
     return (
         tagged.groupBy("shard")
         .agg(

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
-from ..sources.tables import load_table
+from ..sources.tables import forget_schema, load_table
 
 # same pre-tokenization as token_stats_bpe (text_dedup._BPE_PATTERN) —
 # duplicated as a literal so neither module imports the other's private
@@ -348,6 +348,7 @@ def bpe_encode_export(
     )
     if out_path is not None:
         out.write.mode("overwrite").parquet(out_path)
+        forget_schema(spark, out_path)
         return spark.read.parquet(out_path)
     return out
 

@@ -12,6 +12,12 @@ Kryo-pickled Python objects and AQE sizes shuffles at runtime. We pin:
 - Arrow on — every Pandas-UDF boundary is Arrow-batched.
 - shuffle partitions default to local core count; on a real cluster this
   is overridden (AQE coalesces down, so a high initial value is safe).
+- ``spark.python.daemon.module`` is the package's ``worker_daemon``:
+  PySpark's daemon, whose workers re-read a zip archive on the Python
+  path only when it changed, instead of all of them on every task.
+  Worker Python must therefore import this package (cwd or
+  ``PYTHONPATH``), as by-reference pickles of its functions already
+  require.
 """
 
 from __future__ import annotations
@@ -52,6 +58,7 @@ def get_spark(
         # events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
         # default; read as long nanos and convert in sources/tables.py
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

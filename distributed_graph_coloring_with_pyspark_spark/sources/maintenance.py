@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import forget_schema
+
 
 def _part_files(path: str) -> list[str]:
     return [
@@ -78,6 +80,7 @@ def compact_parquet(
         shuffled.write.mode("overwrite").partitionBy(*partition_by).parquet(out_path)
     else:
         df.repartition(n_out).write.mode("overwrite").parquet(out_path)
+    forget_schema(spark, out_path)
     import shutil
 
     for name in os.listdir(src_path) if os.path.isdir(src_path) else []:
@@ -190,6 +193,7 @@ def zorder_layout(
         .write.mode("overwrite")
         .parquet(out_path)
     )
+    forget_schema(spark, out_path)
     out = spark.read.parquet(out_path)
     return spark.createDataFrame(
         [(len(_part_files(out_path)), out.count())],
@@ -347,6 +351,7 @@ def delete_rows_partitioned(
             for p in dropped:
                 for d in dir_map.get(p, ()):
                     shutil.rmtree(d, ignore_errors=True)
+            forget_schema(spark, table_path)
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
     finally:

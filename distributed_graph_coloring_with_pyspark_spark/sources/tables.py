@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import cache
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -176,7 +178,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # would infer TIMESTAMP_NTZ for pandas-written tz-naive micros,
         # which diverges from the UTC-pinned session the oracle assumes)
         return spark.read.schema(EVENTS_TS_SCHEMA).parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    (session, path) and read back through ``spark.read.schema``:
+    inference is a Spark job of its own, which a repeated query would
+    otherwise pay on every call.  Partition columns are still discovered
+    from the directories.  A package writer that rewrites ``path`` calls
+    ``forget_schema`` after the write."""
+    schema = cache.memo(
+        spark, "table_schemas", path, lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
+def forget_schema(spark: SparkSession, path: str) -> None:
+    """Drop the schema ``read_parquet`` keeps for ``path``."""
+    cache.release(spark, "table_schemas", path)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

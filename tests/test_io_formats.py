@@ -7,6 +7,7 @@ layouts at the scan — the properties that decide scan cost at 100 TB."""
 
 from __future__ import annotations
 
+from oracle_util import jobs_launched
 from pyspark.sql import functions as F
 
 from distributed_graph_coloring_with_pyspark_spark.plans.audit import plan_string
@@ -186,6 +187,32 @@ def test_multifile_corpus_layout(spark, tmp_path):
         assert sa and sa == sb
     finally:
         cache.release(spark, "shingles")
+
+
+def test_load_table_infers_each_schema_once(spark, tmp_path):
+    """The first ``load_table`` of a table infers its schema (a Spark
+    job); a second load of the same table launches none.  A package
+    writer that rewrites the path (compaction here) drops the kept
+    schema, so the next load sees the new one."""
+    from distributed_graph_coloring_with_pyspark_spark.sources.maintenance import (
+        compact_parquet,
+    )
+
+    sf = str(tmp_path)
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(
+        f"{sf}/part.parquet"
+    )
+    first = jobs_launched(spark, "load-first", lambda: load_table(spark, sf, "part"))
+    again = jobs_launched(spark, "load-again", lambda: load_table(spark, sf, "part"))
+    assert (first, again) == (1, 0)
+    assert _sorted_rows(load_table(spark, sf, "part")) == [(1, "a")]
+
+    src = str(tmp_path / "wider.parquet")
+    spark.createDataFrame([(2, "b", 0.5)], "k long, v string, w double").write.parquet(
+        src
+    )
+    compact_parquet(spark, src, f"{sf}/part.parquet")
+    assert _sorted_rows(load_table(spark, sf, "part")) == [(2, "b", 0.5)]
 
 
 def test_compact_parquet_preserves_content_and_shrinks_files(spark, tmp_path):

@@ -181,6 +181,7 @@ def test_release_session_caches_all_at_once(spark):
         "classifier",
         "decon_drop_sets",
         "tracked_frames",
+        "table_schemas",
     }
     assert all(n >= 1 for n in released.values()), released
     assert all(n == 0 for n in release_session_caches(spark).values())

@@ -837,7 +837,7 @@ def served_indexes(spark, tmp_path_factory):
 def test_serve_path_job_budget(spark, served_indexes):
     """A repeated top-k query pays for its search and little else: no
     range-sampling sort of the probe rows or of the result, and no
-    schema inference of a stored IVFPQ index.  Each query runs once
+    schema inference of the embeddings table or of a stored index.  Each query runs once
     before it is counted, as a serving session's queries do."""
     from distributed_graph_coloring_with_pyspark_spark.operators import (
         similarity as S,
@@ -847,18 +847,71 @@ def test_serve_path_job_budget(spark, served_indexes):
     budgets = {
         "ivfpq-indexed": (
             lambda: S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect(),
-            7,
+            6,
         ),
         "ivf-indexed": (
             lambda: S.ann_ivf_topk_indexed(spark, SF, ivf_idx).collect(),
-            7,
+            5,
         ),
-        "knn-exact": (lambda: S.knn_exact_topk(spark, SF).collect(), 4),
+        "knn-exact": (lambda: S.knn_exact_topk(spark, SF).collect(), 3),
     }
     for group, (query, budget) in budgets.items():
         query()
         n_jobs = jobs_launched(spark, f"serve-{group}", query)
         assert n_jobs <= budget, (group, n_jobs)
+
+
+def test_batch_shortlist_keeps_smallest_by_dist_then_id():
+    """On batches full of ADC ties the shortlist is exactly the first
+    ``_PQ_SHORTLIST`` rows of the (adc_dist, vec_id) order, in that
+    order, not an arbitrary subset of the boundary ties."""
+    import numpy as np
+
+    from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (
+        _PQ_SHORTLIST,
+        _batch_shortlist,
+    )
+
+    rng = np.random.default_rng(5)
+    for n in (1, 7, _PQ_SHORTLIST, _PQ_SHORTLIST + 1, 400):
+        d = rng.integers(0, 4, n).astype(np.float64)  # four distinct values
+        vids = rng.permutation(3 * n)[:n]
+        want = np.lexsort((vids, d))[: min(n, _PQ_SHORTLIST)]
+        assert _batch_shortlist(d, vids).tolist() == want.tolist(), n
+
+
+def test_pq_answer_does_not_depend_on_arrow_batches(spark, tmp_path):
+    """Flat PQ over a corpus holding 80 copies of probe 0 (identical
+    codes, so 80 ADC ties around the shortlist boundary), stored in
+    descending vec_id order: the answer at 7 rows per Arrow batch, where
+    every row survives its batch, equals the one-batch answer, and probe
+    0's neighbours are the lowest-id copies."""
+    import numpy as np
+
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    rng = np.random.default_rng(3)
+    X = rng.normal(size=(300, S._DIM))
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    X[100:180] = X[0]
+    sf = str(tmp_path / "ties")
+    spark.createDataFrame(
+        [(i, X[i].tolist(), 0) for i in reversed(range(len(X)))],
+        "vec_id long, embedding array<float>, label int",
+    ).coalesce(1).write.parquet(f"{sf}/embeddings.parquet")
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    one_batch = [tuple(r) for r in S.ann_pq_topk(spark, sf).collect()]
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = [tuple(r) for r in S.ann_pq_topk(spark, sf).collect()]
+    finally:
+        spark.conf.set(key, prev)
+    assert small == one_batch
+    assert [r[2] for r in one_batch if r[0] == 0] == [100, 101, 102, 103, 104]
 
 
 def test_topk_rows_come_sorted_by_probe_then_rank(spark, served_indexes):

@@ -354,6 +354,8 @@ def main() -> int:
     def bench_ann_ivfpq_serve_cold(spark, sf_dir):
         cache.release(spark, "ivf_centroids")
         cache.release(spark, "pq_codebooks")
+        cache.release(spark, "index_quantizers")
+        cache.release(spark, "ivfpq_serve")
         spark.catalog.refreshByPath(ivfpq_path)
         return ann_ivfpq_topk_indexed(spark, sf_dir, ivfpq_path)
 
@@ -370,6 +372,8 @@ def main() -> int:
     def bench_ann_opq_serve_cold(spark, sf_dir):
         cache.release(spark, "ivf_centroids")
         cache.release(spark, "pq_codebooks")
+        cache.release(spark, "index_quantizers")
+        cache.release(spark, "ivfpq_serve")
         spark.catalog.refreshByPath(opq_path)
         return ann_ivfpq_topk_indexed(spark, sf_dir, opq_path)
 

@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 from .. import cache
 from ..cache import persist_tracked
 from ..litutil import lit_double_array, lit_double_matrix
-from ..sources.tables import forget_schema, load_table, read_parquet
+from ..sources.tables import forget_schema, load_table, read_parquet, table_path
 
 _DIM = 64
 _N_PLANES = 16
@@ -752,6 +752,10 @@ _QUANTIZER_SIDECAR = "_quantizer.json"  # underscore-prefixed: parquet
 # readers skip it like _SUCCESS, so it can live inside the index dir
 
 
+def _sidecar_path(index_path: str) -> str:
+    return f"{index_path.rstrip('/')}/{_QUANTIZER_SIDECAR}"
+
+
 def _sidecar_fs(spark: SparkSession, path_str: str):
     """(jvm, FileSystem, Path) for a path, resolved through the Hadoop
     FileSystem API, so the index's control files (quantizer sidecar,
@@ -1260,12 +1264,16 @@ def _get_pq_codebooks(
 
 
 def _probe_matrix(emb: DataFrame):
-    """(probe ids ascending, (n_probes, DIM) float64 matrix) of the
-    ``_N_PROBES`` probe rows, for the driver-built ADC tables.
+    """(probe ids ascending, (n_probes, DIM) float32 rows) of the
+    ``_N_PROBES`` probe rows: the table's own values, which the ADC rows
+    carry to the rerank (``_adc_frame``) and which, widened to float64,
+    build the driver's ADC tables.
 
-    Jobs: one collect.  The rows are sorted by vec_id on the driver; an
-    ``orderBy`` would add a range-sampling job and a shuffle for a few
-    dozen rows."""
+    Jobs: one collect, per query on the flat-PQ and in-session IVFPQ
+    paths and once per index and table version on the indexed serve
+    (``_served_state``).  The rows are sorted by vec_id on the driver;
+    an ``orderBy`` would add a range-sampling job and a shuffle for a
+    few dozen rows."""
     import numpy as np
 
     rows = sorted(
@@ -1276,7 +1284,34 @@ def _probe_matrix(emb: DataFrame):
     )
     return (
         np.asarray([r.vec_id for r in rows]),
-        np.asarray([[float(x) for x in r.embedding] for r in rows]),
+        np.asarray([r.embedding for r in rows], dtype=np.float32).reshape(-1, _DIM),
+    )
+
+
+# The row an ADC scan emits: one shortlist candidate of one probe, with
+# the probe's own embedding, so the exact rerank joins the corpus once
+# and never the probe rows (``_SHORTLIST_RERANK_SQL``).
+_ADC_SCHEMA = "probe_id long, vec_id long, adc_dist double, probe_emb array<float>"
+
+
+def _adc_frame(shortlists):
+    """One output batch of an ADC scan from its per-probe shortlists,
+    (probe_id, probe_emb, vec_ids, adc_dists) each."""
+    import pandas as pd
+
+    frames = [
+        pd.DataFrame(
+            {
+                "probe_id": pid,
+                "vec_id": vv,
+                "adc_dist": d,
+                "probe_emb": [pemb] * len(vv),
+            }
+        )
+        for pid, pemb, vv, d in shortlists
+    ]
+    return pd.concat(frames) if frames else pd.DataFrame(
+        {"probe_id": [], "vec_id": [], "adc_dist": [], "probe_emb": []}
     )
 
 
@@ -1305,8 +1340,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     books_np = _np_books(_get_pq_codebooks(spark, sf_dir, emb))
-    probe_ids, P = _probe_matrix(emb)
-    Ps = P.reshape(len(P), _PQ_M, _PQ_SUB)
+    probe_ids, probe_embs = _probe_matrix(emb)
+    Ps = probe_embs.astype(np.float64).reshape(len(probe_ids), _PQ_M, _PQ_SUB)
     # per-probe ADC lookup tables: (n_probes, M, KS)
     luts = np.stack(
         [
@@ -1317,14 +1352,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def adc_batches(batches):
-        import pandas as pd
-
         midx = np.arange(_PQ_M)
         for pdf in batches:
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             codes = _batch_codes(X, books_np)
             vids = pdf["vec_id"].to_numpy()
-            frames = []
+            shortlists = []
             for p in range(len(probe_ids)):
                 d = luts[p][midx[None, :], codes].sum(1)  # (n,)
                 mask = vids != probe_ids[p]  # self never a neighbor
@@ -1332,22 +1365,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if len(dv) == 0:
                     continue
                 top = _batch_shortlist(dv, vv)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "probe_id": probe_ids[p],
-                            "vec_id": vv[top],
-                            "adc_dist": dv[top],
-                        }
-                    )
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {"probe_id": [], "vec_id": [], "adc_dist": []}
-            )
+                shortlists.append((probe_ids[p], probe_embs[p], vv[top], dv[top]))
+            yield _adc_frame(shortlists)
 
-    adc = emb.select("vec_id", "embedding").mapInPandas(
-        adc_batches, "probe_id long, vec_id long, adc_dist double"
-    )
+    adc = emb.select("vec_id", "embedding").mapInPandas(adc_batches, _ADC_SCHEMA)
     return _ivfpq_shortlist_rerank(emb, adc)
 
 
@@ -1506,27 +1527,67 @@ def _train_quantizer(window, sample, opq: bool) -> Quantizer:
     return Quantizer(cents, _np_books(books), rot)
 
 
+def _file_stamp(spark: SparkSession, path: str):
+    """(path, length, mtime) of a file, or of each entry directly inside
+    a directory, sorted; None when ``path`` does not exist.  The version
+    of a memo derived from ``path`` (``cache.memo``): any rewrite that
+    changes a length or a modification time changes it.  Lists one
+    directory through the Hadoop FileSystem API; launches no Spark job."""
+    _, fs, p = _sidecar_fs(spark, path)
+    if not fs.exists(p):
+        return None
+    return tuple(
+        sorted(
+            (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            for st in fs.listStatus(p)
+        )
+    )
+
+
 def _index_quantizer(spark: SparkSession, index_path: str) -> Quantizer:
     """The quantizer an IVFPQ index at ``index_path`` (a concrete dir,
     not a versioned root) was encoded under, from its sidecar.  Raises
     ``ValueError`` when the sidecar is absent or carries no codebooks
     (a plain IVF index): the stored codes cannot be served, extended or
-    decoded under any other quantizer, so the index must be rebuilt."""
+    decoded under any other quantizer, so the index must be rebuilt.
+
+    Parsed once per (session, index dir, sidecar version), in namespace
+    ``"index_quantizers"``: a sidecar rewritten since, in place or by
+    another writer, is read again (``_file_stamp``)."""
     import numpy as np
 
-    side = _read_quantizer_sidecar(spark, index_path)
-    if not side or "codebooks" not in side:
-        raise ValueError(
-            f"index at {index_path} has no IVFPQ quantizer sidecar "
-            f"({_QUANTIZER_SIDECAR} with codebooks): its codes can only be "
-            "read under the quantizer that encoded them; rebuild the index"
+    def read() -> Quantizer:
+        side = _read_quantizer_sidecar(spark, index_path)
+        if not side or "codebooks" not in side:
+            raise ValueError(
+                f"index at {index_path} has no IVFPQ quantizer sidecar "
+                f"({_QUANTIZER_SIDECAR} with codebooks): its codes can only be "
+                "read under the quantizer that encoded them; rebuild the index"
+            )
+        rot = side.get("rotation")
+        return Quantizer(
+            side["centroids"],
+            _np_books(side["codebooks"]),
+            None if rot is None else np.asarray(rot, dtype=np.float64),
         )
-    rot = side.get("rotation")
-    return Quantizer(
-        side["centroids"],
-        _np_books(side["codebooks"]),
-        None if rot is None else np.asarray(rot, dtype=np.float64),
+
+    return cache.memo(
+        spark,
+        "index_quantizers",
+        index_path.rstrip("/"),
+        read,
+        version=_file_stamp(spark, _sidecar_path(index_path)),
     )
+
+
+def _forget_index(spark: SparkSession, index_path: str) -> None:
+    """Drop every memo derived from the index at ``index_path``: its
+    quantizer and the serve state of every table queried against it.
+    Called by ``_write_ivfpq_index`` after it rewrites the index."""
+    path = index_path.rstrip("/")
+    cache.release(spark, "index_quantizers", path)
+    for key in [k for k in cache.entries(spark, "ivfpq_serve") if k[0] == path]:
+        cache.release(spark, "ivfpq_serve", key)
 
 
 # The row of every IVFPQ index, whatever its partition layout: the
@@ -1594,26 +1655,44 @@ def _write_ivfpq_index(
         q.books.tolist(),
         rotation=None if q.rotation is None else q.rotation.tolist(),
     )
+    _forget_index(vectors.sparkSession, path)
     return len(q.centroids)
 
 
-def _ivfpq_state(emb: DataFrame, q: Quantizer):
-    """Bounded driver state of an IVFPQ query: (probe ids in ascending
-    order, probed cells per probe, per-(probe, probed-cell) ADC tables),
-    every array corpus-size-independent by the fixed probe/K/M/KS
-    contract.  Probed cells replicate the Catalyst ``_ivf_probes``
-    (cosine, idx)-descending order on the driver because the tables
-    need the probed centroid values, not just a cell join.  On the OPQ
-    tier the probe residuals are rotated into the space the codebooks
-    live in.
+class _IvfpqState(NamedTuple):
+    """The fixed driver state of an IVFPQ query over one quantizer and
+    one probe set: the quantizer, the probe ids in ascending order, the
+    probe embeddings (float32 rows), the probed cells per probe, and the
+    per-(probe, probed-cell) ADC tables.  Every array is
+    corpus-size-independent by the fixed probe/K/M/KS contract.
+    ``luts`` is a broadcast of the (n_probes, nprobe, M, KS) array:
+    over 1 MB, it would otherwise be shipped as part of a new pickled
+    closure on every query, and the indexed serve path keeps it for as
+    long as the index and table are unchanged (``_served_state``)."""
 
-    Jobs: one, the probe collect (``_probe_matrix``)."""
+    quantizer: Quantizer
+    probe_ids: Any
+    probe_embs: Any
+    probed: Any
+    luts: Any
+
+
+def _ivfpq_state(emb: DataFrame, q: Quantizer) -> _IvfpqState:
+    """The ``_IvfpqState`` of ``emb``'s probes under ``q``.  Probed
+    cells replicate the Catalyst ``_ivf_probes`` (cosine,
+    idx)-descending order on the driver because the tables need the
+    probed centroid values, not just a cell join.  On the OPQ tier the
+    probe residuals are rotated into the space the codebooks live in.
+
+    Jobs: one, the probe collect (``_probe_matrix``); an indexed serve
+    pays it once per index and table version (``_served_state``)."""
     import numpy as np
 
     C = np.asarray(q.centroids, dtype=np.float64)  # (K, DIM)
     k_cells = len(C)
     nprobe = min(_IVF_NPROBE, k_cells)
-    probe_ids, P = _probe_matrix(emb)
+    probe_ids, probe_embs = _probe_matrix(emb)
+    P = probe_embs.astype(np.float64)
     Cn = C / np.sqrt((C * C).sum(1))[:, None]
     scores = (P @ Cn.T) / np.sqrt((P * P).sum(1))[:, None]  # (n_probes, K)
     probed = np.stack(
@@ -1636,49 +1715,64 @@ def _ivfpq_state(emb: DataFrame, q: Quantizer):
         R = R @ q.rotation  # r' = Qᵀr, the rotated-codebook space
     Rs = R.reshape(len(probe_ids), nprobe, _PQ_M, 1, _PQ_SUB)
     luts = ((Rs - q.books[None, None]) ** 2).sum(-1)
-    return probe_ids, probed, luts
+    return _IvfpqState(
+        q, probe_ids, probe_embs, probed, emb.sparkSession.sparkContext.broadcast(luts)
+    )
 
 
-def _ivfpq_adc_scan(frame: DataFrame, probe_ids, probed, luts) -> DataFrame:
+def _served_state(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, index_path: str
+) -> _IvfpqState:
+    """The ``_IvfpqState`` an indexed query serves, kept per (session,
+    index dir, embeddings path) in namespace ``"ivfpq_serve"`` with its
+    ADC tables as one kept broadcast: a warm query collects no probe
+    row, parses no sidecar and ships no tables.  The entry's version is
+    the file status of the sidecar and of the table (``_file_stamp``),
+    so a rewrite of either, in place or by another writer, rebuilds it
+    and destroys the old broadcast; ``_write_ivfpq_index`` also drops
+    it.  ``index_path`` is a concrete dir."""
+    emb_path = table_path(sf_dir, "embeddings")
+    return cache.memo(
+        spark,
+        "ivfpq_serve",
+        (index_path.rstrip("/"), emb_path),
+        lambda: _ivfpq_state(emb, _index_quantizer(spark, index_path)),
+        version=(
+            _file_stamp(spark, _sidecar_path(index_path)),
+            _file_stamp(spark, emb_path),
+        ),
+    )
+
+
+def _ivfpq_adc_scan(frame: DataFrame, state: _IvfpqState) -> DataFrame:
     """ADC scan over (vec_id, cell, codes): one pass emitting per-batch
     partial top-``_PQ_SHORTLIST`` rows per probe (``_batch_shortlist``),
     so the corpus-sized score stream never shuffles and a stored index
     and an in-session encode of the same codes answer identically."""
     import numpy as np
 
-    def adc_batches(batches):
-        import pandas as pd
+    _, probe_ids, probe_embs, probed, luts = state  # the closure skips q
 
+    def adc_batches(batches):
+        tables = luts.value
         midx = np.arange(_PQ_M)
         for pdf in batches:
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
             cells = pdf["cell"].to_numpy().astype(np.int64)
             vids = pdf["vec_id"].to_numpy()
-            frames = []
+            shortlists = []
             for p in range(len(probe_ids)):
                 mask = np.isin(cells, probed[p]) & (vids != probe_ids[p])
                 if not mask.any():
                     continue
                 slot = np.searchsorted(probed[p], cells[mask])
-                d = luts[p][slot[:, None], midx[None, :], codes[mask]].sum(1)
+                d = tables[p][slot[:, None], midx[None, :], codes[mask]].sum(1)
                 vv = vids[mask]
                 top = _batch_shortlist(d, vv)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "probe_id": probe_ids[p],
-                            "vec_id": vv[top],
-                            "adc_dist": d[top],
-                        }
-                    )
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {"probe_id": [], "vec_id": [], "adc_dist": []}
-            )
+                shortlists.append((probe_ids[p], probe_embs[p], vv[top], d[top]))
+            yield _adc_frame(shortlists)
 
-    return frame.mapInPandas(
-        adc_batches, "probe_id long, vec_id long, adc_dist double"
-    )
+    return frame.mapInPandas(adc_batches, _ADC_SCHEMA)
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -1698,21 +1792,24 @@ def _cosine_sql(a: str, b: str) -> str:
 
 # Global shortlist rank over the ADC scan's batch winners (≤ probes ×
 # SHORTLIST rows per batch reach the window), exact-cosine rerank of the
-# shortlist against the broadcast probes, then the top-K tail: the FAISS
-# PQ+refine tail of the flat-PQ path and both IVFPQ paths, as one SQL
-# text over ``{adc}`` (probe_id, vec_id, adc_dist) and ``{emb}``.  A
-# query builds this plan on the driver every time, and one ``spark.sql``
-# call costs far fewer py4j calls than the same plan built Column by
-# Column.
+# shortlist against the probe embedding each ADC row carries, then the
+# top-K tail: the FAISS PQ+refine tail of the flat-PQ path and both
+# IVFPQ paths, as one SQL text over ``{adc}`` (``_ADC_SCHEMA``) and
+# ``{emb}``.  The probe embedding is the table's float32 row, cast to
+# double by ``_cosine_sql`` as the corpus side is, so the cosine is the
+# one a join against the probe rows would compute, without that join's
+# broadcast job.  A query builds this plan on the driver every time, and
+# one ``spark.sql`` call costs far fewer py4j calls than the same plan
+# built Column by Column.
 _SHORTLIST_RERANK_SQL = _TOPK_SQL.replace(
     "{scored}",
     f"""(
-  SELECT /*+ BROADCAST(p) */ s.probe_id, s.vec_id,
-         round({_cosine_sql("p.probe_emb", "e.embedding")}, 6) AS cos_sim
+  SELECT s.probe_id, s.vec_id,
+         round({_cosine_sql("s.probe_emb", "e.embedding")}, 6) AS cos_sim
   FROM (
-    SELECT probe_id, vec_id
+    SELECT probe_id, vec_id, probe_emb
     FROM (
-      SELECT probe_id, vec_id,
+      SELECT probe_id, vec_id, probe_emb,
              row_number() OVER (PARTITION BY probe_id
                                 ORDER BY adc_dist, vec_id) AS rk
       FROM {{adc}}
@@ -1720,10 +1817,6 @@ _SHORTLIST_RERANK_SQL = _TOPK_SQL.replace(
     WHERE rk <= {_PQ_SHORTLIST}
   ) s
   JOIN {{emb}} e ON s.vec_id = e.vec_id
-  JOIN (
-    SELECT vec_id AS probe_id, embedding AS probe_emb
-    FROM {{emb}} WHERE vec_id < {_N_PROBES}
-  ) p ON s.probe_id = p.probe_id
 )""",
 )
 
@@ -1733,35 +1826,32 @@ def _ivfpq_shortlist_rerank(emb: DataFrame, adc: DataFrame) -> DataFrame:
     return emb.sparkSession.sql(_SHORTLIST_RERANK_SQL, adc=adc, emb=emb)
 
 
-def _ivfpq_topk(emb: DataFrame, q: Quantizer, codes: DataFrame) -> DataFrame:
-    """IVFPQ top-k for the probes of ``emb`` over a (vec_id, cell, codes)
-    frame encoded under ``q``, stored or in-session alike: the probed
-    cell ids go into an IN filter on ``cell`` (a parquet partition
-    filter on a stored index, so unprobed cells never leave disk), then
-    the ADC scan and the exact rerank, one SQL text
-    (``_SHORTLIST_RERANK_SQL``).
+def _ivfpq_topk(emb: DataFrame, codes: DataFrame, state: _IvfpqState) -> DataFrame:
+    """IVFPQ top-k for the probes of ``state`` over a (vec_id, cell,
+    codes) frame encoded under ``state.quantizer``, stored or in-session
+    alike: the probed cell ids go into an IN filter on ``cell`` (a
+    parquet partition filter on a stored index, so unprobed cells never
+    leave disk), then the ADC scan and the exact rerank, one SQL text
+    (``_SHORTLIST_RERANK_SQL``) against ``emb``.
 
-    Jobs on a warm session at sf0.01: the probe collect
-    (``_ivfpq_state``), then the query-stage jobs of the ADC scan, the
-    shortlist window, the rerank join and the top-K tail — 6 in all over
-    a stored index (``ann_ivfpq_topk_indexed``), 5 over an in-session
-    encode (``ann_ivfpq_topk``, ``ann_opq_topk``)."""
-    probe_ids, probed, luts = _ivfpq_state(emb, q)
-    probed_cells = sorted({int(c) for row in probed for c in row})
+    Jobs: the query-stage jobs of the ADC scan, the shortlist window,
+    the rerank join and the top-K tail, 3 at sf0.01; a caller that
+    builds ``state`` per query adds the probe collect
+    (``ann_ivfpq_topk``, ``ann_opq_topk``: 4 in all)."""
+    probed_cells = sorted({int(c) for row in state.probed for c in row})
     corpus = codes.filter(F.col("cell").isin(probed_cells)).select(
         "vec_id", "cell", "codes"
     )
-    adc = _ivfpq_adc_scan(corpus, probe_ids, probed, luts)
-    return _ivfpq_shortlist_rerank(emb, adc)
+    return _ivfpq_shortlist_rerank(emb, _ivfpq_adc_scan(corpus, state))
 
 
 def _session_ivfpq_topk(spark: SparkSession, sf_dir: str, opq: bool) -> DataFrame:
     """In-session IVFPQ top-k: the session quantizer encodes the corpus
     in one Arrow pass and the shared scan reads those codes, exactly as
-    it reads a stored index's."""
+    it reads a stored index's.  The probe state is built per query."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _session_quantizer(spark, sf_dir, emb, opq)
-    return _ivfpq_topk(emb, q, _ivfpq_encode_frame(emb, q))
+    return _ivfpq_topk(emb, _ivfpq_encode_frame(emb, q), _ivfpq_state(emb, q))
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1906,13 +1996,16 @@ def ann_ivfpq_topk_indexed(
     inferred one; the ``epoch`` partition column of a stream-maintained
     index is still discovered from its directories.
 
-    Jobs: 6 on a warm session at sf0.01 (``_ivfpq_topk``); the
-    embeddings table's schema is ``load_table``'s per-session one."""
+    Jobs: 3 on a warm session at sf0.01, all ``_ivfpq_topk``'s, and no
+    ``SparkContext.broadcast`` call: the quantizer, probe rows and ADC
+    tables are ``_served_state``'s, built once per index and table
+    version, and the embeddings table's schema is ``load_table``'s
+    per-session one."""
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = resolve_index_path(spark, index_path)
-    q = _index_quantizer(spark, index_path)
+    state = _served_state(spark, sf_dir, emb, index_path)
     codes = spark.read.schema(_IVFPQ_SCHEMA).parquet(index_path)
-    return _ivfpq_topk(emb, q, codes)
+    return _ivfpq_topk(emb, codes, state)
 
 
 # --- versioned serving + drift recovery --------------------------------

@@ -162,9 +162,14 @@ def ensure_utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where ``load_table`` reads table ``name`` of a corpus."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_utc(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     if name == "events":
         if events_ts_is_nanos(sf_dir):
             # Explicit schema (no inference) → readable under any session;

@@ -92,3 +92,55 @@ def test_release_one_key(session):
     assert _persisted(lsh)
     assert cache.entries(session, "pairs") == {("sf", "lsh"): lsh}
     assert cache.release(session, "pairs", ("sf", "exact")) == {"pairs": 0}
+
+
+def _destroyed(b) -> bool:
+    import os
+
+    return not os.path.exists(b._path)
+
+
+def _boom():
+    raise RuntimeError("build failed")
+
+
+def test_release_destroys_broadcasts(session):
+    sc = session.sparkContext
+    plain, paired, kept = sc.broadcast([1]), sc.broadcast([2]), sc.broadcast([3])
+    cache.memo(session, "luts", "a", lambda: plain)
+    cache.memo(session, "luts", "b", lambda: ("state", paired))
+    cache.memo(session, "other", "c", lambda: kept)
+
+    assert cache.release(session, "luts") == {"luts": 2}
+    assert _destroyed(plain) and _destroyed(paired)
+    assert not _destroyed(kept)
+    cache.release(session)
+    assert _destroyed(kept)
+
+
+def test_memo_rebuilds_on_a_new_version_and_frees_the_old(session):
+    sc = session.sparkContext
+    old = session.range(5).persist()
+    old_b = sc.broadcast([1])
+    assert cache.memo(session, "ns", "k", lambda: (old, old_b), version=1)[0] is old
+    # same version: a hit, whatever build would return
+    assert cache.memo(session, "ns", "k", lambda: None, version=1)[0] is old
+    new = cache.memo(session, "ns", "k", lambda: ("rebuilt",), version=2)
+    assert new == ("rebuilt",)
+    assert not _persisted(old) and _destroyed(old_b)
+    # a rebuild that raises leaves nothing stale behind
+    with pytest.raises(RuntimeError):
+        cache.memo(session, "ns", "k", _boom, version=3)
+    assert "k" not in cache.entries(session, "ns")
+
+
+def test_stats_count_hits_misses_and_size(session):
+    for key in ("a", "a", "b", "a"):
+        cache.memo(session, "ns", key, lambda: 0)
+    cache.memo(session, "other", "x", lambda: 0)
+    assert cache.stats(session) == {
+        "ns": {"hits": 2, "misses": 2, "size": 2},
+        "other": {"hits": 0, "misses": 1, "size": 1},
+    }
+    cache.release(session, "ns")
+    assert cache.stats(session)["ns"] == {"hits": 2, "misses": 2, "size": 0}

@@ -806,3 +806,106 @@ def test_versioned_root_is_relocatable(spark, tmp_path):
     assert got == want
     cache.release(spark, "ivf_centroids")
     cache.release(spark, "pq_codebooks")
+
+
+# --- the indexed serve state is kept per index and table version ------
+
+
+def _served(spark, sf_dir, idx):
+    return [tuple(r) for r in S.ann_ivfpq_topk_indexed(spark, sf_dir, idx).collect()]
+
+
+def _fresh_served(spark, sf_dir, idx):
+    """The answer of a session that has kept nothing for the index."""
+    fresh = spark.newSession()
+    try:
+        return _served(fresh, sf_dir, idx)
+    finally:
+        cache.release(fresh)
+
+
+def _served_rotation(spark, idx):
+    """The OPQ rotation of the serve state kept for ``idx``."""
+    (state,) = [
+        v for k, v in cache.entries(spark, "ivfpq_serve").items() if k[0] == idx
+    ]
+    return state.quantizer.rotation
+
+
+def test_serve_state_follows_in_place_rebuild(spark, tmp_path):
+    """An index rebuilt in place on the other tier is served under its
+    new quantizer by the next query, as a fresh session serves it."""
+    idx = str(tmp_path / "index")
+    S.build_ivfpq_index(spark, SF, idx)
+    _served(spark, SF, idx)
+    _served(spark, SF, idx)
+    assert _served_rotation(spark, idx) is None
+
+    S.build_ivfpq_index(spark, SF, idx, opq=True)
+    got = _served(spark, SF, idx)
+    assert _served_rotation(spark, idx) is not None
+    assert got == _fresh_served(spark, SF, idx)
+    assert got == [tuple(r) for r in S.ann_opq_topk(spark, SF).collect()]
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
+
+
+def test_serve_state_follows_pointer_move(spark, tmp_path):
+    """A warm root serves the rebuilt version as soon as the pointer
+    moves to it."""
+    root = tmp_path / "root"
+    root.mkdir()
+    v1, v2 = str(root / "v1"), str(root / "v2")
+    S.build_ivfpq_index(spark, SF, v1, opq=True)
+    S.write_index_pointer(spark, str(root), v1)
+    want_v1 = _served(spark, SF, str(root))
+    assert _served(spark, SF, str(root)) == want_v1
+
+    S.rebuild_ivfpq_index(spark, SF, str(root), v2, opq=False)
+    assert _served(spark, SF, str(root)) == want_v1  # not published yet
+    S.write_index_pointer(spark, str(root), v2)
+    got = _served(spark, SF, str(root))
+    assert _served_rotation(spark, v2) is None
+    assert got == _fresh_served(spark, SF, str(root))
+    assert got == _fresh_served(spark, SF, v2)
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")
+
+
+def test_serve_state_follows_table_rewritten_outside_the_package(spark, tmp_path):
+    """``embeddings.parquet`` overwritten through plain pyarrow with
+    other probe vectors: the next query serves the new probes.  Each
+    probe i now holds the vector of row 100 + i, so that row is its
+    nearest neighbour at cosine 1."""
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    table = str(sf / "embeddings.parquet")
+    shutil.copy(f"{SF}/embeddings.parquet", table)
+    (sf / "embeddings.parquet").chmod(0o644)  # the copy keeps a read-only mode
+    idx = str(tmp_path / "index")
+    S.build_ivfpq_index(spark, str(sf), idx, opq=True)
+    before = _served(spark, str(sf), idx)
+    assert _served(spark, str(sf), idx) == before
+
+    t = pq.read_table(table)
+    ids = t.column("vec_id").to_numpy()
+    X = np.stack(t.column("embedding").to_numpy(zero_copy_only=False))
+    row = {int(v): i for i, v in enumerate(ids)}
+    for p in range(S._N_PROBES):
+        X[row[p]] = X[row[100 + p]]
+    emb = pa.array(list(X.astype(np.float32)), type=t.schema.field("embedding").type)
+    pq.write_table(t.set_column(t.schema.get_field_index("embedding"), "embedding", emb), table)
+
+    got = _served(spark, str(sf), idx)
+    assert got != before
+    assert got == _fresh_served(spark, str(sf), idx)
+    top1 = {r[0]: r[2] for r in got if r[1] == 1}
+    assert top1 == {p: 100 + p for p in range(S._N_PROBES)}
+    cache.release(spark, "ivf_centroids")
+    cache.release(spark, "pq_codebooks")

@@ -124,7 +124,7 @@ def test_entry_flagship(spark):
     assert df.count() > 0
 
 
-def test_release_session_caches_all_at_once(spark):
+def test_release_session_caches_all_at_once(spark, tmp_path):
     """The one-call release bench.py uses between query families: after
     warming all three per-session memos it must report every cache
     non-empty, then be idempotent on a cold session."""
@@ -166,6 +166,9 @@ def test_release_session_caches_all_at_once(spark):
     )
 
     CU.dropped_ids_cached(spark, SF)  # r13 decontamination drop set
+    index = str(tmp_path / "ivfpq_index")
+    S.build_ivfpq_index(spark, SF, index)
+    S.ann_ivfpq_topk_indexed(spark, SF, index).count()  # kept serve state
     released = release_session_caches(spark)
     assert set(released) == {
         "customer_graph",
@@ -182,6 +185,8 @@ def test_release_session_caches_all_at_once(spark):
         "decon_drop_sets",
         "tracked_frames",
         "table_schemas",
+        "index_quantizers",
+        "ivfpq_serve",
     }
     assert all(n >= 1 for n in released.values()), released
     assert all(n == 0 for n in release_session_caches(spark).values())

@@ -847,18 +847,84 @@ def test_serve_path_job_budget(spark, served_indexes):
     budgets = {
         "ivfpq-indexed": (
             lambda: S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect(),
-            6,
+            3,
         ),
         "ivf-indexed": (
             lambda: S.ann_ivf_topk_indexed(spark, SF, ivf_idx).collect(),
             5,
         ),
         "knn-exact": (lambda: S.knn_exact_topk(spark, SF).collect(), 3),
+        "ivfpq": (lambda: S.ann_ivfpq_topk(spark, SF).collect(), 4),
+        "opq": (lambda: S.ann_opq_topk(spark, SF).collect(), 4),
+        "pq": (lambda: S.ann_pq_topk(spark, SF).collect(), 4),
     }
     for group, (query, budget) in budgets.items():
         query()
         n_jobs = jobs_launched(spark, f"serve-{group}", query)
         assert n_jobs <= budget, (group, n_jobs)
+
+
+def test_warm_indexed_query_ships_no_broadcast(spark, served_indexes):
+    """A warm indexed query reads its ADC tables from the broadcast kept
+    with the index's serve state: it pickles no closure big enough to
+    be shipped as a broadcast of its own."""
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    pq_idx, _ = served_indexes
+    sc = spark.sparkContext
+    S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect()
+    calls = []
+    broadcast = sc.broadcast
+    sc.broadcast = lambda value: calls.append(value) or broadcast(value)
+    try:
+        S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect()
+    finally:
+        del sc.broadcast
+    assert calls == []
+
+
+def test_indexed_serve_state_is_built_once(spark, served_indexes):
+    """Three indexed queries against one index and table build the
+    serve state once and reuse it twice."""
+    from distributed_graph_coloring_with_pyspark_spark import cache
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    pq_idx, _ = served_indexes
+    cache.release(spark, "ivfpq_serve")
+    before = cache.stats(spark)["ivfpq_serve"]
+    for _ in range(3):
+        S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect()
+    after = cache.stats(spark)["ivfpq_serve"]
+    assert (after["misses"] - before["misses"], after["hits"] - before["hits"]) == (
+        1,
+        2,
+    )
+    assert after["size"] == 1
+
+
+def test_release_destroys_kept_adc_tables(spark, served_indexes):
+    """Releasing the serve namespace destroys the kept broadcast; the
+    next query builds a new one and answers the same rows."""
+    import os
+
+    from distributed_graph_coloring_with_pyspark_spark import cache
+    from distributed_graph_coloring_with_pyspark_spark.operators import (
+        similarity as S,
+    )
+
+    pq_idx, _ = served_indexes
+    want = S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect()
+    (state,) = cache.entries(spark, "ivfpq_serve").values()
+    assert os.path.exists(state.luts._path)
+    assert cache.release(spark, "ivfpq_serve") == {"ivfpq_serve": 1}
+    assert not os.path.exists(state.luts._path)
+    assert S.ann_ivfpq_topk_indexed(spark, SF, pq_idx).collect() == want
+    (again,) = cache.entries(spark, "ivfpq_serve").values()
+    assert again.luts is not state.luts
 
 
 def test_batch_shortlist_keeps_smallest_by_dist_then_id():

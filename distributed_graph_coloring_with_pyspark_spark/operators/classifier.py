@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..litutil import double_array_sql, lit_double_array
+from ..scan import running_total
 from ..sources.tables import load_table
 from .text_dedup import _hash32_col, _tokens
 
@@ -120,8 +121,9 @@ def _weight_array(weights: dict[int, float]):
     cProfile put 15 s of a 31 s dual-GD loop inside that construction
     (two 257-double vectors per step × 15 steps).  Values are
     bit-identical (repr round-trip + correctly-rounded double parse —
-    see litutil); pinned by the numpy 1e-6 weight oracle and the
-    probe's exact loss/weight agreement (tools/probe_gd_literal.py)."""
+    see litutil); pinned by the numpy 1e-6 weight oracle.  The A/B probe
+    that first measured exact loss/weight agreement is in git history
+    (tools/probe_gd_literal.py at 1f04cfd)."""
     return lit_double_array(weights[b] for b in range(-1, _CLS_BUCKETS))
 
 
@@ -444,12 +446,10 @@ def holdout_metrics(spark: SparkSession, sf_dir: str) -> dict:
     Scale shape (100 TB): the split flag rides the SHARED session
     feature frame (one corpus pass serves every classifier surface);
     the confusion counts are one map-side-combinable agg collapsed to
-    4 longs.  The AUC needs neg-below-each-score prefix sums over the
-    DISTINCT-SCORE frame — computed with the same two-pass distributed
-    scan ``_pack_manifest`` commits to (literal range cuts → per-bucket
-    totals collect → bucket-partitioned window + broadcast offsets),
-    never a single-partition global window.  Driver state: B+1
-    weights, 4 confusion longs, ≤par bucket offsets.
+    4 longs.  The AUC needs neg-below-each-score running sums over the
+    DISTINCT-SCORE frame: a ``running_total`` (see
+    ``scan.running_total``), never a single-partition global window.
+    Driver state: B+1 weights, 4 confusion longs, ≤par bucket offsets.
 
     Tie structure: the AUC histogram groups the 6-dp-ROUNDED score
     (the dsir_select rank-grid discipline) — grouping raw floats by
@@ -502,8 +502,8 @@ def _holdout_metrics(spark: SparkSession, sf_dir: str) -> dict:
         tn, fn = conf["tn"] or 0, conf["fn"] or 0
         n_hold, n_pos, n_neg = tp + fp + tn + fn, tp + fn, fp + tn
 
-        # distinct-(rounded-)score pos/neg histogram → neg-strictly-
-        # below prefix sums via the two-pass bucket-partitioned scan
+        # distinct-(rounded-)score pos/neg histogram; cum − neg is the
+        # count of negatives strictly below each distinct score
         g = (
             hold.groupBy(F.col("rs").alias("s"))
             .agg(
@@ -512,50 +512,11 @@ def _holdout_metrics(spark: SparkSession, sf_dir: str) -> dict:
             )
             .persist()
         )
-        n_scores = g.count()
-        par = spark.sparkContext.defaultParallelism
-        frac = min(1.0, (par * 20) / max(n_scores, 1))
-        sample = sorted(
-            r["s"] for r in g.select("s").sample(False, frac, 42).collect()
-        )
-        step = max(1, len(sample) // par)
-        cuts = sample[step::step][: par - 1]
-        if cuts:
-            cut_arr = F.array(*[F.lit(float(c)) for c in cuts])
-            bucket = F.size(F.filter(cut_arr, lambda c: c <= F.col("s")))
-        else:
-            bucket = F.lit(0)
-        gb = g.withColumn("pid", bucket.cast("int"))
-        totals = sorted(
-            (r["pid"], r["tneg"])
-            for r in gb.groupBy("pid")
-            .agg(F.sum("neg").alias("tneg"))
-            .collect()
-        )
-        offsets, acc = [], 0
-        for pid, tot in totals:
-            offsets.append((pid, acc))
-            acc += int(tot)
-        off_df = spark.createDataFrame(
-            offsets or [(0, 0)], "pid int, off long"
-        )
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("pid").orderBy("s")
-        neg_below = (
-            F.col("off") + F.sum("neg").over(w) - F.col("neg")
-        )  # strictly-below negatives for every distinct score
-        u_row = (
-            gb.join(F.broadcast(off_df), "pid")
-            .select(
-                (
-                    F.col("pos")
-                    * (neg_below.cast("double") + 0.5 * F.col("neg"))
-                ).alias("u")
-            )
-            .agg(F.sum("u"))
-            .collect()[0]
-        )
+        below, _ = running_total(g, ["s"], "neg")
+        neg_below = F.col("cum") - F.col("neg")
+        u_row = below.agg(
+            F.sum(F.col("pos") * (neg_below.cast("double") + 0.5 * F.col("neg")))
+        ).collect()[0]
         u_sum = float(u_row[0]) if u_row[0] is not None else 0.0
     finally:
         if g is not None:

@@ -67,10 +67,8 @@ oracle-checked operator):
    al. 2022, same window hash / canonicalisation as
    ``apply_substring_dedup``.  Fully-stripped docs drop out.
 5. PACK — concatenate the cleaned token stream in doc_id order and
-   cut every ``_PACK_SEQ_LEN`` tokens via the shared two-pass
-   prefix-sum scan (``_pack_manifest`` — explicit range cuts, NO
-   global window; the module-level ban in text_dedup.py:2443 holds
-   through the funnel).
+   cut every ``_PACK_SEQ_LEN`` tokens via the shared
+   ``_pack_manifest`` (a ``scan.running_total``, no global window).
 6. SHARD — round-robin ``seq_id mod _FUNNEL_SHARDS`` so a loader
    streams balanced shards; a mod of the packed id is deterministic
    and needs no extra shuffle.

@@ -1226,14 +1226,14 @@ def _batch_shortlist(d, vids):
     return cand[np.lexsort((vids[cand], d[cand]))[:keep]]
 
 
-def _train_pq_codebooks(window, sample) -> list[list[list[float]]]:
-    """Per-subspace Lloyd's k-means for the PQ codebooks -> [m][k][d']
-    (M*KS*SUB floats of driver state).  Same recipe as the IVF coarse
-    quantizer: Forgy seeds from the whole seed window, then
-    ``_PQ_ITERS`` rounds of ``_batch_codes`` assignment and per-codeword
-    means over the sample, one subspace at a time.  ``window`` and
-    ``sample`` are raw, residual or rotated-residual rows, whichever
-    space the codes will live in."""
+def _train_pq_codebooks(window, sample):
+    """Per-subspace Lloyd's k-means for the PQ codebooks -> the (M, k,
+    SUB) float64 array (M*KS*SUB floats of driver state).  Same recipe
+    as the IVF coarse quantizer: Forgy seeds from the whole seed window,
+    then ``_PQ_ITERS`` rounds of ``_batch_codes`` assignment and
+    per-codeword means over the sample, one subspace at a time.
+    ``window`` and ``sample`` are raw, residual or rotated-residual
+    rows, whichever space the codes will live in."""
     import numpy as np
 
     seeds = _forgy(window, _PQ_KS)  # k == _PQ_KS unless the corpus is tiny
@@ -1246,12 +1246,10 @@ def _train_pq_codebooks(window, sample) -> list[list[list[float]]]:
         books = np.stack(
             [_cell_means(Xs[:, m], codes[:, m], books[m]) for m in range(_PQ_M)]
         )
-    return books.tolist()
+    return books
 
 
-def _get_pq_codebooks(
-    spark: SparkSession, sf_dir: str, emb: DataFrame
-) -> list[list[list[float]]]:
+def _get_pq_codebooks(spark: SparkSession, sf_dir: str, emb: DataFrame):
     """Trained PQ codebooks for (session, sf_dir) - same
     train-once/serve-many memo discipline as the IVF quantizer, in
     namespace ``"pq_codebooks"``."""
@@ -1269,11 +1267,11 @@ def _probe_matrix(emb: DataFrame):
     carry to the rerank (``_adc_frame``) and which, widened to float64,
     build the driver's ADC tables.
 
-    Jobs: one collect, per query on the flat-PQ and in-session IVFPQ
-    paths and once per index and table version on the indexed serve
-    (``_served_state``).  The rows are sorted by vec_id on the driver;
-    an ``orderBy`` would add a range-sampling job and a shuffle for a
-    few dozen rows."""
+    Jobs: one collect, per query on the flat-PQ path and once per state
+    version on the IVFPQ paths (``_served_state``,
+    ``_session_ivfpq_topk``).  The rows are sorted by vec_id on the
+    driver; an ``orderBy`` would add a range-sampling job and a shuffle
+    for a few dozen rows."""
     import numpy as np
 
     rows = sorted(
@@ -1395,7 +1393,7 @@ def _residual_corpus(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
     return corpus.withColumn("residual", res)
 
 
-def _train_residual_books(window, sample, cents) -> list[list[list[float]]]:
+def _train_residual_books(window, sample, cents):
     """Residual PQ codebooks: the PQ trainer on the coarse-cell
     residuals of the seed window and sample (the IVFPQ recipe:
     residuals are smaller and better centred than raw vectors, so the
@@ -1408,7 +1406,7 @@ def _get_ivfpq_codebooks(
     sf_dir: str,
     emb: DataFrame,
     cents: list[list[float]],
-) -> list[list[list[float]]]:
+):
     """Residual PQ codebooks for (session, sf_dir), memoized alongside
     the flat-PQ books under a distinct key of namespace
     ``"pq_codebooks"``."""
@@ -1667,8 +1665,9 @@ class _IvfpqState(NamedTuple):
     corpus-size-independent by the fixed probe/K/M/KS contract.
     ``luts`` is a broadcast of the (n_probes, nprobe, M, KS) array:
     over 1 MB, it would otherwise be shipped as part of a new pickled
-    closure on every query, and the indexed serve path keeps it for as
-    long as the index and table are unchanged (``_served_state``)."""
+    closure on every query, and both serve paths keep it for as long
+    as the state's version holds (``_served_state``,
+    ``_session_ivfpq_topk``)."""
 
     quantizer: Quantizer
     probe_ids: Any
@@ -1684,8 +1683,8 @@ def _ivfpq_state(emb: DataFrame, q: Quantizer) -> _IvfpqState:
     probed centroid values, not just a cell join.  On the OPQ tier the
     probe residuals are rotated into the space the codebooks live in.
 
-    Jobs: one, the probe collect (``_probe_matrix``); an indexed serve
-    pays it once per index and table version (``_served_state``)."""
+    Jobs: one, the probe collect (``_probe_matrix``), paid once per
+    state version (``_served_state``, ``_session_ivfpq_topk``)."""
     import numpy as np
 
     C = np.asarray(q.centroids, dtype=np.float64)  # (K, DIM)
@@ -1742,6 +1741,20 @@ def _served_state(
             _file_stamp(spark, emb_path),
         ),
     )
+
+
+def _resolve_served(spark: SparkSession, root: str) -> str:
+    """``resolve_index_path`` for the indexed IVFPQ serve.  The version
+    dirs inside a versioned ``root`` other than the one its pointer
+    names are retired: their memos are dropped (``_forget_index``), the
+    serve state with the broadcast of its ADC tables and the parsed
+    quantizer."""
+    path = resolve_index_path(spark, root).rstrip("/")
+    inside = root.rstrip("/") + "/"
+    for key in list(cache.entries(spark, "ivfpq_serve")):
+        if key[0].startswith(inside) and key[0] != path:
+            _forget_index(spark, key[0])
+    return path
 
 
 def _ivfpq_adc_scan(frame: DataFrame, state: _IvfpqState) -> DataFrame:
@@ -1835,9 +1848,9 @@ def _ivfpq_topk(emb: DataFrame, codes: DataFrame, state: _IvfpqState) -> DataFra
     (``_SHORTLIST_RERANK_SQL``) against ``emb``.
 
     Jobs: the query-stage jobs of the ADC scan, the shortlist window,
-    the rerank join and the top-K tail, 3 at sf0.01; a caller that
-    builds ``state`` per query adds the probe collect
-    (``ann_ivfpq_topk``, ``ann_opq_topk``: 4 in all)."""
+    the rerank join and the top-K tail, 3 at sf0.01.  Building
+    ``state`` adds the probe collect, once per state version on both
+    callers (``_served_state``, ``_session_ivfpq_topk``)."""
     probed_cells = sorted({int(c) for row in state.probed for c in row})
     corpus = codes.filter(F.col("cell").isin(probed_cells)).select(
         "vec_id", "cell", "codes"
@@ -1848,10 +1861,26 @@ def _ivfpq_topk(emb: DataFrame, codes: DataFrame, state: _IvfpqState) -> DataFra
 def _session_ivfpq_topk(spark: SparkSession, sf_dir: str, opq: bool) -> DataFrame:
     """In-session IVFPQ top-k: the session quantizer encodes the corpus
     in one Arrow pass and the shared scan reads those codes, exactly as
-    it reads a stored index's.  The probe state is built per query."""
+    it reads a stored index's.  The probe state is kept per (session,
+    corpus, tier) in namespace ``"ivfpq_session"``, versioned by the
+    embeddings table's file status and the ids of the quantizer's parts
+    (the session memos' values), so a rewritten table or a retrained or
+    replaced memo rebuilds it and destroys the old broadcast.  The kept
+    state holds the parts its version names, so their ids are not
+    reused while it lives."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _session_quantizer(spark, sf_dir, emb, opq)
-    return _ivfpq_topk(emb, _ivfpq_encode_frame(emb, q), _ivfpq_state(emb, q))
+    state = cache.memo(
+        spark,
+        "ivfpq_session",
+        (sf_dir, opq),
+        lambda: _ivfpq_state(emb, q),
+        version=(
+            _file_stamp(spark, table_path(sf_dir, "embeddings")),
+            tuple(map(id, q)),
+        ),
+    )
+    return _ivfpq_topk(emb, _ivfpq_encode_frame(emb, q), state)
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2002,7 +2031,7 @@ def ann_ivfpq_topk_indexed(
     version, and the embeddings table's schema is ``load_table``'s
     per-session one."""
     emb = load_table(spark, sf_dir, "embeddings")
-    index_path = resolve_index_path(spark, index_path)
+    index_path = _resolve_served(spark, index_path)
     state = _served_state(spark, sf_dir, emb, index_path)
     codes = spark.read.schema(_IVFPQ_SCHEMA).parquet(index_path)
     return _ivfpq_topk(emb, codes, state)

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..cache import persist_tracked
+from ..scan import running_total, widen_to_cores
 from ..sources.tables import forget_schema, load_table
 
 # MinHash parameters: b bands × r rows = k hashes.
@@ -143,9 +144,7 @@ def _doc_shingles(
     # (r2 measurement, re-confirmed r4: warm 1.6 s → 3.3 s).
     docs = load_table(spark, sf_dir, "documents")
     if parallel:
-        par = spark.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < par:
-            docs = docs.repartition(par)
+        docs = widen_to_cores(docs)
     return docs.select("doc_id", _shingles(_tokens()).alias("shingles"))
 
 
@@ -951,10 +950,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus the scan already yields ≥ core-count splits and AQE-planned
     parallelism, so the repartition is applied only when the scan has
     fewer splits than cores."""
-    docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    docs = widen_to_cores(load_table(spark, sf_dir, "documents"))
     # short-text guard: sequence(1, stop, +step) throws when stop < 1
     # (ANSI), i.e. any doc shorter than the window; emit an empty sketch
     # instead, matching the oracle's empty range()
@@ -1117,13 +1113,9 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per maximal span, token indices 1-based inclusive:
     (doc_id, span_start, span_end, span_tokens).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    # pre-shuffle projection parallelism guard (same reasoning as
-    # winnowing_fingerprints: ALL of stage-1's cost is the window md5
-    # projection, which otherwise runs on as few cores as input splits)
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    # ALL of stage-1's cost is the window md5 projection, as in
+    # winnowing_fingerprints, so it is spread across cores
+    docs = widen_to_cores(load_table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", _tokens().alias("t"))
     wins = (
         toks.select(
@@ -1215,10 +1207,7 @@ def apply_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy lives elsewhere) has no kept rows and therefore drops out of
     the output entirely, the doc-level analogue of what exact dedup
     does; the oracle's kept-stream GROUP BY drops it identically."""
-    docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    docs = widen_to_cores(load_table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", _tokens().alias("t"))
     wins = toks.select(
         "doc_id", F.posexplode(_window_hashes(F.col("t"))).alias("pos0", "h")
@@ -1926,68 +1915,21 @@ def epoch_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure function of (salt, doc_id) — no rand(), no zipWithIndex
     partition dependence.
 
-    The global rank is the two-pass distributed scan ``pack_sequences``
-    documents (literal-derived range buckets from one seeded hash
-    sample, per-bucket row_number + broadcast bucket offsets) — never a
-    single-partition global window.  Cross-bucket order is strict
-    because equal hashes can never straddle a cut (bucket = count of
-    cuts ≤ hash).  Per epoch: two scans of a 12-byte projection, one
-    equi-shuffle, three bounded driver actions — epochs are a small
-    constant, so 100 TB cost is epochs × one lean scan."""
+    The global rank is a ``running_total`` over (hash, doc_id) (see
+    ``scan.running_total``), never a single-partition global window.
+    Per epoch: two scans of a 12-byte projection, one equi-shuffle,
+    three bounded driver actions; epochs are a small constant, so
+    100 TB cost is epochs × one lean scan."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
     out = None
     for epoch in range(_EPOCH_SHUFFLE_EPOCHS):
         h = _hash32_col(
             F.concat_ws(":", F.lit("ep"), F.lit(str(epoch)), "doc_id")
         )
-        # plain persist, released right after the offsets collect below
-        # (ADVICE r11: a tracked per-epoch persist accumulated across
-        # repeated calls in one session) — the final consumer action
-        # recomputes this 12-byte projection once, which is exactly the
-        # second scan the docstring already prices; recomputation is
-        # safe because hv is a pure function of (salt, doc_id)
-        keyed_p = docs.select("doc_id", h.alias("hv")).persist()
-        try:  # finally-release (ADVICE r12): a failed collect must not
-            # leak the cached frame — this persist is deliberately NOT
-            # session-tracked (see the r11 note above), so nothing else
-            # would ever reclaim it
-            n = keyed_p.count()
-            frac = min(1.0, (par * 20) / max(n, 1))
-            sample = sorted(
-                r["hv"]
-                for r in keyed_p.select("hv")
-                .sample(False, frac, 7 + epoch)
-                .collect()
-            )
-            step = max(1, len(sample) // par)
-            cuts = sample[step::step][: par - 1]
-            if cuts:
-                cut_arr = F.array(*[F.lit(c) for c in cuts])
-                bucket = F.size(F.filter(cut_arr, lambda c: c <= F.col("hv")))
-            else:
-                bucket = F.lit(0)
-            keyed = keyed_p.withColumn("pid", bucket.cast("int"))
-            totals = sorted(
-                (r["pid"], r["c"])
-                for r in keyed.groupBy("pid").agg(F.count("*").alias("c")).collect()
-            )
-        finally:
-            keyed_p.unpersist(False)  # all eager consumers done; see above
-        offsets, acc = [], 0
-        for pid, c in totals:
-            offsets.append((pid, acc))
-            acc += c
-        off_df = spark.createDataFrame(offsets or [(0, 0)], "pid int, base long")
-        w = Window.partitionBy("pid").orderBy("hv", "doc_id")
-        ranked = (
-            keyed.withColumn("rk", F.row_number().over(w))
-            .join(F.broadcast(off_df), "pid")
-            .select(
-                F.lit(epoch).alias("epoch"),
-                "doc_id",
-                (F.col("base") + F.col("rk") - 1).cast("long").alias("pos"),
-            )
+        keyed = docs.select("doc_id", h.alias("hv"))
+        ranked, _ = running_total(keyed, ["hv", "doc_id"])
+        ranked = ranked.select(
+            F.lit(epoch).alias("epoch"), "doc_id", (F.col("cum") - 1).alias("pos")
         )
         out = ranked if out is None else out.unionByName(ranked)
     return out.select(
@@ -2757,25 +2699,9 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_full_docs those fully contained (no boundary fragment), and
     n_tokens is _PACK_SEQ_LEN except for the final tail.
 
-    The core is a GLOBAL prefix sum over token counts in doc_id order —
-    the textbook two-pass distributed scan, NOT a single-partition
-    window (``Window.orderBy`` with no partitionBy funnels the corpus
-    through one task — the anti-pattern this module bans):
-
-      0. derive EXPLICIT range-bucket cut points once (one seeded
-         doc_id sample, sorted on the driver, ≤ par−1 literals).  The
-         bucket id is then a PURE FUNCTION of doc_id — a literal-array
-         rank expression — so both passes, and any recompute after
-         cache/block loss, assign identical buckets by construction.
-         (Before r6 this used repartitionByRange + spark_partition_id
-         with persist as the pinning mechanism; RangePartitioner's
-         sampling being recompute-stable is an implementation detail,
-         not a contract — VERDICT r5 item 5.)
-      1. one tiny action collects per-bucket token totals (#buckets
-         rows, bounded driver state);
-      2. per-bucket running sums via a bucket-partitioned window plus
-         the broadcast bucket-offset table give every doc its global
-         [start, end) token span.
+    The core is a global running sum of token counts in doc_id order
+    (``_doc_spans``, a ``running_total``: see ``scan.running_total``),
+    never a single-partition window.
 
     Each doc then explodes to the sequences its span crosses
     (``F.sequence`` — ≤ ⌈n_tok/L⌉ + 1 rows) and a single hash
@@ -2789,52 +2715,18 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_spans(spark: SparkSession, toks: DataFrame) -> DataFrame:
-    """Every doc's global token span [start, end) in doc_id order —
-    the two-pass prefix-sum core of ``_pack_manifest``, factored out
-    (r14) so the shard EXPORT (operators/curation.py:
-    export_packed_shards) can place each kept token at its global
-    position with the exact same cut points the manifest used."""
-    par = spark.sparkContext.defaultParallelism
-    # the persist is now a pure scan-saver (3 tiny actions + the final
-    # plan read it); correctness no longer depends on it — bucket ids
-    # below are literal-derived, recompute-safe
-    base = persist_tracked(spark, toks)
-    n = base.count()
-    frac = min(1.0, (par * 20) / max(n, 1))
-    sample = sorted(
-        r["doc_id"] for r in base.select("doc_id").sample(False, frac, 42).collect()
-    )
-    step = max(1, len(sample) // par)
-    cuts = sample[step::step][: par - 1]
-    if cuts:
-        cut_arr = F.array(*[F.lit(c) for c in cuts])
-        bucket = F.size(F.filter(cut_arr, lambda c: c <= F.col("doc_id")))
-    else:
-        bucket = F.lit(0)
-    base = base.withColumn("pid", bucket.cast("int"))
-    totals = sorted(
-        (r["pid"], r["tot"])
-        for r in base.groupBy("pid").agg(F.sum("n_tok").alias("tot")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, tot in totals:
-        offsets.append((pid, acc))
-        acc += tot
-    # empty corpus: createDataFrame([]) would need an explicit guard —
-    # keep a dummy row so the (empty) join below still plans
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "pid int, base long")
-    w = Window.partitionBy("pid").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        base.withColumn("cum", F.sum("n_tok").over(w))
-        .join(F.broadcast(off_df), "pid")
-        .select(
-            "doc_id",
-            "n_tok",
-            (F.col("base") + F.col("cum") - F.col("n_tok")).alias("start"),
-            (F.col("base") + F.col("cum")).alias("end"),
-        )
+    """Every doc's global token span [start, end) in doc_id order: the
+    running ``n_tok`` total of ``scan.running_total``.  Shared by
+    ``_pack_manifest`` and the shard export (operators/curation.py:
+    export_packed_shards), which places each kept token at the global
+    position the manifest packed.  ``toks`` is kept persisted (session-
+    tracked) for the scan's actions and the window pass alike."""
+    spans, _ = running_total(persist_tracked(spark, toks), ["doc_id"], "n_tok")
+    return spans.select(
+        "doc_id",
+        "n_tok",
+        (F.col("cum") - F.col("n_tok")).alias("start"),
+        F.col("cum").alias("end"),
     )
 
 
@@ -2842,7 +2734,7 @@ def _pack_manifest(spark: SparkSession, toks: DataFrame) -> DataFrame:
     """The packing core of ``pack_sequences`` over any (doc_id, n_tok)
     frame — shared with the end-to-end curation funnel
     (operators/curation.py), which packs its CLEANED survivor stream
-    with the same two-pass prefix-sum scan."""
+    with the same ``_doc_spans``."""
     L = _PACK_SEQ_LEN
     spans = _doc_spans(spark, toks)
     ex = spans.select(
@@ -2994,52 +2886,22 @@ def _bfd_histogram_solve(
 def _bestfit_assignments(spark: SparkSession, toks: DataFrame) -> DataFrame:
     """(doc_id, n_tok) → (doc_id, n_tok, bin_id) under histogram-BFD.
 
-    Per-length document ranks use the SAME two-pass distributed scan as
-    ``_pack_manifest`` (seeded doc_id cut points → per-(bucket, length)
-    counts collected as bounded driver state → broadcast offsets +
-    bucket-scoped windows) — never a 512-way global window.  The solve
-    itself runs on the collected histogram (≤ seq_len rows); the
+    Per-length document ranks are a ``running_total`` over doc_id
+    within n_tok (see ``scan.running_total``), never a 512-way global
+    window, and the length histogram is that scan's per-length totals.
+    The solve itself runs on the histogram (≤ seq_len rows); the
     placement table is broadcast back and the bin id is pure arithmetic
     on (rank, placement)."""
-    par = spark.sparkContext.defaultParallelism
-    base = persist_tracked(spark, toks)
-    n = base.count()
-    frac = min(1.0, (par * 20) / max(n, 1))
-    sample = sorted(
-        r["doc_id"] for r in base.select("doc_id").sample(False, frac, 42).collect()
+    ranked, totals = running_total(
+        persist_tracked(spark, toks), ["doc_id"], within=["n_tok"]
     )
-    step = max(1, len(sample) // par)
-    cuts = sample[step::step][: par - 1]
-    if cuts:
-        cut_arr = F.array(*[F.lit(c) for c in cuts])
-        bucket = F.size(F.filter(cut_arr, lambda c: c <= F.col("doc_id")))
-    else:
-        bucket = F.lit(0)
-    base = base.withColumn("pid", bucket.cast("int"))
-    counts = sorted(
-        (int(r["pid"]), int(r["n_tok"]), int(r["cnt"]))
-        for r in base.groupBy("pid", "n_tok")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    )  # ≤ par × distinct-lengths rows — bounded driver state
-    hist: dict[int, int] = {}
-    offsets = []
-    for pid, length, cnt in counts:
-        offsets.append((pid, length, hist.get(length, 0)))
-        hist[length] = hist.get(length, 0) + cnt
+    hist = {length: cnt for (length,), cnt in totals.items()}
     placements, _ = _bfd_histogram_solve(hist, _PACK_SEQ_LEN)
-    off_df = spark.createDataFrame(
-        offsets or [(0, 0, 0)], "pid int, n_tok long, off long"
-    )
     pl_df = spark.createDataFrame(
         placements or [(0, 0, 0, 0, 1)],
         "n_tok long, slot_lo long, n_items long, bin_lo long, per_bin long",
     )
-    w = Window.partitionBy("pid", "n_tok").orderBy("doc_id")
-    ranked = (
-        base.join(F.broadcast(off_df), ["pid", "n_tok"])
-        .withColumn("rank", F.row_number().over(w) - 1 + F.col("off"))
-    )
+    ranked = ranked.withColumn("rank", F.col("cum") - 1)
     return (
         ranked.join(F.broadcast(pl_df), "n_tok")
         .filter(
@@ -3074,7 +2936,7 @@ def pack_sequences_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE corpus pass builds (doc_id, n_tok); the histogram
     solve is bounded driver state (≤ L distinct lengths — the same
     reformulation Graphcore's packing paper uses for GPU batch
-    assembly); ranks ride the committed two-pass prefix-scan pattern;
+    assembly); ranks are a ``scan.running_total``;
     assignment is a broadcast join + integer arithmetic; the manifest
     is one hash aggregation over (bin_id).  Gated by an independent
     PER-ITEM best-fit-decreasing Python reference (exact assignment
@@ -3865,7 +3727,7 @@ ORACLES["repetition_stats"] = PYTEST_ORACLES.pop("repetition_stats")
 
 # Round-13 rotation (VERDICT r12 #6): promote the two strongest
 # never-driver-exposed DuckDB-oracled surfaces — pack_sequences (the
-# two-pass prefix-sum packing manifest, oracle-checked at the pytest
+# running-total packing manifest, oracle-checked at the pytest
 # gate since r5) and curate_corpus (the chained survivor-dedup funnel,
 # oracle-checked since r7) — onto the rows relational.py frees
 # (nations_setops, approx_distinct_users).  Same oracles, now

@@ -7,6 +7,7 @@ in-memory ``ann_ivf_topk`` answer (same centroids, same rerank)."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -863,9 +864,15 @@ def test_serve_state_follows_pointer_move(spark, tmp_path):
 
     S.rebuild_ivfpq_index(spark, SF, str(root), v2, opq=False)
     assert _served(spark, SF, str(root)) == want_v1  # not published yet
+    (old,) = [
+        v for k, v in cache.entries(spark, "ivfpq_serve").items() if k[0] == v1
+    ]
     S.write_index_pointer(spark, str(root), v2)
     got = _served(spark, SF, str(root))
     assert _served_rotation(spark, v2) is None
+    # the retired version's state is dropped and its broadcast destroyed
+    assert not [k for k in cache.entries(spark, "ivfpq_serve") if k[0] == v1]
+    assert not os.path.exists(old.luts._path)
     assert got == _fresh_served(spark, SF, str(root))
     assert got == _fresh_served(spark, SF, v2)
     cache.release(spark, "ivf_centroids")
@@ -909,3 +916,31 @@ def test_serve_state_follows_table_rewritten_outside_the_package(spark, tmp_path
     assert top1 == {p: 100 + p for p in range(S._N_PROBES)}
     cache.release(spark, "ivf_centroids")
     cache.release(spark, "pq_codebooks")
+
+
+def test_session_ivfpq_queries_keep_one_broadcast(spark):
+    """Warm in-session IVFPQ queries reuse the kept ADC-table broadcast:
+    no new broadcast file appears in the driver's temp dir after the
+    first call.  A replaced quantizer memo gets a fresh state."""
+    temp = spark.sparkContext._temp_dir
+
+    def files():
+        return set(os.listdir(temp))
+
+    want = [tuple(r) for r in S.ann_opq_topk(spark, SF).collect()]
+    after_first = files()
+    for _ in range(5):
+        assert [tuple(r) for r in S.ann_opq_topk(spark, SF).collect()] == want
+    assert files() - after_first == set()
+
+    good = cache.entries(spark, "ivf_centroids")[SF]
+    poison = good[1:] + good[:1]
+    cache.entries(spark, "ivf_centroids")[SF] = poison
+    try:
+        S.ann_ivfpq_topk(spark, SF).collect()
+        state = cache.entries(spark, "ivfpq_session")[(SF, False)]
+        assert state.quantizer.centroids is poison
+    finally:
+        cache.release(spark, "ivf_centroids")
+        cache.release(spark, "pq_codebooks")
+        cache.release(spark, "ivfpq_session")
